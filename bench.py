@@ -18,6 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from fraud_detection_etl_project_spark.observability import codegen_compiles
 from fraud_detection_etl_project_spark.plans import BENCH_QUERIES
 from fraud_detection_etl_project_spark.session import get_spark
 
@@ -59,10 +60,16 @@ def main() -> None:
     specs = BENCH_QUERIES()
 
     # Warm-up pass: JVM JIT, WholeStageCodegen compilation, parquet file
-    # listing/footer caches. The timed pass below then measures steady-state
-    # query execution — the sustained-throughput number that is comparable
-    # across engines (cold-start costs are one-time per cluster, amortized
-    # to ~0 over a real workload's query stream).
+    # listing/footer caches. The timed passes reuse the warm-up's generated
+    # classes only while Spark's generated-class cache holds all of them
+    # (~680 for these queries; session.py sizes the cache to 1024, and at
+    # Spark's default of 100 the warm-up's classes were evicted before the
+    # timed passes ran). Each timed pass's Janino compile count is recorded
+    # per query (``compiles`` in BENCH_LOCAL.json), so a change that defeats
+    # the cache shows up as a count. The timed passes then measure
+    # steady-state query execution — the sustained-throughput number that
+    # is comparable across engines (cold-start costs are one-time per
+    # cluster, amortized to ~0 over a real workload's query stream).
     spark.range(1000).count()
     for spec in specs.values():
         spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -75,6 +82,7 @@ def main() -> None:
     spark.catalog.clearCache()
 
     all_samples: dict[str, list[float]] = {}
+    all_compiles: dict[str, list[int]] = {}
 
     def isolate():
         """Between-query barrier: drop this query's persisted blocks AND
@@ -100,14 +108,17 @@ def main() -> None:
         runs on this container). All 3 samples are recorded in the
         output (``samples``) so a round-over-round delta can be read
         against the run's own variance instead of guessed at."""
-        samples = []
+        samples, compiles = [], []
         for _ in range(3):
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             fn()
             samples.append(round(time.perf_counter() - t0, 3))
+            compiles.append(codegen_compiles(spark) - c0)
         isolate()  # this query's persists: not the next one's tax
         if name is not None:
             all_samples[name] = samples
+            all_compiles[name] = compiles
         return round(min(samples), 3)
 
     timings: dict[str, float] = {}
@@ -168,6 +179,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "samples": all_samples,
+        "compiles": all_compiles,
         "sf": float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1),
         "methodology": "steady-state: min of 3 timed passes after one untimed warmup pass per query (min rejects external-load noise on shared hosts); samples holds all 3 passes per query for variance",
     }

@@ -12,6 +12,9 @@ status body (``:56-60,106-113``). This module is the engine-native version:
   (input rows, processed rows/sec, batch duration) from the streaming
   engine's own event bus — the CloudWatch-log analog, as data instead of
   log lines.
+- **Codegen**: `codegen_compiles` reads the JVM's count of Janino class
+  compiles, so a caller can tell a warm run (classes served from Spark's
+  generated-class cache) from one that compiled its plan again.
 """
 
 from __future__ import annotations
@@ -28,6 +31,15 @@ def observed(df: DataFrame, name: str) -> tuple[DataFrame, Observation]:
     scale: metrics ride the existing action, no extra job, no extra scan."""
     obs = Observation(name)
     return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
+
+def codegen_compiles(spark) -> int:
+    """Janino compiles so far in this session's JVM (whole-stage and
+    projection classes, driver and local executors alike). Take the
+    difference across a run: a query whose classes are all in the
+    generated-class cache compiles none."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 @dataclass

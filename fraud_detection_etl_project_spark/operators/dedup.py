@@ -163,14 +163,11 @@ def neardup_pairs_minhash(df: DataFrame, text_col: str = "text", id_col: str = "
 
 _SIZING_SHARDS = 32  # sub-key fan-out of the two-level bucket-size count
 
-# Broadcast ceiling for the over-cap ("hot") key list. Real corpora keep
-# this list tiny (the cap exists to catch the skewed boilerplate TAIL),
-# but the structural bound — at most total_rows/cap over-cap keys — is
-# not driver-safe on an adversarial mostly-duplicates corpus (10^12
-# exploded rows / cap 64 permits ~10^10 over-cap keys). Above this many
-# hot keys the routing falls back to a shuffle join (judge r8 ask #1).
-# 4M keys x ~40B/key ~ 160MB broadcast: inside executor headroom, far
-# below anything a driver collect could choke on.
+# Broadcast ceiling for the contamination probe's test-gram set
+# (``train_contamination_flags``): past this many distinct grams the
+# probe's semi join falls back to sort-merge instead of an oversized
+# broadcast. 4M keys x ~40B/key ~ 160MB broadcast: inside executor
+# headroom, far below anything a driver collect could choke on.
 _HOT_BROADCAST_MAX_KEYS = 4_000_000
 
 
@@ -213,9 +210,12 @@ def skewfree_bucket_split(
        Build side is one row per pair-capable key; a viral key's 10^9
        probe-side copies are AQE-skew-split across tasks (inner-join
        stream-side splitting) — the same mechanism the r11 fallback
-       regime already relied on — and in the common broadcast-converted
-       case the probe never crosses the network at all (local shuffle
-       read).
+       regime already relied on. The probe side is NOT free in the
+       common broadcast-converted case: AQE re-plans only after both
+       sides' shuffle map stages ran, so the exploded rows have already
+       paid a full shuffle write; the conversion saves the sort and lets
+       the join read that output locally (local shuffle reader) instead
+       of fetching it across the network.
     3. Every cool key has <= cap rows by construction, so the pair
        join's per-reducer fan-out downstream stays bounded; the inner
        join's hash(keys) output partitioning (sort-merge regime) is

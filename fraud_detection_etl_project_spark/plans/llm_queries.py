@@ -1383,6 +1383,11 @@ def _bpe_learn(spark: SparkSession, sf_dir: str):
     distributed-BPE shape: map-reduce word counting + a single trainer
     over millions of (word, freq) rows), never the corpus.
 
+    Memory bound: each kernel's single task holds the whole vocabulary
+    as Python lists (words, frequencies and per-word symbol lists), so
+    its worker memory grows with the number of distinct words, not with
+    the corpus, and one Python worker must fit the vocabulary.
+
     Returns (merges frame (merge_round, left_sym, right_sym,
     pair_count), per-word frame (word, freq, nsym) after all merges).
     Each consumer executes only its own kernel."""

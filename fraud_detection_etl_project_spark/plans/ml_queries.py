@@ -576,25 +576,31 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             # np.add.at: exact accumulation even if a batch ever carried
             # duplicate cell ids (groupBy guarantees unique, belt+braces)
             np.add.at(mat, pos, val.astype(np.int64))
-        if not mat.any():
-            # empty or all-zero embeddings table: the r10 join-based plan
-            # returned an EMPTY frame here (no cells survive); emit the
-            # same instead of dividing by m1=0 (ADVICE r11)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([], type=pa.int64()),
-                    pa.array([], type=pa.int64()),
-                    pa.array([], type=pa.float64()),
-                ],
-                names=["dim", "second_moment", "pc1"],
-            )
-            return
+        # Degenerate moments: an empty or all-zero embeddings table, rows
+        # whose sums cancel (v1 = S @ 1 == 0, so m1 == 0), or an iterate
+        # the 2^20 rescale floors to zero (m2 == 0). Each returns the empty
+        # frame the all-zero case always returned (ADVICE r11) instead of
+        # dividing by a zero maximum into inf/NaN.
+        empty = pa.RecordBatch.from_arrays(
+            [
+                pa.array([], type=pa.int64()),
+                pa.array([], type=pa.int64()),
+                pa.array([], type=pa.float64()),
+            ],
+            names=["dim", "second_moment", "pc1"],
+        )
         S = mat.reshape(_PCA_D, _PCA_D)
         v1 = S.sum(axis=1, dtype=np.int64)
         m1 = np.abs(v1).max()
+        if m1 == 0:
+            yield empty
+            return
         vq = np.floor((1e6 * v1.astype(np.float64)) / m1 + 0.5).astype(np.int64)
         v2 = (np.floor(S / _PCA_DOWN).astype(np.int64) @ vq).astype(np.int64)
         m2 = np.abs(v2).max()
+        if m2 == 0:
+            yield empty
+            return
         pc1 = np.floor((1e6 * v2.astype(np.float64)) / m2 + 0.5) / 1e6
         yield pa.RecordBatch.from_arrays(
             [

@@ -14,6 +14,8 @@ Oracle-parity discipline (applies to the whole file):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -28,7 +30,17 @@ from fraud_detection_etl_project_spark.plans.registry import query
 from fraud_detection_etl_project_spark.sources.csv import read_transactions
 from fraud_detection_etl_project_spark.sources.parquet import load_table
 
-REFERENCE_SAMPLE_CSV = "/root/reference/Sample File/test_aws.csv"
+# A synthesized stand-in for the reference's 34-row sample upload, not the
+# original file: PaySim-shaped rows built to the reference's golden trace
+# (SURVEY.md §5.1). 34 rows -> 32 valid (the DEBIT 9644.94 at line 12 and the
+# TRANSFER 311685.89 at line 26 fail both balance clauses) -> 2 fraud (the
+# TRANSFER 181 and CASH_OUT 181 at lines 4-5, isFraud=1). Every reader of the
+# sample (queries, oracles, tests) goes through this constant.
+REFERENCE_SAMPLE_CSV = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "data",
+    "paysim_sample_synthesized.csv",
+)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -45,6 +45,26 @@ ENGINE_CONFS: dict[str, str] = {
     # coalesces small shuffles, this caps big scans.
     "spark.sql.files.maxPartitionBytes": "128m",
     "spark.sql.parquet.compression.codec": "zstd",
+    # Generated-class cache (whole-stage and projection classes, keyed on
+    # their source). The engine is one long-lived session that runs the
+    # same queries again and again, and Spark's default of 100 entries is
+    # smaller than their working set. Measured at sf0.1 on 4 cores: one
+    # pass of the six perfbench query_mix queries generates 105 classes,
+    # one pass of the 40 bench queries 676. Guava splits the cache into 4
+    # LRU segments of 25, so at 100 a steady query_mix pass recompiled ~60
+    # of its 105 classes and every 40-query pass compiled ~790, more than
+    # its 676 (iterative queries evict their own classes within one run);
+    # C2 then JIT-compiles every new class again. At 1024 a steady pass compiles 0
+    # and 8-26: AQE numbers the codegen stages of a few queries in
+    # completion order, so their class source differs from run to run.
+    # Held after one warm 40-query pass and three full GCs: JVM heap 392
+    # MB at 100 vs 411-450 MB at 1024 (two runs each), Metaspace 185 vs
+    # 190 MB; the cached classes' source keys are ~700 x 7.7 KB.
+    # Static conf: Spark reads it once, when the JVM first generates code,
+    # so it takes effect only when get_spark builds the JVM's first
+    # session; pin_session_confs cannot set it on a session the caller
+    # built. Callers can still override it through ``extra_conf``.
+    "spark.sql.codegen.cache.maxEntries": "1024",
 }
 
 

@@ -1,8 +1,9 @@
 """Reference-parity golden tests (SURVEY.md §5.1).
 
-Golden trace for ``/root/reference/Sample File/test_aws.csv``: 34 data rows
--> 32 valid (drops the DEBIT at line 12 and the TRANSFER at line 26, both
-failing both balance clauses) -> 2 fraud rows (lines 4-5, isFraud=1).
+Golden trace for the vendored sample (``REFERENCE_SAMPLE_CSV``, synthesized
+to the reference's trace): 34 data rows -> 32 valid (drops the DEBIT at line
+12 and the TRANSFER at line 26, both failing both balance clauses) -> 2 fraud
+rows (lines 4-5, isFraud=1).
 """
 
 from __future__ import annotations
@@ -15,9 +16,8 @@ from fraud_detection_etl_project_spark.pipeline import (
     run_batch,
     valid_filter,
 )
+from fraud_detection_etl_project_spark.plans.relational_queries import REFERENCE_SAMPLE_CSV as SAMPLE
 from fraud_detection_etl_project_spark.sources.csv import read_transactions
-
-SAMPLE = "/root/reference/Sample File/test_aws.csv"
 
 
 def test_golden_34_32_2(spark):
@@ -25,6 +25,10 @@ def test_golden_34_32_2(spark):
     assert txns.count() == 34
     valid = valid_filter(txns)
     assert valid.count() == 32
+    dropped = txns.subtract(valid).collect()
+    assert sorted((r["type"], r["amount"]) for r in dropped) == [
+        ("DEBIT", 9644.94), ("TRANSFER", 311685.89),
+    ]
     fraud = fraud_filter(valid)
     rows = sorted(fraud.collect(), key=lambda r: r["step"])
     assert len(rows) == 2

@@ -160,3 +160,25 @@ def test_ols_fit_degenerate_brand(spark, tmp_path):
     by = sdf.set_index("brand")
     assert by.loc["CONST"][["slope_cents", "intercept_cents", "r2"]].isna().all()
     assert by.loc["VARY", "slope_cents"] == 500.0  # 5 cents/unit exact line
+
+
+def test_embedding_pca_cancelling_rows(spark, tmp_path):
+    """Embeddings whose rows each sum to zero ([a, -a, 0, ...]): the
+    second-moment matrix is non-zero, but its all-ones power iterate
+    v1 = S @ 1 cancels to zero, so m1 == 0. The query must return the
+    same empty frame as an all-zero table, not divide by zero into
+    inf/NaN or garbage integer casts."""
+    dim = 64
+    embs = [[a, -a] + [0.0] * (dim - 2) for a in (0.5, 1.25, 2.0)]
+    tbl = pa.table(
+        {
+            "vec_id": pa.array([1, 2, 3], pa.int64()),
+            "embedding": pa.array(embs, pa.list_(pa.float32())),
+            "label": pa.array([0, 1, 0], pa.int32()),
+        }
+    )
+    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
+    from fraud_detection_etl_project_spark.plans import REGISTRY
+
+    out = REGISTRY["embedding_pca_power"].fn(spark, str(tmp_path)).toPandas()
+    assert len(out) == 0

@@ -5,12 +5,12 @@ from __future__ import annotations
 
 import shutil
 
+from fraud_detection_etl_project_spark.plans.relational_queries import REFERENCE_SAMPLE_CSV as SAMPLE
 from fraud_detection_etl_project_spark.sources.parquet import load_table
 from fraud_detection_etl_project_spark.streaming.file_pipeline import run_fraud_stream
 from fraud_detection_etl_project_spark.streaming.windows import hourly_event_rollup
 from pyspark.sql import functions as F
 
-SAMPLE = "/root/reference/Sample File/test_aws.csv"
 SF = "/root/testdata/sf0.001"
 
 HEADER = (

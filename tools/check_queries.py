@@ -11,9 +11,10 @@ Usage: python tools/check_queries.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import pandas as pd
@@ -25,15 +26,16 @@ from fraud_detection_etl_project_spark.session import get_spark
 
 def source_tree_hash() -> str:
     """md5 over every semantics-bearing source file (the whole engine
-    package, the driver contract, and this checker) plus the registry's
-    resolved oracle strings. Stamped into the witness at run time and
+    package with its vendored data, the driver contract, and this
+    checker) plus the registry's resolved oracle strings, with the
+    checkout's own location cut out of them (oracles that read vendored
+    files embed its absolute path). Stamped into the witness at run time and
     re-computed by the freshness guard
     (tests/test_entry_contract.py::test_full_registry_witness_is_current)
     — a SEMANTIC edit after the witness run (judge r9, What's-wrong #1:
     two post-witness oracle edits rode a count-only guard) now forces a
     re-stamp instead of silently aging the witness."""
     import hashlib
-    import os
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     h = hashlib.md5()
@@ -42,7 +44,7 @@ def source_tree_hash() -> str:
     paths = []
     for root in roots:
         for d, _, files in os.walk(root):
-            paths.extend(os.path.join(d, f) for f in files if f.endswith(".py"))
+            paths.extend(os.path.join(d, f) for f in files if f.endswith((".py", ".csv")))
     paths.extend(singles)
     for p in sorted(paths):
         h.update(os.path.relpath(p, repo).encode())
@@ -50,7 +52,7 @@ def source_tree_hash() -> str:
             h.update(f.read())
     for name, sql in sorted(entry_mod.oracle_sql().items()):
         h.update(name.encode())
-        h.update(sql.encode())
+        h.update(sql.replace(repo + os.sep, "").encode())
     return h.hexdigest()
 
 
@@ -142,7 +144,6 @@ def main() -> int:
     if not only:
         import datetime
         import json
-        import os
 
         artifact = {
             "sf_dir": sf_dir,
