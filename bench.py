@@ -134,20 +134,13 @@ def main() -> None:
     if os.environ.get("SPARK_GRAFT_PAYSIM", "1") != "0":
         from tools.gen_paysim import generate
 
-        from fraud_detection_etl_project_spark.pipeline import fraud_predicate, valid_predicate
+        from fraud_detection_etl_project_spark.pipeline import fraud_pipeline
         from fraud_detection_etl_project_spark.sources.csv import read_transactions
 
         paysim = generate()
 
         def _etl():
-            (
-                read_transactions(spark, paysim)
-                .filter(valid_predicate())
-                .filter(fraud_predicate())
-                .write.format("noop")
-                .mode("overwrite")
-                .save()
-            )
+            fraud_pipeline(read_transactions(spark, paysim)).write.format("noop").mode("overwrite").save()
 
         _etl()  # warmup
         timings["fraud_etl_paysim_6.36M_rows"] = timed(_etl, "fraud_etl_paysim_6.36M_rows")

@@ -1,10 +1,11 @@
 """Cross-engine-stable rounding.
 
 Two engines rounding the same double can disagree: Spark's ``round`` is
-decimal-exact (BigDecimal HALF_UP on the binary value), DuckDB's multiplies
-by 10^p and rounds — off-by-one-cent on ~1 in 10^4 values. For oracle-checked
-outputs we therefore round with an explicit formula whose IEEE operations are
-identical in any engine::
+BigDecimal HALF_UP on the decimal that Java's ``Double.toString`` prints for
+the double (2.675 rounds as 2.675, not as its binary value 2.67499999...),
+DuckDB's multiplies by 10^p and rounds — off-by-one-cent on ~1 in 10^4
+values. For oracle-checked outputs we therefore round with an explicit
+formula whose IEEE operations are identical in any engine::
 
     floor(x * 10^p + 0.5) / 10^p
 

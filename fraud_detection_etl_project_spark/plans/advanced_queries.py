@@ -1414,6 +1414,12 @@ def concurrent_session_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quadratic) pair volume. The capped variant below CANNOT use this:
     # its per-bucket top-32 cap may keep a pair in a later shared bucket
     # but not in the overlap-start one, so its dedup stays a distinct.
+    # The filter assumes an hour-aligned session timezone, in which the
+    # date_trunc("hour") below lands on one of the 1-hour buckets above.
+    # The session is pinned to UTC by session.ENGINE_CONFS and re-pinned at
+    # read time by sources.parquet._REQUIRED_CONFS;
+    # tests/test_entry_contract.py::test_queries_survive_bare_session
+    # asserts the re-pin.
     pairs = a.join(
         b,
         (F.col("a.bucket") == F.col("b.bucket"))

@@ -67,6 +67,22 @@ def test_bround_half_even_boundary(spark):
     assert valid_filter(df).count() == 0
 
 
+def test_valid_filter_at_binary_inexact_ties(spark):
+    """x.xx5 deltas that binary cannot hold exactly round as the decimal
+    they print as, half-even (pandas ``.round(2)`` parity): 2.675 -> 2.68,
+    so amount=2.68 passes clause 1; 123456.785 -> 123456.78, so
+    amount=123456.79 fails it (round-half-up on the scaled double gives
+    123456.79 and would keep it). Clause 2 is false on both rows."""
+    df = spark.createDataFrame(
+        [
+            (1, "PAYMENT", 2.68, "C1", 2.675, 0.0, "M1", 0.0, 1e12, 0, 0),
+            (2, "PAYMENT", 123456.79, "C2", 123456.785, 0.0, "M2", 0.0, 1e12, 0, 0),
+        ],
+        schema=read_transactions(spark, SAMPLE).schema,
+    )
+    assert [r["step"] for r in valid_filter(df).collect()] == [1]
+
+
 def test_failfast_aborts_on_bad_value(spark, tmp_path):
     p = tmp_path / "bad.csv"
     header = "step,type,amount,nameOrig,oldbalanceOrg,newbalanceOrig,nameDest,oldbalanceDest,newbalanceDest,isFraud,isFlaggedFraud"

@@ -53,7 +53,7 @@ def test_fraud_filters_fuse_into_one_stage(spark):
     assert "Exchange" not in plan  # narrow pipeline, shuffle-free
 
 
-@pytest.mark.parametrize("name", ["knn_cosine_top10", "doc_stats"])
+@pytest.mark.parametrize("name", ["knn_cosine_top10", "doc_stats", "fraud_flagged_txns"])
 def test_no_python_udfs_on_relational_paths(spark, name):
     plan = plan_of(spark, name)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

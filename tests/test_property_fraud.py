@@ -7,8 +7,12 @@ The reference ships the same query on two engines (pandas masks at
 on randomized PaySim-shaped rows, including the hard cases: half-even
 rounding boundaries (x.xx5 deltas), negative balances, huge magnitudes.
 
-The Python oracle uses ``round(x, 2)`` — CPython's round-half-even on
-doubles, the same semantics as pandas ``.round(2)`` and Spark ``bround``.
+The Python oracle uses ``round(x, 2)`` — CPython's round-half-even on the
+exact binary value of the double. Spark ``bround`` rounds half-even on the
+decimal the double prints as (pandas ``.round(2)`` on the double scaled by
+100), so the oracle agrees with it only away from x.xx5 decimals that binary
+cannot hold: ``round(2.675, 2)`` is 2.67, ``bround`` (and pandas) give 2.68.
+Such a tie must also decide a clause's comparison to show up here.
 """
 
 from __future__ import annotations
