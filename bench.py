@@ -440,29 +440,6 @@ def main() -> None:
                     "text",
                 )
 
-                def _bands_of(df):
-                    return (
-                        _D.minhash_signatures(df)
-                        .select(F.col("doc_id"), *_D.band_keys())
-                        .select(
-                            "doc_id",
-                            F.explode(
-                                F.array(*[
-                                    F.struct(
-                                        F.lit(i).alias("band"),
-                                        F.col(f"band{i}").alias("key"),
-                                    )
-                                    for i in range(_D.BANDS)
-                                ])
-                            ).alias("bk"),
-                        )
-                        .select(
-                            "doc_id",
-                            F.col("bk.band").alias("band"),
-                            F.col("bk.key").alias("key"),
-                        )
-                    )
-
                 def _seed(reps: int, tag: str):
                     # r11: seed the registry in the ingester's own
                     # DEFAULT layout — plain appends with per-file
@@ -490,7 +467,7 @@ def main() -> None:
                         )
                     )
                     _snap.append(hist, paths[1], bloom_columns=["doc_id"])
-                    _snap.append(_bands_of(hist), paths[2], bloom_columns=["key"])
+                    _snap.append(_D.minhash_band_rows(hist), paths[2], bloom_columns=["key"])
                     return paths
 
                 ientry: dict = {

@@ -136,6 +136,19 @@ def band_keys(n_hashes: int = N_MINHASH, bands: int = BANDS):
     ]
 
 
+def minhash_band_rows(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """The LSH band index: one ``(id, band, key)`` row per doc and band,
+    where ``key`` is the band's slice of the MinHash signature. Docs
+    sharing a ``(band, key)`` are near-duplicate candidates."""
+    sig = minhash_signatures(df, text_col, id_col).select(F.col(id_col), *band_keys())
+    return sig.select(
+        F.col(id_col),
+        F.explode(
+            F.array(*[F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("key")) for b in range(BANDS)])
+        ).alias("bk"),
+    ).select(F.col(id_col), F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+
+
 def neardup_pairs_minhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Candidate near-duplicate pairs: docs agreeing on >=1 LSH band.
 
@@ -144,13 +157,7 @@ def neardup_pairs_minhash(df: DataFrame, text_col: str = "text", id_col: str = "
     only (band_key, id) tuples. Hot buckets (e.g. boilerplate docs) can go
     quadratic — cap bucket size upstream or salt if a corpus has them.
     """
-    sig = minhash_signatures(df, text_col, id_col).select(F.col(id_col), *band_keys())
-    exploded = sig.select(
-        F.col(id_col),
-        F.explode(
-            F.array(*[F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("key")) for b in range(BANDS)])
-        ).alias("bk"),
-    ).select(F.col(id_col), F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    exploded = minhash_band_rows(df, text_col, id_col)
     a = exploded.alias("a")
     b = exploded.alias("b")
     return (
@@ -356,13 +363,7 @@ def neardup_pairs_minhash_salted(
     physical-distribution rationale lives on salted_pair_self_join,
     which this wraps with the LSH (band, key) bucket keys.
     """
-    sig = minhash_signatures(df, text_col, id_col).select(F.col(id_col), *band_keys())
-    exploded = sig.select(
-        F.col(id_col),
-        F.explode(
-            F.array(*[F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("key")) for b in range(BANDS)])
-        ).alias("bk"),
-    ).select(F.col(id_col), F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    exploded = minhash_band_rows(df, text_col, id_col)
     return salted_pair_self_join(
         exploded, id_col, ["band", "key"], bucket_cap=bucket_cap, salt_groups=salt_groups
     )
@@ -1094,22 +1095,7 @@ def foreach_batch_dedup_ingester(
             b = raw.filter(pre_filter)
         else:
             b = raw
-        bands_b = (
-            minhash_signatures(b, text_col=text_col, id_col=id_col)
-            .select(_F.col(id_col), *band_keys())
-            .select(
-                id_col,
-                _F.explode(
-                    _F.array(*[
-                        _F.struct(
-                            _F.lit(i).alias("band"), _F.col(f"band{i}").alias("key")
-                        )
-                        for i in range(BANDS)
-                    ])
-                ).alias("bk"),
-            )
-            .select(id_col, _F.col("bk.band").alias("band"), _F.col("bk.key").alias("key"))
-        ).persist()
+        bands_b = minhash_band_rows(b, text_col, id_col).persist()
         cand = None
         try:
             # the docs registry is the have-history witness: it is

@@ -21,124 +21,14 @@ from fraud_detection_etl_project_spark.plans import governance_queries  # noqa: 
 from fraud_detection_etl_project_spark.plans import risk_queries  # noqa: F401,E402
 from fraud_detection_etl_project_spark.plans import experiment_queries  # noqa: F401,E402
 
-# Harnesses that sample the registry take a prefix in insertion order, so the
-# first entries must span every operator family (one representative each):
-# the reference's fraud pipeline, each §2 relational family (projection,
-# conditional, string, date, JSON, aggs, sketches, hierarchies, pivot, every
-# join type, subqueries, TPC-H shapes, windows, sort/top-k, set ops,
-# distinct, SQL API), the streaming surface, the UDF surface, and each
-# LLM-pipeline family (text, dedup, ANN, multimodal, curation). The
-# remaining queries keep their module order after the prefix — nothing is
-# dropped. tests/test_entry_contract.py asserts every name here exists.
-# Round-2 swaps: xml_source_rollup (new format family) and
-# copurchase_triangle_count (graph-motif family) replaced the second
-# §2.4-hierarchy and second set-op slots (pivot/intersect stay registered
-# and judge-verified right after the prefix). Later round-2 swaps put the
-# new data-quality, deterministic-sampling, and sequence-packing families
-# in the prefix by displacing second representatives of already-covered
-# families (grouping_sets_sales -> rollup_flag_status still covers
-# hierarchies; customer_quartiles -> four other window queries remain;
-# top10_orders -> q18's top-100 still exercises TakeOrderedAndProject).
-# All displaced queries stay registered immediately after the prefix.
-# Round-2 swaps (2): the cross-join and null-safe-equality slots (two of
-# FOURTEEN join-family representatives in the prefix; both stay registered
-# right after it) gave way to partitioned_dpp_rollup (layout + dynamic
-# partition pruning family) and semdedup_cluster_stats (semantic-dedup
-# family) so the driver's prefix sample sees the round-2 marquee
-# families. Every query red in CORRECTNESS_r01 keeps its prefix slot.
-# Round-3 swaps: four marquee round-3 families enter the prefix by
-# displacing second representatives of already-covered families —
-# event_value_deltas -> urgent_price_skyline (windows keep
-# top_customers_per_nation + running-total coverage via q-queries),
-# running_user_totals -> user_cusum_alerts (sequential per-key state,
-# the new grouped-map family), balanced_event_sample ->
-# part_random_walks (stratified_event_sample still covers sampling;
-# walks add the graph-corpus family), curated_documents ->
-# hybrid_search_rrf (doc_stats still covers text; RRF adds retrieval
-# fusion). All displaced queries remain registered right after the
-# prefix and stay judge-verified.
-# Round-3 swaps (2): four marquee late-round-3 families enter the prefix
-# by displacing second representatives of already-covered families —
-# q18_large_volume_orders -> embedding_pca_power (embedding-space
-# diagnostics; q5 + the full Q1-Q22 set keep TPC-H covered),
-# part_random_walks -> nb_lang_confusion (trained-classifier curation
-# family; pagerank + triangle count keep graph covered),
-# stream_click_attribution -> stream_click_attribution_full (the full
-# outer variant exercises the same stream-stream machinery PLUS both
-# eviction-boundary null flushes), multimodal_features ->
-# wav_spectral_features (audio real-decode + JVM DFT; bmp keeps image
-# decode covered). All displaced queries stay registered immediately
-# after the prefix and remain oracle-verified.
-# Round-3 swaps (3): multimodal_bmp_stats -> multimodal_gif_stats in the
-# image-decode slot (GIF exercises LZW + interlace and is conformance-
-# tested against javax.imageio; BMP stays registered right after the
-# prefix and oracle-verified).
-# Round-3 swaps (5): markov_event_transitions -> bpe_merge_training
-# (tokenizer-TRAINING family — the greedy merge-learning loop; sequential
-# behavior stays covered by user_cusum_alerts) and
-# stream_attribution_hourly_chain -> k_anonymity_audit (privacy-governance
-# family; the chained query's two constituents — stream-stream join and
-# windowed rollup — each keep their own prefix slot). Both displaced
-# queries stay registered immediately after the prefix, oracle-verified.
-# Round-4 swaps: the two r3-VERDICT performance asks enter the prefix
-# so the driver's own correctness gate witnesses their fixes —
-# avro_sink_roundtrip -> simhash_hamming_pairs (now running the
-# cap-and-salt band join; avro_source_rollup keeps the Avro-format
-# slot and the sink stays conformance-tested in tests/test_avro.py)
-# and distinct_user_event_pairs -> concurrent_session_pairs_capped
-# (the bounded-output interval-overlap join; distinct_supplier_counts
-# keeps distinct-aggregation coverage). Both displaced queries stay
-# registered immediately after the prefix, oracle-verified.
-# Round-5 swap: orders_price_buckets -> snapshot_time_travel_rollup so
-# the driver's gate witnesses the round-5 marquee family (the
-# snapshot-versioned table format); bucketing stays covered in-window
-# by order_price_equidepth_approx, and orders_price_buckets remains
-# registered in the displaced section, oracle-verified.
-# Round-5 swap (2): order_fill_left_join -> txn_velocity_flags so the
-# driver's gate witnesses the round-5 fraud-risk family (trailing-window
-# velocity rule); the left-join shape stays covered in-window by
-# orders_without_lineitems (left anti) and the q-suite's outer joins,
-# and order_fill_left_join remains registered right after the prefix,
-# oracle-verified.
-# Round-3 swaps (4): multimodal_gif_stats -> multimodal_jpeg_stats in
-# the image-decode slot (JPEG is the first LOSSY codec: full T.81
-# Huffman+IDCT pipeline, conformance-tested both directions against
-# javax.imageio, with a closed-form DC-only SQL oracle; GIF/BMP stay
-# registered right after the prefix). avro_source_rollup added to the
-# format-source block (pure-Python Avro OCF spec codec as a Python
-# DataSource, JVM-conformance-tested).
-# Round-5 swap (4): ivf_trained_ann_top10 -> pq_adc_ann_top10 in the
-# vector-index slot — PQ+ADC is the memory-scale half of IVF-PQ (64
-# floats -> 4 bytes, table-lookup search) and its query carries the
-# same recall readout; the trained-IVF query stays registered right
-# after the prefix, oracle-verified by the committed full witness.
-# Round-5 swap (3): snapshot_time_travel_rollup ->
-# snapshot_mor_delete_rollup in the table-format slot — the
-# merge-on-read equality-delete query drives the same manifest/read
-# machinery PLUS delete files, the sequence rule, and a 4-version
-# history; time travel stays registered right after the prefix,
-# oracle-verified.
-# Round-9 swaps (judge r8 ask #7): the driver's sample gains the two
-# r8 marquee families it missed — event_value_bands ->
-# neardup_pairs_allpairs_exact (exact set-similarity join; the
-# range/theta-join family stays covered in-window by
-# concurrent_session_pairs_capped's interval-overlap join and the
-# q-suite's theta shapes) and salted_user_event_join ->
-# snapshot_spec_evolution_rollup (partition-spec evolution; hot-key
-# salting stays witnessed in-window by neardup_pairs_salted, which
-# rides the same cap-and-salt machinery). Both displaced queries stay
-# registered immediately after the prefix, oracle-verified by the
-# committed full witness.
-# Round-10 swaps (judge r9 ask #8): the sample gains two r9 marquee
-# families — simhash128_hamming_pairs -> snapshot_merge_update_set_rollup
-# (the merge-clause matrix, r9's biggest surface; near-dup banding stays
-# witnessed in-window by neardup_pairs_salted's LSH buckets and
-# neardup_pairs_allpairs_exact's prefix filter) and
-# region_customer_rollup -> split_exact_contamination (GPT-3-style exact
-# train/test decontamination; the broadcast-dim join+agg shape keeps
-# three in-window reps: q5_local_supplier_revenue,
-# top_customers_per_nation, sql_top_revenue_customers). Both displaced
-# queries stay registered immediately after the prefix, oracle-verified.
+# Harnesses that sample the registry take a prefix in insertion order, so
+# the registry is reordered to start with FAMILY_PREFIX, whose entries span
+# every operator family: the reference's fraud pipeline, each §2 relational
+# family, the streaming surface, the UDF surface, the table format, and
+# each LLM-pipeline family. The remaining queries keep their module order
+# after the prefix, so nothing is dropped. tests/test_entry_contract.py
+# asserts that every name here is registered and that the prefix leads the
+# registry; why each slot holds its query is in this file's git history.
 FAMILY_PREFIX = [
     "flagship_inconsistent_orders",
     "fraud_valid_txns",
@@ -193,8 +83,8 @@ FAMILY_PREFIX = [
     "orders_without_lineitems",
     "wav_spectral_features",
     "hybrid_search_rrf",
-    # beyond the driver's 50-query sample window: displaced + newer
-    # families, covered by tests/test_full_registry.py on every pytest run
+    # beyond a 50-query sample window: second representatives and newer
+    # families, covered by tests/test_full_registry.py (-m full_registry)
     "stream_hourly_event_rollup",
     "simhash128_hamming_pairs",
     "region_customer_rollup",

@@ -21,6 +21,7 @@ from fraud_detection_etl_project_spark.plans.registry import query
 from fraud_detection_etl_project_spark.plans.relational_queries import REFERENCE_SAMPLE_CSV
 from fraud_detection_etl_project_spark.sources.csv import read_transactions
 from fraud_detection_etl_project_spark.sources.parquet import load_table
+from fraud_detection_etl_project_spark.streaming import drain
 from fraud_detection_etl_project_spark.streaming.stateful import user_running_profile
 from fraud_detection_etl_project_spark.streaming.windows import (
     sessionized_user_activity,
@@ -2226,8 +2227,6 @@ def synthetic_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic => the connector path (offsets, batch serving, replay
     contract, checkpointed drain) is value-checked against the same
     pure-SQL mirror as the batch source."""
-    import uuid as _uuid
-
     from fraud_detection_etl_project_spark.sources.pydatasource import register
 
     register(spark)
@@ -2241,16 +2240,7 @@ def synthetic_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         F.min("fp").alias("min_fp"),
     )
-    name = f"synth_stream_{_uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 @query(
@@ -2476,8 +2466,6 @@ def stream_hourly_rollup_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     DROP finalized windows instead of retaining every window forever —
     at 100 TB/day of events, complete mode re-emits the whole history
     per batch and is not an option; append is the production shape."""
-    import uuid as _uuid
-
     from fraud_detection_etl_project_spark.streaming.windows import events_stream
 
     agg = (
@@ -2490,16 +2478,7 @@ def stream_hourly_rollup_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "total_value")
     )
-    name = f"hourly_append_{_uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "append")
 
 
 # ---------------------------------------------------------------------------

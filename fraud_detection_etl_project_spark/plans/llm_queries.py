@@ -2518,18 +2518,7 @@ def neardup_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus O(daily batch), not O(corpus). Hot buckets take the same
     cap-and-salt remedy as the batch path."""
     d = _t(spark, sf_dir, "documents")
-    sig = D.minhash_signatures(d).select(F.col("doc_id"), *D.band_keys())
-    exploded = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("key"))
-                    for b in range(D.BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    exploded = D.minhash_band_rows(d)
     new = exploded.filter(F.col("doc_id") % 10 == 0).alias("a")
     old = exploded.filter(F.col("doc_id") % 10 != 0).alias("b")
     return (
@@ -2579,25 +2568,11 @@ def snapshot_incremental_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFr
         with open(done, "w") as f:
             f.write("")
 
-    def _bands(df, side):
-        sig = D.minhash_signatures(df).select(F.col("doc_id"), *D.band_keys())
-        return sig.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("key"))
-                        for b in range(D.BANDS)
-                    ]
-                )
-            ).alias("bk"),
-        ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")).alias(side)
-
     new_docs = snap.read_changes(spark, t, from_version=1).select("doc_id", "text")
     corpus = snap.read(spark, t, version=1).select("doc_id", "text")
     return (
-        _bands(new_docs, "a")
-        .join(_bands(corpus, "b"), ["band", "key"])
+        D.minhash_band_rows(new_docs).alias("a")
+        .join(D.minhash_band_rows(corpus).alias("b"), ["band", "key"])
         .select(F.col("a.doc_id").alias("new_doc"), F.col("b.doc_id").alias("old_doc"))
         .distinct()
     )

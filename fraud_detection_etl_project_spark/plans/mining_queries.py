@@ -3973,10 +3973,9 @@ def snapshot_stream_tail_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions parallelize across executors. The exactly-once
     table→stream→table loop (paired with foreach_batch_writer) is
     driven in tests/test_snapshot_stream.py."""
-    import uuid as _uuid
-
     from fraud_detection_etl_project_spark import snapshot as snap
     from fraud_detection_etl_project_spark.sources.snapshot_stream import register
+    from fraud_detection_etl_project_spark.streaming import drain
 
     tag = _fixture_tag(sf_dir, "orders")
     t = os.path.join(tempfile.gettempdir(), f"snap_tail_{tag}")
@@ -3998,16 +3997,7 @@ def snapshot_stream_tail_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         cents_sum("o_totalprice").alias("total_price"),
     )
-    name = f"snap_tail_{_uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 @query(

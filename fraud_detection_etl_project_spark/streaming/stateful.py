@@ -16,13 +16,13 @@ instead of accreting forever.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from fraud_detection_etl_project_spark.streaming import drain
 from fraud_detection_etl_project_spark.streaming.windows import events_stream
 
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, max_value double, total_value double"
@@ -63,21 +63,12 @@ def user_running_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    name = f"user_profiles_{uuid.uuid4().hex[:8]}"
-    q = (
-        profiles.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
-        spark.table(name)
+        drain(profiles, "update")
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
@@ -142,8 +133,6 @@ def user_cusum_stream(spark: SparkSession, staged_dir: str) -> DataFrame:
     replay in event-time order — the staging contract (files are time
     octiles with ascending mtimes) plus the in-batch sort supply exactly
     that; the value oracle would catch any ordering violation."""
-    import uuid as _uuid
-
     stream = (
         spark.readStream.schema("user_id long, ts timestamp, event_id long, cents long")
         .option("maxFilesPerTrigger", 1)
@@ -156,21 +145,12 @@ def user_cusum_stream(spark: SparkSession, staged_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"cusum_stream_{_uuid.uuid4().hex[:8]}"
-    q = (
-        walked.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
-        spark.table(name)
+        drain(walked, "update")
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
@@ -263,13 +243,4 @@ def user_closed_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    name = f"closed_sessions_{uuid.uuid4().hex[:8]}"
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(sessions, "append")

@@ -2,8 +2,11 @@
 
 The reference is stateless per file (SURVEY.md §2.9); these are the
 event-time operators a fraud/analytics stream actually needs: tumbling
-windows + watermarks, drained deterministically with ``availableNow`` for
-tests and the driver's batch-equivalence oracle.
+windows + watermarks. Every function here builds a streaming frame and
+hands it to ``streaming.drain``, the one path that runs a bounded stream
+to completion and returns its result as a batch frame (deterministic, so
+tests and the batch-equivalence oracle can check it). Each function
+chooses only the output mode.
 """
 
 from __future__ import annotations
@@ -11,7 +14,6 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -19,6 +21,7 @@ from pyspark.sql import functions as F
 from fraud_detection_etl_project_spark.functions.rounding import fxr
 from fraud_detection_etl_project_spark.schemas import EVENTS_SCHEMA
 from fraud_detection_etl_project_spark.sources.parquet import pin_session_confs
+from fraud_detection_etl_project_spark.streaming import drain
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -50,10 +53,8 @@ def hourly_event_rollup(
 ) -> DataFrame:
     """Tumbling 1-hour windows × event_type: count + value total.
 
-    Runs as an ``availableNow`` drain into a memory sink in *complete* mode
-    (deterministic full result; with append mode the windows newer than the
-    final watermark would never flush on a drained stream). Returns the
-    materialized result as a batch DataFrame.
+    *Complete* mode: with append mode the windows newer than the final
+    watermark would never flush on a drained stream.
 
     Scale: streaming state is one row per (window × type); the watermark
     bounds state growth for unbounded sources.
@@ -73,23 +74,14 @@ def hourly_event_rollup(
             "total_value",
         )
     )
-    name = f"hourly_rollup_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 def sliding_event_rollup(
     spark: SparkSession, sf_dir: str, size: str = "2 hours", slide: str = "1 hour"
 ) -> DataFrame:
     """Sliding event-time windows × event_type counts (each event belongs
-    to size/slide windows). Complete-mode availableNow drain."""
+    to size/slide windows). Complete mode."""
     agg = (
         events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
@@ -97,35 +89,16 @@ def sliding_event_rollup(
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
     )
-    name = f"sliding_rollup_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 def streamed_distinct_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-side exact dedup on the natural key (event_id): stateful
-    ``dropDuplicates`` writing an append-mode memory sink; returns the
-    deduplicated rows as a batch frame. On an unbounded source use
+    ``dropDuplicates`` in append mode. On an unbounded source use
     ``dropDuplicatesWithinWatermark`` so dedup state is GC'd with the
     watermark instead of growing forever."""
     dedup = events_stream(spark, sf_dir).dropDuplicates(["event_id"])
-    name = f"dedup_events_{uuid.uuid4().hex[:8]}"
-    q = (
-        dedup.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(dedup, "append")
 
 
 def clicks_purchase_attribution(
@@ -143,8 +116,7 @@ def clicks_purchase_attribution(
     which is what lets Spark GC join state: a buffered click can be
     dropped once the purchase-side watermark passes click_ts + horizon.
     An unbounded (condition-free) stream-stream join would accumulate
-    state forever — the range condition IS the scale design. Drained with
-    ``availableNow`` into an append memory sink for determinism.
+    state forever — the range condition IS the scale design. Append mode.
 
     ``join_type="left_outer"`` adds the unconverted-click rows: matched
     pairs still emit as they join; an unmatched click emits a
@@ -195,16 +167,7 @@ def clicks_purchase_attribution(
             F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
             F.col("purchase_value"),
         )
-    name = f"attribution_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(joined, "append")
 
 
 def attribution_hourly_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -266,16 +229,7 @@ def attribution_hourly_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("window_start"), "n_pairs", "attributed_cents")
     )
-    name = f"chain_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "append")
 
 
 def stream_static_enriched_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -285,7 +239,7 @@ def stream_static_enriched_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
     The static side needs no watermark and is re-read per micro-batch;
     Catalyst broadcasts it (dims stay small by definition), so the join
     adds zero shuffle to the stream — the standard way to attach
-    reference data to a 100 TB/day stream. Complete-mode drain.
+    reference data to a 100 TB/day stream. Complete mode.
     """
     weights = spark.createDataFrame(
         [("view", 1.0), ("click", 2.0), ("signup", 5.0), ("purchase", 10.0), ("error", 0.0)],
@@ -300,16 +254,7 @@ def stream_static_enriched_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
             fxr(F.sum(F.col("value") * F.col("weight")), 2).alias("weighted_value"),
         )
     )
-    name = f"enriched_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 def deduped_within_watermark(spark: SparkSession, sf_dir: str, watermark: str = "2 hours") -> DataFrame:
@@ -319,29 +264,20 @@ def deduped_within_watermark(spark: SparkSession, sf_dir: str, watermark: str = 
     a key's last-seen event time — bounded state at any stream length, at
     the cost of only deduplicating re-deliveries that arrive within the
     watermark horizon (exactly the S3 duplicate-event profile). Append
-    drain."""
+    mode."""
     dedup = (
         events_stream(spark, sf_dir)
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    name = f"dedup_wm_{uuid.uuid4().hex[:8]}"
-    q = (
-        dedup.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(dedup, "append")
 
 
 def sessionized_user_activity(
     spark: SparkSession, sf_dir: str, gap: str = "30 minutes", watermark: str = "2 hours"
 ) -> DataFrame:
     """Session windows (gap-based) per user: event count + value per
-    session — the stateful-streaming surface (§2.9). Complete-mode drain."""
+    session — the stateful-streaming surface (§2.9). Complete mode."""
     agg = (
         events_stream(spark, sf_dir)
         .withWatermark("ts", watermark)
@@ -355,16 +291,7 @@ def sessionized_user_activity(
             "session_value",
         )
     )
-    name = f"sessions_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 def user_velocity_alerts(
@@ -381,10 +308,10 @@ def user_velocity_alerts(
     (each event in size/slide cells) bound the trailing-window semantics
     where a true per-event trailing frame would need unbounded buffering.
 
-    This harness drains with COMPLETE mode + availableNow so the bounded
-    replay is deterministic and the threshold filter applies to final
-    window totals; note the watermark is inert under complete mode (all
-    windows are retained and re-emitted). A continuous 24/7 deployment
+    COMPLETE mode, so the bounded replay is deterministic and the
+    threshold filter applies to final window totals; note the watermark
+    is inert under complete mode (all windows are retained and
+    re-emitted). A continuous 24/7 deployment
     uses update/append mode instead, where the same 1-hour watermark
     actually GC's (window, user) state — the aggregation plan is
     identical, only the sink mode changes."""
@@ -405,13 +332,4 @@ def user_velocity_alerts(
             (F.col("amt_c").cast("double") / F.lit(100.0)).alias("window_amount"),
         )
     )
-    name = f"velocity_alerts_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "complete")

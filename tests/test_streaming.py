@@ -3,15 +3,21 @@ windowed rollup equivalence (SURVEY.md §2.9 / §5.2-4)."""
 
 from __future__ import annotations
 
+import re
 import shutil
+from pathlib import Path
 
+import pytest
+from conftest import SF_SMALL as SF
+
+import fraud_detection_etl_project_spark
+from fraud_detection_etl_project_spark.plans import REGISTRY
 from fraud_detection_etl_project_spark.plans.relational_queries import REFERENCE_SAMPLE_CSV as SAMPLE
 from fraud_detection_etl_project_spark.sources.parquet import load_table
 from fraud_detection_etl_project_spark.streaming.file_pipeline import run_fraud_stream
 from fraud_detection_etl_project_spark.streaming.windows import hourly_event_rollup
 from pyspark.sql import functions as F
 
-SF = "/root/testdata/sf0.001"
 
 HEADER = (
     "step,type,amount,nameOrig,oldbalanceOrg,newbalanceOrig,nameDest,"
@@ -75,6 +81,48 @@ def test_fraud_stream_picks_up_new_file(spark, tmp_path):
     )
     run_fraud_stream(spark, str(landing), ckpt, sink)
     assert spark.read.parquet(out_dir).count() == 4
+
+
+# One registered query per ``streaming.drain`` call site.
+DRAIN_QUERIES = [
+    "stream_hourly_event_rollup",  # windows.hourly_event_rollup
+    "stream_sliding_event_counts",  # windows.sliding_event_rollup
+    "stream_dedup_event_counts",  # windows.streamed_distinct_events
+    "stream_click_attribution",  # windows.clicks_purchase_attribution
+    "stream_attribution_hourly_chain",  # windows.attribution_hourly_chain
+    "stream_static_weighted_rollup",  # windows.stream_static_enriched_rollup
+    "stream_dedup_within_watermark",  # windows.deduped_within_watermark
+    "stream_session_windows",  # windows.sessionized_user_activity
+    "stream_velocity_alerts",  # windows.user_velocity_alerts
+    "stream_user_running_profile",  # stateful.user_running_profile
+    "stream_user_cusum_alerts",  # stateful.user_cusum_stream
+    "stream_session_timeout_closed",  # stateful.user_closed_sessions
+    "synthetic_stream_rollup",
+    "stream_hourly_rollup_append",
+    "snapshot_stream_tail_rollup",
+]
+
+
+@pytest.mark.parametrize("name", DRAIN_QUERIES)
+def test_drain_leaves_no_memory_table(spark, name):
+    """A drained stream's memory sink is released from the session
+    catalog, and the returned frame still reads the sink's rows."""
+
+    def temp_views():
+        return sum(t.isTemporary for t in spark.catalog.listTables())
+
+    before = temp_views()
+    out = REGISTRY[name].fn(spark, SF)
+    assert temp_views() == before
+    assert out.count() == out.count()
+
+
+def test_memory_sink_only_in_drain():
+    """``streaming.drain`` is the package's one memory-sink writer."""
+    pkg = Path(fraud_detection_etl_project_spark.__file__).parent
+    sink = re.compile(r"""format\(\s*["']memory["']\s*\)""")
+    counts = {p.relative_to(pkg).as_posix(): len(sink.findall(p.read_text())) for p in pkg.rglob("*.py")}
+    assert {f: n for f, n in counts.items() if n} == {"streaming/__init__.py": 1}
 
 
 def test_hourly_rollup_matches_batch(spark):
