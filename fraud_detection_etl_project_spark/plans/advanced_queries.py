@@ -17,6 +17,7 @@ from fraud_detection_etl_project_spark.functions.rounding import fxr
 from fraud_detection_etl_project_spark.functions.text import tokens
 from fraud_detection_etl_project_spark.plans.llm_queries import TOKS_SQL
 from fraud_detection_etl_project_spark.plans.registry import query
+from fraud_detection_etl_project_spark.plans.staging import _fixture_tag, root
 from fraud_detection_etl_project_spark.sources.parquet import load_table
 
 
@@ -784,17 +785,14 @@ def xml_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     interchange-sized slices (the date filter cuts the write to one
     year); at 100 TB XML appears at ingest boundaries only, converted to
     parquet/columnar on first touch (this query IS that conversion
-    pattern, in miniature). The staging path is content-addressed per
-    sf_dir and overwritten per run — no temp-dir accretion."""
-    import hashlib
+    pattern, in miniature). The roundtrip path lives under the process's
+    staging root and is rewritten per run."""
     import os
-    import tempfile
 
     o = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1997-01-01") & (F.col("o_orderdate") < "1998-01-01")
     ).select("o_orderkey", "o_orderstatus", "o_totalprice")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"xml_roundtrip_{tag}")
+    path = os.path.join(root(), f"xml_roundtrip_{_fixture_tag(sf_dir)}")
     o.write.format("xml").mode("overwrite").option("rootTag", "orders").option(
         "rowTag", "order"
     ).save(path)

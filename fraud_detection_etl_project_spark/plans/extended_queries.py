@@ -19,6 +19,7 @@ from fraud_detection_etl_project_spark.operators import skew as K
 from fraud_detection_etl_project_spark.plans.llm_queries import _NEARDUP_ORACLE, NORM_SQL, TOKS_SQL
 from fraud_detection_etl_project_spark.plans.registry import query
 from fraud_detection_etl_project_spark.plans.relational_queries import REFERENCE_SAMPLE_CSV
+from fraud_detection_etl_project_spark.plans.staging import staged
 from fraud_detection_etl_project_spark.sources.csv import read_transactions
 from fraud_detection_etl_project_spark.sources.parquet import load_table
 from fraud_detection_etl_project_spark.streaming import drain
@@ -3213,6 +3214,20 @@ FROM asg WHERE rn = 1
 """
 
 
+def _snap_incivf(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the embeddings snapshot table the incremental IVF queries
+    share and return its path: v1 is the corpus (vec_id % 10 != 0), v2
+    appends today's batch (% 10 == 0)."""
+    from fraud_detection_etl_project_spark import snapshot as snap
+
+    def build(t: str) -> None:
+        e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        snap.overwrite(e.filter(F.col("vec_id") % 10 != 0), t)  # v1: corpus
+        snap.append(e.filter(F.col("vec_id") % 10 == 0), t)     # v2: today
+
+    return staged(sf_dir, "snap_incivf", ("embeddings",), build)
+
+
 @query("snapshot_incremental_ivf_assign", oracle=_INC_IVF_ORACLE)
 def snapshot_incremental_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL embedding-index maintenance off the table format (the
@@ -3234,25 +3249,10 @@ def snapshot_incremental_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFra
     metadata diff. Centroid drift/retraining is a separate periodic
     job; pinning the codebook version is exactly what makes the daily
     assignment reproducible while ingest continues."""
-    import os
-    import tempfile
-
     from fraud_detection_etl_project_spark import snapshot as snap
     from fraud_detection_etl_project_spark.functions.vectors import cosine
-    from fraud_detection_etl_project_spark.plans.mining_queries import _fixture_tag
 
-    tag = _fixture_tag(sf_dir, "embeddings")
-    t = os.path.join(tempfile.gettempdir(), f"snap_incivf_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
-        import shutil
-
-        shutil.rmtree(t, ignore_errors=True)
-        e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        snap.overwrite(e.filter(F.col("vec_id") % 10 != 0), t)  # v1: corpus
-        snap.append(e.filter(F.col("vec_id") % 10 == 0), t)     # v2: today
-        with open(done, "w") as f:
-            f.write("")
+    t = _snap_incivf(spark, sf_dir)
     corpus_v1 = snap.read(spark, t, version=1)
     cents = S.ivf_centroids(corpus_v1)  # k x d parameter collect (bounded)
     new = snap.read_changes(spark, t, from_version=1).select("vec_id", "embedding")
@@ -3329,24 +3329,9 @@ def snapshot_incremental_centroid_update(spark: SparkSession, sf_dir: str) -> Da
     running state (the same counts mini-batch k-means keeps), so the
     recurring cost is batch-only. Time travel pins the codebook AND
     the counts to one consistent version while ingest continues."""
-    import os
-    import tempfile
-
     from fraud_detection_etl_project_spark import snapshot as snap
-    from fraud_detection_etl_project_spark.plans.mining_queries import _fixture_tag
 
-    tag = _fixture_tag(sf_dir, "embeddings")
-    t = os.path.join(tempfile.gettempdir(), f"snap_incivf_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
-        import shutil
-
-        shutil.rmtree(t, ignore_errors=True)
-        e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        snap.overwrite(e.filter(F.col("vec_id") % 10 != 0), t)  # v1: corpus
-        snap.append(e.filter(F.col("vec_id") % 10 == 0), t)     # v2: today
-        with open(done, "w") as f:
-            f.write("")
+    t = _snap_incivf(spark, sf_dir)
     corpus = snap.read(spark, t, version=1)
     cents = S.ivf_centroids(corpus)
     new = snap.read_changes(spark, t, from_version=1).select("vec_id", "embedding")

@@ -21,6 +21,7 @@ from fraud_detection_etl_project_spark.operators import graph as G
 from fraud_detection_etl_project_spark.operators import similarity as S
 from fraud_detection_etl_project_spark.functions.rounding import fxr
 from fraud_detection_etl_project_spark.plans.registry import query
+from fraud_detection_etl_project_spark.plans.staging import staged
 from fraud_detection_etl_project_spark.sources.parquet import load_table
 from fraud_detection_etl_project_spark.streaming.windows import hourly_event_rollup
 
@@ -2528,6 +2529,20 @@ def neardup_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _snap_incdedup(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the documents snapshot table the incremental queries share
+    and return its path: v1 is the existing corpus (doc_id % 10 != 0),
+    v2 appends today's batch (% 10 == 0)."""
+    from fraud_detection_etl_project_spark import snapshot as snap
+
+    def build(t: str) -> None:
+        d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+        snap.overwrite(d.filter(F.col("doc_id") % 10 != 0), t)  # v1: corpus
+        snap.append(d.filter(F.col("doc_id") % 10 == 0), t)     # v2: today
+
+    return staged(sf_dir, "snap_incdedup", ("documents",), build)
+
+
 @query("snapshot_incremental_dedup_pairs", oracle=_INC_ORACLE)
 def snapshot_incremental_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The INCREMENTAL dedup path driven OFF THE TABLE FORMAT (round 9
@@ -2547,27 +2562,8 @@ def snapshot_incremental_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFr
     consistent version while ingest continues, and the join cost stays
     O(new batch x collision rate)."""
     from fraud_detection_etl_project_spark import snapshot as snap
-    import os
-    import tempfile
 
-    from fraud_detection_etl_project_spark.plans.mining_queries import _fixture_tag
-
-    tag = _fixture_tag(sf_dir, "documents")
-    t = os.path.join(tempfile.gettempdir(), f"snap_incdedup_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
-        # crash recovery: a half-staged run (overwrite committed, append
-        # not) would re-overwrite as v2 on retry and put a CoW commit in
-        # the feed range — read_changes then refuses forever. Clean slate.
-        import shutil
-
-        shutil.rmtree(t, ignore_errors=True)
-        d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-        snap.overwrite(d.filter(F.col("doc_id") % 10 != 0), t)  # v1: corpus
-        snap.append(d.filter(F.col("doc_id") % 10 == 0), t)     # v2: today
-        with open(done, "w") as f:
-            f.write("")
-
+    t = _snap_incdedup(spark, sf_dir)
     new_docs = snap.read_changes(spark, t, from_version=1).select("doc_id", "text")
     corpus = snap.read(spark, t, version=1).select("doc_id", "text")
     return (
@@ -3129,26 +3125,9 @@ def snapshot_incremental_postings_delta(spark: SparkSession, sf_dir: str) -> Dat
     production the df dictionary is part of the index, making the
     recurring cost batch-only); time travel pins the corpus version so
     delta segments compose deterministically while ingest continues."""
-    import os
-    import tempfile
-
     from fraud_detection_etl_project_spark import snapshot as snap
-    from fraud_detection_etl_project_spark.plans.mining_queries import _fixture_tag
 
-    tag = _fixture_tag(sf_dir, "documents")
-    t = os.path.join(tempfile.gettempdir(), f"snap_incdedup_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
-        # crash recovery: identical staging to snapshot_incremental_dedup_pairs
-        # (shared table — whichever query runs first stages it)
-        import shutil
-
-        shutil.rmtree(t, ignore_errors=True)
-        d0 = _t(spark, sf_dir, "documents").select("doc_id", "text")
-        snap.overwrite(d0.filter(F.col("doc_id") % 10 != 0), t)  # v1: corpus
-        snap.append(d0.filter(F.col("doc_id") % 10 == 0), t)     # v2: today
-        with open(done, "w") as f:
-            f.write("")
+    t = _snap_incdedup(spark, sf_dir)
 
     def _phrases(df: DataFrame) -> DataFrame:
         toks = F.split(T.normalized(F.col("text")), " ")

@@ -16,9 +16,7 @@ only CSV — ORC/binaryFile are the engine-completeness additions).
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 import numpy as np
 import pandas as pd
@@ -30,25 +28,8 @@ from fraud_detection_etl_project_spark.functions.rounding import cents_sum, cent
 from fraud_detection_etl_project_spark.functions.vectors import cosine
 from fraud_detection_etl_project_spark.operators import similarity as S
 from fraud_detection_etl_project_spark.plans.registry import query
+from fraud_detection_etl_project_spark.plans.staging import _fixture_tag, root, staged
 from fraud_detection_etl_project_spark.sources.parquet import load_table
-
-
-def _fixture_tag(sf_dir: str, *tables: str) -> str:
-    """Content-address a write-once staging dir by the sf_dir path AND the
-    file identity (mtime_ns, size) of the fixture tables it derives from.
-    Path-only tags served stale /tmp data after an in-place fixture
-    regeneration (ADVICE r02) — folding file identity in means a
-    regenerated fixture gets a fresh staging dir automatically (same
-    scheme as sources.parquet._package_zip)."""
-    parts = [os.path.abspath(sf_dir)]
-    for t in tables:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        try:
-            st = os.stat(p)
-            parts.append(f"{t}:{st.st_mtime_ns}:{st.st_size}")
-        except OSError:
-            parts.append(f"{t}:absent")
-    return hashlib.md5("\n".join(parts).encode()).hexdigest()[:12]
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -516,11 +497,10 @@ def orc_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     format-agnostic.
 
     Scale: identical posture to the parquet path — splittable stripes,
-    column projection at the scan, partition-parallel write. The staging
-    path is content-addressed per sf_dir and overwritten per run."""
+    column projection at the scan, partition-parallel write. The roundtrip
+    path lives under the process's staging root and is rewritten per run."""
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment", "c_acctbal")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"orc_roundtrip_{tag}")
+    path = os.path.join(root(), f"orc_roundtrip_{_fixture_tag(sf_dir)}")
     c.write.format("orc").mode("overwrite").option("compression", "zstd").save(path)
     back = spark.read.format("orc").load(path)
     return back.groupBy("c_mktsegment").agg(
@@ -564,12 +544,7 @@ def avro_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     that shape)."""
     from fraud_detection_etl_project_spark.sources import avro as avro_ocf
 
-    tag = _fixture_tag(sf_dir, "orders")
-    d = os.path.join(tempfile.gettempdir(), f"avro_stage_{tag}")
-    path = os.path.join(d, "orders.avro")
-    done = os.path.join(d, "_STAGED")
-    if not os.path.exists(done):
-        os.makedirs(d, exist_ok=True)
+    def build(d: str) -> None:
         rows = (
             _t(spark, sf_dir, "orders")
             .filter(F.col("o_orderkey") <= 30000)
@@ -588,7 +563,7 @@ def avro_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         }
         avro_ocf.write_ocf(
-            path,
+            os.path.join(d, "orders.avro"),
             schema,
             (
                 (
@@ -602,8 +577,8 @@ def avro_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             codec="deflate",
             block_records=500,
         )
-        with open(done, "w") as f:
-            f.write("ok")
+
+    path = os.path.join(staged(sf_dir, "avro_stage", ("orders",), build), "orders.avro")
     avro_ocf.register(spark)
     df = spark.read.format("pyavro").option("path", path).option("parts", 8).load()
     return df.groupBy("o_orderstatus").agg(
@@ -644,9 +619,7 @@ def avro_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fraud_detection_etl_project_spark.sources import avro as avro_ocf
 
     avro_ocf.register(spark)
-    d = os.path.join(
-        tempfile.gettempdir(), f"avro_sink_{_fixture_tag(sf_dir, 'customer')}"
-    )
+    d = os.path.join(root(), f"avro_sink_{_fixture_tag(sf_dir)}")
     c = _t(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_acctbal",
@@ -700,21 +673,18 @@ def arrow_ipc_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from fraud_detection_etl_project_spark.sources import arrowipc
 
-    tag = _fixture_tag(sf_dir, "lineitem")
-    d = os.path.join(tempfile.gettempdir(), f"arrow_ipc_stage_{tag}")
-    path = os.path.join(d, "lineitem.arrow")
-    done = os.path.join(d, "_STAGED")
-    if not os.path.exists(done):
-        os.makedirs(d, exist_ok=True)
+    def build(d: str) -> None:
         t = pq.read_table(
             os.path.join(sf_dir, "lineitem.parquet"),
             columns=["l_orderkey", "l_extendedprice", "l_returnflag", "l_shipdate"],
         )
         t = t.filter(pc.less_equal(t["l_orderkey"], 20000))
-        with pa_ipc.new_file(path, t.schema) as w:
+        with pa_ipc.new_file(os.path.join(d, "lineitem.arrow"), t.schema) as w:
             w.write_table(t, max_chunksize=500)  # many batches -> many splits
-        with open(done, "w") as f:
-            f.write("ok")
+
+    path = os.path.join(
+        staged(sf_dir, "arrow_ipc_stage", ("lineitem",), build), "lineitem.arrow"
+    )
     arrowipc.register(spark)
     df = spark.read.format("pyarrowipc").option("path", path).option("parts", 8).load()
     return df.groupBy("l_returnflag").agg(
@@ -759,9 +729,7 @@ def arrow_ipc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fraud_detection_etl_project_spark.sources import arrowipc
 
     arrowipc.register(spark)
-    d = os.path.join(
-        tempfile.gettempdir(), f"arrow_ipc_sink_{_fixture_tag(sf_dir, 'orders')}"
-    )
+    d = os.path.join(root(), f"arrow_ipc_sink_{_fixture_tag(sf_dir)}")
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_totalprice",
@@ -793,20 +761,16 @@ def binaryfile_blob_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     on disk read as (path, length, content) rows — Spark's native entry
     point for image/audio/video corpora, upstream of the mapInPandas
     decode operators (operators/multimodal.py). One hundred documents are
-    staged as individual .bin files (setup fixture, content-addressed,
-    written once), read back through format("binaryFile"), and
-    fingerprinted: id parsed from the path, byte length, md5 checksum —
-    all value-checked against the originating table.
+    staged as individual .bin files (a setup fixture), read back through
+    format("binaryFile"), and fingerprinted: id parsed from the path,
+    byte length, md5 checksum — all value-checked against the
+    originating table.
 
     Scale: binaryFile assigns whole files to tasks (files are the unit of
     parallelism — fine for media blobs, wrong for one giant file);
     metadata-only queries (path/length) never read content thanks to the
     reader's column pruning. The md5 runs JVM-side on the content bytes."""
-    staged_tag = _fixture_tag(sf_dir, "documents")
-    d = os.path.join(tempfile.gettempdir(), f"blob_stage_{staged_tag}")
-    done = os.path.join(d, "_STAGED")
-    if not os.path.exists(done):
-        os.makedirs(d, exist_ok=True)
+    def build(d: str) -> None:
         docs = (
             _t(spark, sf_dir, "documents")
             .filter(F.col("doc_id") < 100)
@@ -816,8 +780,8 @@ def binaryfile_blob_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in docs:
             with open(os.path.join(d, f"doc_{int(r['doc_id']):05d}.bin"), "wb") as f:
                 f.write(r["text"].encode("utf-8"))
-        with open(done, "w") as f:
-            f.write("ok")
+
+    d = staged(sf_dir, "blob_stage", ("documents",), build)
     blobs = spark.read.format("binaryFile").option("pathGlobFilter", "*.bin").load(d)
     return blobs.select(
         F.regexp_extract(F.col("path"), r"doc_(\d+)\.bin$", 1).cast("bigint").alias("doc_id"),
@@ -1017,16 +981,14 @@ def partitioned_dpp_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: partition count = column cardinality — the layout rule is
     low-cardinality columns only (status/date), or file-count explosion
-    eats the benefit (see sinks.compact_parquet). Staging is
-    content-addressed per sf_dir + orders file identity, written once."""
-    tag = _fixture_tag(sf_dir, "orders")
-    path = os.path.join(tempfile.gettempdir(), f"orders_part_{tag}")
-    done = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(done):
+    eats the benefit (see sinks.compact_parquet)."""
+
+    def build(path: str) -> None:
         _t(spark, sf_dir, "orders").write.partitionBy("o_orderstatus").mode(
             "overwrite"
         ).parquet(path)
-    fact = spark.read.parquet(path)
+
+    fact = spark.read.parquet(staged(sf_dir, "orders_part", ("orders",), build))
     dim = spark.createDataFrame(
         [("O", "open"), ("F", "finished"), ("P", "pending")], "st string, label string"
     ).filter(F.col("label") == "finished")
@@ -1069,22 +1031,23 @@ def schema_evolution_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: schema merge reads every file's FOOTER at planning time — for
     100k-file tables that is the expensive step (Spark samples footers;
     a catalog/metastore schema is the production answer), while the data
-    path stays columnar and NULL back-fill is metadata-only. Staging is
-    content-addressed per sf_dir + orders file identity, written once."""
+    path stays columnar and NULL back-fill is metadata-only."""
     o = _t(spark, sf_dir, "orders")
-    tag = _fixture_tag(sf_dir, "orders")
-    path = os.path.join(tempfile.gettempdir(), f"orders_evo_{tag}")
-    d96, d97 = os.path.join(path, "y96"), os.path.join(path, "y97")
-    if not (os.path.exists(os.path.join(d96, "_SUCCESS")) and os.path.exists(os.path.join(d97, "_SUCCESS"))):
+
+    def build(path: str) -> None:
         o.filter(
             (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1997-01-01")
-        ).select("o_orderkey", "o_totalprice").write.mode("overwrite").parquet(d96)
+        ).select("o_orderkey", "o_totalprice").write.parquet(os.path.join(path, "y96"))
         o.filter(
             (F.col("o_orderdate") >= "1997-01-01") & (F.col("o_orderdate") < "1998-01-01")
-        ).select("o_orderkey", "o_totalprice", "o_orderpriority").write.mode(
-            "overwrite"
-        ).parquet(d97)
-    merged = spark.read.option("mergeSchema", "true").parquet(d96, d97)
+        ).select("o_orderkey", "o_totalprice", "o_orderpriority").write.parquet(
+            os.path.join(path, "y97")
+        )
+
+    path = staged(sf_dir, "orders_evo", ("orders",), build)
+    merged = spark.read.option("mergeSchema", "true").parquet(
+        os.path.join(path, "y96"), os.path.join(path, "y97")
+    )
     return merged.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         F.count("o_orderpriority").cast("bigint").alias("n_with_priority"),
@@ -1318,11 +1281,9 @@ def text_source_line_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: text files split on line boundaries, so the format
     parallelizes like CSV without its quoting rules; it is the ingest
     boundary for log-shaped corpora, converted columnar on first touch
-    (same posture as the XML roundtrip). Staging is content-addressed
-    per sf_dir + documents file identity, written once."""
-    tag = _fixture_tag(sf_dir, "documents")
-    path = os.path.join(tempfile.gettempdir(), f"text_lines_{tag}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    (same posture as the XML roundtrip)."""
+
+    def build(path: str) -> None:
         (
             _t(spark, sf_dir, "documents")
             .filter(F.col("doc_id") < 200)
@@ -1334,7 +1295,8 @@ def text_source_line_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .text(path)
         )
-    lines = spark.read.text(path)
+
+    lines = spark.read.text(staged(sf_dir, "text_lines", ("documents",), build))
     return lines.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_lines"),
         F.sum(F.octet_length("value")).cast("bigint").alias("total_bytes"),
@@ -2933,6 +2895,24 @@ def doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _orders_in_thirds(spark: SparkSession, sf_dir: str, commits: int) -> str:
+    """Stage a snapshot table of orders (key, status, price) whose
+    version k commits the o_orderkey % 3 == k - 1 slice, for k up to
+    ``commits``, and return its path. Several queries read it; none
+    writes to it."""
+    from fraud_detection_etl_project_spark import snapshot as snap
+
+    def build(t: str) -> None:
+        orders = _t(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderstatus", "o_totalprice"
+        )
+        snap.overwrite(orders.filter(F.col("o_orderkey") % 3 == 0), t)
+        for k in range(1, commits):
+            snap.append(orders.filter(F.col("o_orderkey") % 3 == k), t)
+
+    return staged(sf_dir, f"snap_thirds{commits}", ("orders",), build)
+
+
 @query(
     "snapshot_time_travel_rollup",
     oracle=f"""
@@ -2960,17 +2940,7 @@ def snapshot_time_travel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the version number instead of copying the table."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_tbl_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
-        orders = _t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_totalprice", "o_orderstatus"
-        )
-        snap.overwrite(orders.filter(F.col("o_orderkey") % 3 == 0), t)
-        snap.append(orders.filter(F.col("o_orderkey") % 3 == 1), t)
-        with open(done, "w") as f:
-            f.write("")
+    t = _orders_in_thirds(spark, sf_dir, 2)
     v1 = snap.read(spark, t, version=1)
     return v1.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
@@ -3007,16 +2977,13 @@ def snapshot_skipping_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero data pages touched."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_skip_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
+    def build(t: str) -> None:
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderpriority"
         )
         snap.overwrite(orders.repartitionByRange(8, "o_orderkey"), t)
-        with open(done, "w") as f:
-            f.write("")
+
+    t = staged(sf_dir, "snap_skip", ("orders",), build)
     hi = (
         _t(spark, sf_dir, "orders").agg(F.max("o_orderkey")).collect()[0][0] // 4
     )  # one scalar: the query parameter, mirrored by the oracle's subquery
@@ -3061,10 +3028,7 @@ def snapshot_partitioned_prune_rollup(spark: SparkSession, sf_dir: str) -> DataF
     point lookups on o_custkey the same way)."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_pspec_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
+    def build(t: str) -> None:
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
         )
@@ -3076,8 +3040,8 @@ def snapshot_partitioned_prune_rollup(spark: SparkSession, sf_dir: str) -> DataF
                 {"column": "o_custkey", "transform": "bucket", "n": 4},
             ],
         )
-        with open(done, "w") as f:
-            f.write("")
+
+    t = staged(sf_dir, "snap_pspec", ("orders",), build)
     pruned = snap.scan(spark, t, [("o_orderdate", ">=", "1997-06-01")])
     return pruned.groupBy(
         F.date_format("o_orderdate", "yyyy-MM").alias("month")
@@ -3119,10 +3083,7 @@ def snapshot_spec_evolution_rollup(spark: SparkSession, sf_dir: str) -> DataFram
     compact() collapses the history when a rewrite is eventually paid."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_specevo_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
+    def build(t: str) -> None:
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
         )
@@ -3135,8 +3096,8 @@ def snapshot_spec_evolution_rollup(spark: SparkSession, sf_dir: str) -> DataFram
             t, [{"column": "o_custkey", "transform": "bucket", "n": 4}]
         )
         snap.append(orders.filter(F.col("o_orderkey") % 2 == 1), t)
-        with open(done, "w") as f:
-            f.write("")
+
+    t = staged(sf_dir, "snap_specevo", ("orders",), build)
     pruned = snap.scan(spark, t, [("o_orderdate", ">=", "1997-06-01")])
     return pruned.groupBy(
         F.date_format("o_orderdate", "yyyy-MM").alias("month")
@@ -3176,10 +3137,7 @@ def snapshot_partitions_metadata_rollup(spark: SparkSession, sf_dir: str) -> Dat
     stat log is read as a distributed Spark scan, never a driver loop."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_meta_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
+    def build(t: str) -> None:
         orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
         snap.overwrite(
             orders.filter(F.col("o_orderkey") % 2 == 0),
@@ -3187,8 +3145,8 @@ def snapshot_partitions_metadata_rollup(spark: SparkSession, sf_dir: str) -> Dat
             partition_spec=[{"column": "o_orderstatus", "transform": "identity"}],
         )
         snap.append(orders.filter(F.col("o_orderkey") % 2 == 1), t)
-        with open(done, "w") as f:
-            f.write("")
+
+    t = staged(sf_dir, "snap_meta", ("orders",), build)
     parts = snap.metadata_table(spark, t, "partitions")
     n_commits = (
         snap.metadata_table(spark, t, "history")
@@ -3234,16 +3192,13 @@ def snapshot_rollback_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a data-scale job; this is why the restore path must be metadata."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_rollback_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
+    def build(t: str) -> None:
         orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
         snap.overwrite(orders.filter(F.col("o_orderkey") % 2 == 0), t)  # v1
         snap.append(orders.filter(F.col("o_orderkey") % 2 == 1), t)  # v2: bad
         snap.rollback(t, 1)  # v3 == v1's content
-        with open(done, "w") as f:
-            f.write("")
+
+    t = staged(sf_dir, "snap_rollback", ("orders",), build)
     head = snap.current_version(t)
     return snap.read(spark, t).groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
@@ -3282,10 +3237,7 @@ def snapshot_schema_evolution_rollup(spark: SparkSession, sf_dir: str) -> DataFr
     O(#files)), and compact() pays the projection debt when convenient."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_schemaevo_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
+    def build(t: str) -> None:
         orders = _t(spark, sf_dir, "orders")
         snap.overwrite(
             orders.filter(F.col("o_orderkey") % 2 == 0).select(
@@ -3304,8 +3256,8 @@ def snapshot_schema_evolution_rollup(spark: SparkSession, sf_dir: str) -> DataFr
             t,
         )
         snap.drop_column(t, "o_custkey")
-        with open(done, "w") as f:
-            f.write("")
+
+    t = staged(sf_dir, "snap_schemaevo", ("orders",), build)
     return snap.read(spark, t).groupBy("priority").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
         cents_sum("price_usd").alias("total_price"),
@@ -3353,10 +3305,7 @@ def snapshot_merge_evolution_rollup(spark: SparkSession, sf_dir: str) -> DataFra
     bytes (NULL projection at read)."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_mergevo_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
+    def build(t: str) -> None:
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -3377,8 +3326,8 @@ def snapshot_merge_evolution_rollup(spark: SparkSession, sf_dir: str) -> DataFra
             )
         )
         snap.merge(spark, t, src, on=["o_orderkey"])
-        with open(done, "w") as f:
-            f.write("")
+
+    t = staged(sf_dir, "snap_mergevo", ("orders",), build)
     pre_cols = len(snap.read(spark, t, version=1).columns)  # scalar: metadata
     return snap.read(spark, t).groupBy("o_orderstatus", "channel").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
@@ -3425,10 +3374,7 @@ def snapshot_merge_upsert_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     of its files while readers keep time-traveling the old version."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_merge_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
+    def build(t: str) -> None:
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -3445,8 +3391,8 @@ def snapshot_merge_upsert_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         inserts = orders.filter(F.col("o_orderkey") % 3 == 1)
         snap.merge(spark, t, updates.unionByName(inserts), on=["o_orderkey"])
-        with open(done, "w") as f:
-            f.write("")
+
+    t = staged(sf_dir, "snap_merge", ("orders",), build)
     merged = snap.read(spark, t)  # CURRENT = post-merge version 2
     return merged.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
@@ -3482,18 +3428,15 @@ def snapshot_delete_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     and readers keep time-traveling the pre-delete version."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_del_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
+    def build(t: str) -> None:
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderpriority"
         )
         snap.overwrite(orders.repartitionByRange(8, "o_orderkey"), t)
         cut = orders.agg(F.max("o_orderkey")).collect()[0][0] // 5
         snap.delete(spark, t, [("o_orderkey", "<", int(cut))])
-        with open(done, "w") as f:
-            f.write("")
+
+    t = staged(sf_dir, "snap_del", ("orders",), build)
     survivors = snap.read(spark, t)  # CURRENT = post-delete version 2
     return survivors.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
@@ -3535,18 +3478,7 @@ def snapshot_change_feed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     range raise rather than fabricate row-level changes."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_cdf_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
-        orders = _t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderstatus", "o_totalprice"
-        )
-        snap.overwrite(orders.filter(F.col("o_orderkey") % 3 == 0), t)
-        snap.append(orders.filter(F.col("o_orderkey") % 3 == 1), t)
-        snap.append(orders.filter(F.col("o_orderkey") % 3 == 2), t)
-        with open(done, "w") as f:
-            f.write("")
+    t = _orders_in_thirds(spark, sf_dir, 3)
     feed = snap.read_changes(spark, t, from_version=1)
     return feed.groupBy(
         F.col("_commit_version").alias("commit_version"), "o_orderstatus"
@@ -3594,10 +3526,7 @@ def snapshot_cdc_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per op kind."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_cdcmerge_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
+    def build(t: str) -> None:
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -3629,8 +3558,8 @@ def snapshot_cdc_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         snap.merge_cdc(spark, t, feed, on=["o_orderkey"])
-        with open(done, "w") as f:
-            f.write("")
+
+    t = staged(sf_dir, "snap_cdcmerge", ("orders",), build)
     return snap.read(spark, t).groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
         cents_sum("o_totalprice").alias("total_price"),
@@ -3672,10 +3601,7 @@ def snapshot_merge_update_set_rollup(spark: SparkSession, sf_dir: str) -> DataFr
     updating 0.1 % of keys joins 0.1 % of the table, not all of it."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_updset_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
+    def build(t: str) -> None:
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -3696,8 +3622,8 @@ def snapshot_merge_update_set_rollup(spark: SparkSession, sf_dir: str) -> DataFr
             on=["o_orderkey"],
             update_set={"o_totalprice": "t.o_totalprice + s.o_totalprice"},
         )
-        with open(done, "w") as f:
-            f.write("")
+
+    t = staged(sf_dir, "snap_updset", ("orders",), build)
     return snap.read(spark, t).groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
         cents_sum("o_totalprice").alias("total_price"),
@@ -3746,10 +3672,7 @@ def snapshot_merge_not_matched_source_rollup(
     4M keys the touch joins fall back to sort-merge)."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_nbs_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
+    def build(t: str) -> None:
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -3772,8 +3695,8 @@ def snapshot_merge_not_matched_source_rollup(
             on=["o_orderkey"],
             not_matched_by_source_delete="t.o_orderkey % 2 = 0",
         )
-        with open(done, "w") as f:
-            f.write("")
+
+    t = staged(sf_dir, "snap_nbs", ("orders",), build)
     return snap.read(spark, t).groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
         cents_sum("o_totalprice").alias("total_price"),
@@ -3814,13 +3737,7 @@ def snapshot_changes_branch_rollup(spark: SparkSession, sf_dir: str) -> DataFram
     table scan), and the ref resolution is one pointer read."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_cdfbr_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
-        import shutil
-
-        shutil.rmtree(t, ignore_errors=True)  # half-staged ref: clean slate
+    def build(t: str) -> None:
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -3829,8 +3746,8 @@ def snapshot_changes_branch_rollup(spark: SparkSession, sf_dir: str) -> DataFram
         snap.append(orders.filter(F.col("o_orderkey") % 3 == 1), t, branch="audit")
         snap.append(orders.filter(F.col("o_orderkey") % 3 == 2), t, branch="audit")
         snap.fast_forward(t, "audit")  # publish: main head == branch head
-        with open(done, "w") as f:
-            f.write("")
+
+    t = staged(sf_dir, "snap_cdfbr", ("orders",), build)
     feed = snap.read_changes(spark, t, from_version=1, ref="audit")
     return feed.groupBy(
         F.col("_commit_version").alias("commit_version"), "o_orderstatus"
@@ -3879,17 +3796,9 @@ def stream_cdc_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: O(batch) per trigger, never O(table); the checkpoint +
     batch_id pair makes replays exact no-ops
     (tests/test_snapshot_stream.py drives the crash-replay leg)."""
-    import uuid as _uuid
-
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_streamcdc_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
-        import shutil
-
-        shutil.rmtree(t, ignore_errors=True)  # half-staged stream: clean slate
+    def build(t: str) -> None:
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -3930,16 +3839,13 @@ def stream_cdc_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream.writeStream.foreachBatch(
                 snap.foreach_batch_cdc_merger(t, ["o_orderkey"])
             )
-            .option(
-                "checkpointLocation",
-                os.path.join(t, f"_ckpt_{_uuid.uuid4().hex[:8]}"),
-            )
+            .option("checkpointLocation", os.path.join(t, "_ckpt"))
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-        with open(done, "w") as f:
-            f.write("")
+
+    t = staged(sf_dir, "snap_streamcdc", ("orders",), build)
     return snap.read(spark, t).groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
         cents_sum("o_totalprice").alias("total_price"),
@@ -3977,18 +3883,7 @@ def snapshot_stream_tail_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fraud_detection_etl_project_spark.sources.snapshot_stream import register
     from fraud_detection_etl_project_spark.streaming import drain
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_tail_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
-        orders = _t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderstatus", "o_totalprice"
-        )
-        snap.overwrite(orders.filter(F.col("o_orderkey") % 3 == 0), t)
-        snap.append(orders.filter(F.col("o_orderkey") % 3 == 1), t)
-        snap.append(orders.filter(F.col("o_orderkey") % 3 == 2), t)
-        with open(done, "w") as f:
-            f.write("")
+    t = _orders_in_thirds(spark, sf_dir, 3)
     register(spark)
     stream = spark.readStream.format("pysnapshot").option("path", t).load()
     agg = stream.groupBy(
@@ -4029,18 +3924,7 @@ def snapshot_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     way."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_incr_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
-        orders = _t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderstatus", "o_totalprice"
-        )
-        snap.overwrite(orders.filter(F.col("o_orderkey") % 3 == 0), t)
-        snap.append(orders.filter(F.col("o_orderkey") % 3 == 1), t)
-        snap.append(orders.filter(F.col("o_orderkey") % 3 == 2), t)
-        with open(done, "w") as f:
-            f.write("")
+    t = _orders_in_thirds(spark, sf_dir, 3)
 
     def partials(df: DataFrame) -> DataFrame:
         return df.groupBy("o_orderstatus").agg(
@@ -4173,16 +4057,13 @@ def snapshot_bloom_lookup_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     of all of them, from one O(#files) manifest read."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_bloom_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
+    def build(t: str) -> None:
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
         )
         snap.overwrite(orders.repartition(8, "o_custkey"), t, bloom_columns=["o_custkey"])
-        with open(done, "w") as f:
-            f.write("")
+
+    t = staged(sf_dir, "snap_bloom", ("orders",), build)
     key = _t(spark, sf_dir, "orders").agg(F.min("o_custkey")).collect()[0][0]
     pruned = snap.scan(spark, t, [("o_custkey", "=", int(key))])
     return pruned.groupBy("o_orderstatus").agg(
@@ -4341,10 +4222,9 @@ def npy_source_embedding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row Python)."""
     from fraud_detection_etl_project_spark.sources import npy as npy_src
 
-    tag = _fixture_tag(sf_dir, "embeddings")
-    d = os.path.join(tempfile.gettempdir(), f"npy_src2_{tag}")
     npy_src.register(spark)
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
+
+    def build(d: str) -> None:
         # staged through the DISTRIBUTED pynpy sink (judge r7 wrong #2:
         # the previous full-table driver collect was the last unbounded
         # collect in plans/): one range task streams the vec_id-ordered
@@ -4360,6 +4240,8 @@ def npy_source_embedding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .mode("overwrite")
             .save()
         )
+
+    d = staged(sf_dir, "npy_src2", ("embeddings",), build)
     df = spark.read.format("pynpy").option("path", d).load()
     dim0_q = F.floor(F.element_at("vec", 1).cast("double") * F.lit(1e6) + F.lit(0.5)).cast("long")
     return (
@@ -4402,12 +4284,10 @@ def tfrecord_source_doc_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fraud_detection_etl_project_spark.sources import tfrecord as tfr
 
     tfr.register(spark)
-    tag = _fixture_tag(sf_dir, "documents")
-    d = os.path.join(tempfile.gettempdir(), f"tfrec_src_{tag}")
-    done = os.path.join(d, "_SUCCESS")
-    if not os.path.exists(done):
+
+    def build(d: str) -> None:
         docs = _t(spark, sf_dir, "documents").repartition(4)
-        staged = docs.select(
+        examples = docs.select(
             F.create_map(
                 F.lit("text"),
                 F.array(F.encode(F.coalesce(F.col("text"), F.lit("")), "utf-8")),
@@ -4419,7 +4299,9 @@ def tfrecord_source_doc_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "int64_features"
             ),
         )
-        staged.write.format("pytfrecord").option("path", d).mode("overwrite").save()
+        examples.write.format("pytfrecord").option("path", d).mode("overwrite").save()
+
+    d = staged(sf_dir, "tfrec_src", ("documents",), build)
     df = spark.read.format("pytfrecord").option("path", d).load()
     text = F.element_at(F.col("bytes_features"), "text")[0].cast("string")
     lang = F.element_at(F.col("bytes_features"), "lang")[0].cast("string")
@@ -4817,10 +4699,7 @@ def snapshot_mor_delete_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit-tested in tests/test_snapshot.py."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_mor_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
+    def build(t: str) -> None:
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderstatus"
         )
@@ -4830,8 +4709,8 @@ def snapshot_mor_delete_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, t, orders.filter(F.col("o_orderkey") % 5 == 0).select("o_orderkey")
         )
         snap.append(orders.filter(F.col("o_orderkey") % 3 == 2), t)          # v4
-        with open(done, "w") as f:
-            f.write("")
+
+    t = staged(sf_dir, "snap_mor", ("orders",), build)
     return snap.read(spark, t).groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
         cents_sum("o_totalprice").alias("total_price"),
@@ -4868,17 +4747,7 @@ def snapshot_asof_timestamp_rollup(spark: SparkSession, sf_dir: str) -> DataFram
     unit-tested in tests/test_snapshot.py."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_asof_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
-        orders = _t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_totalprice", "o_orderstatus"
-        )
-        snap.overwrite(orders.filter(F.col("o_orderkey") % 3 == 0), t)  # v1
-        snap.append(orders.filter(F.col("o_orderkey") % 3 == 1), t)     # v2
-        with open(done, "w") as f:
-            f.write("")
+    t = _orders_in_thirds(spark, sf_dir, 2)
     at_v2 = snap.read(spark, t, as_of=snap.read_manifest(t, 2)["ts"])
     return at_v2.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
@@ -4927,10 +4796,7 @@ def snapshot_mor_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit proofs."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_mor_merge_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
+    def build(t: str) -> None:
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderstatus"
         )
@@ -4947,8 +4813,8 @@ def snapshot_mor_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderstatus",
         )
         snap.merge(spark, t, src, on=["o_orderkey"])                         # v4
-        with open(done, "w") as f:
-            f.write("")
+
+    t = staged(sf_dir, "snap_mor_merge", ("orders",), build)
     return snap.read(spark, t).groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
         cents_sum("o_totalprice").alias("total_price"),
@@ -4998,18 +4864,15 @@ def snapshot_dv_delete_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_snapshot_dv.py."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_dv_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
+    def build(t: str) -> None:
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderpriority"
         )
         snap.overwrite(orders.filter(F.col("o_orderkey") % 3 <= 1), t)       # v1
         snap.delete_where_dv(spark, t, [("o_totalprice", "<", _DV_PRICE_CUT)])  # v2
         snap.append(orders.filter(F.col("o_orderkey") % 3 == 2), t)          # v3
-        with open(done, "w") as f:
-            f.write("")
+
+    t = staged(sf_dir, "snap_dv", ("orders",), build)
     return snap.read(spark, t).groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
         cents_sum("o_totalprice").alias("total_price"),
@@ -5052,16 +4915,7 @@ def snapshot_wap_publish_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit-tested in tests/test_snapshot.py."""
     from fraud_detection_etl_project_spark import snapshot as snap
 
-    tag = _fixture_tag(sf_dir, "orders")
-    t = os.path.join(tempfile.gettempdir(), f"snap_wap_{tag}")
-    done = os.path.join(t, "_STAGED")
-    if not os.path.exists(done):
-        # crash recovery: a half-staged run leaves the 'audit' ref on
-        # disk, which would make the create_branch below fail forever —
-        # staging is idempotent only from a clean slate
-        import shutil
-
-        shutil.rmtree(t, ignore_errors=True)
+    def build(t: str) -> None:
         orders = _t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderpriority"
         )
@@ -5071,19 +4925,19 @@ def snapshot_wap_publish_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # audit gate: the branch's STAGED INCREMENT (its change feed since
         # the fork — not the inherited main rows) must be non-empty and
         # add no key already on main (the minimal WAP DQ check)
-        staged = snap.read_changes(
+        increment = snap.read_changes(
             spark, t, from_version=1, to_version=snap.branch_version(t, "audit")
         )
         main_now = snap.read(spark, t)
-        n_staged = staged.count()
-        n_overlap = staged.join(main_now, "o_orderkey", "left_semi").count()
-        if n_staged == 0 or n_overlap > 0:
+        n_increment = increment.count()
+        n_overlap = increment.join(main_now, "o_orderkey", "left_semi").count()
+        if n_increment == 0 or n_overlap > 0:
             snap.drop_ref(t, "audit")
             raise ValueError("WAP audit failed; branch dropped")
         snap.fast_forward(t, "audit")
         snap.append(orders.filter(F.col("o_orderkey") % 3 == 2), t)          # v3 main
-        with open(done, "w") as f:
-            f.write("")
+
+    t = staged(sf_dir, "snap_wap", ("orders",), build)
     return snap.read(spark, t).groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
         cents_sum("o_totalprice").alias("total_price"),
@@ -5136,6 +4990,53 @@ GROUP BY 1
 """
 
 
+def _ingested_corpus(
+    spark: SparkSession, sf_dir: str, name: str, pre_filter=None
+) -> str:
+    """Stage the corpus snapshot table that streaming dedup-on-ingest
+    builds from documents and return its path. The documents arrive as
+    three files by doc_id range, one micro-batch each, through
+    ``foreach_batch_dedup_ingester`` (``pre_filter`` is its quality
+    gate)."""
+    from fraud_detection_etl_project_spark.operators import dedup as D
+
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
+
+    def build(base: str) -> None:
+        # arrival boundaries: one 1-row agg (bounded parameter collect)
+        mn, mx = docs.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
+        c1 = mn + (mx - mn) // 3
+        c2 = mn + 2 * (mx - mn) // 3
+        feed = os.path.join(base, "_feed")
+        # three sequential files, arrival order monotone in doc_id
+        for pred in (
+            F.col("doc_id") <= c1,
+            (F.col("doc_id") > c1) & (F.col("doc_id") <= c2),
+            F.col("doc_id") > c2,
+        ):
+            docs.filter(pred).coalesce(1).write.mode("append").parquet(feed)
+        ingest = D.foreach_batch_dedup_ingester(
+            os.path.join(base, "corpus"),
+            os.path.join(base, "registry_docs"),
+            os.path.join(base, "registry_bands"),
+            t_num=3,
+            t_den=5,
+            pre_filter=pre_filter,
+        )
+        q = (
+            spark.readStream.schema("doc_id bigint, source string, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed)
+            .writeStream.foreachBatch(ingest)
+            .option("checkpointLocation", os.path.join(base, "_ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    return os.path.join(staged(sf_dir, name, ("documents",), build), "corpus")
+
+
 @query("stream_dedup_ingest_rollup", oracle=_stream_dedup_oracle())
 def stream_dedup_ingest_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING dedup-on-ingest — the production shape for a corpus that
@@ -5168,53 +5069,8 @@ def stream_dedup_ingest_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     index table is append-only and compact (4 rows/doc); at 100 TB it
     would be partitioned by band for probe-side pruning."""
     from fraud_detection_etl_project_spark import snapshot as snap
-    from fraud_detection_etl_project_spark.operators import dedup as D
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    tag = _fixture_tag(sf_dir, "documents")
-    base = os.path.join(tempfile.gettempdir(), f"snap_streamdedup_{tag}")
-    corp = os.path.join(base, "corpus")
-    reg_docs = os.path.join(base, "registry_docs")
-    reg_bands = os.path.join(base, "registry_bands")
-    done = os.path.join(base, "_STAGED")
-
-    if not os.path.exists(done):
-        import shutil
-        import uuid as _uuid
-
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
-        # arrival boundaries: one 1-row agg (bounded parameter collect)
-        mn, mx = docs.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
-        c1 = mn + (mx - mn) // 3
-        c2 = mn + 2 * (mx - mn) // 3
-        feed = os.path.join(base, "_feed")
-        # three sequential files, arrival order monotone in doc_id
-        for pred in (
-            F.col("doc_id") <= c1,
-            (F.col("doc_id") > c1) & (F.col("doc_id") <= c2),
-            F.col("doc_id") > c2,
-        ):
-            docs.filter(pred).coalesce(1).write.mode("append").parquet(feed)
-
-        _ingest = D.foreach_batch_dedup_ingester(
-            corp, reg_docs, reg_bands, t_num=3, t_den=5
-        )
-
-        q = (
-            spark.readStream.schema("doc_id bigint, source string, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-            .writeStream.foreachBatch(_ingest)
-            .option(
-                "checkpointLocation", os.path.join(base, f"_ckpt_{_uuid.uuid4().hex[:8]}")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        with open(done, "w") as f:
-            f.write("")
+    corp = _ingested_corpus(spark, sf_dir, "snap_streamdedup")
     return snap.read(spark, corp).groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_kept"),
         F.sum("doc_id").cast("bigint").alias("kept_idsum"),
@@ -5253,54 +5109,13 @@ def stream_curated_ingest_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-scaled posture."""
     from fraud_detection_etl_project_spark import snapshot as snap
     from fraud_detection_etl_project_spark.functions.text import token_count
-    from fraud_detection_etl_project_spark.operators import dedup as D
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    tag = _fixture_tag(sf_dir, "documents")
-    base = os.path.join(tempfile.gettempdir(), f"snap_streamcurated_{tag}")
-    corp = os.path.join(base, "corpus")
-    reg_docs = os.path.join(base, "registry_docs")
-    reg_bands = os.path.join(base, "registry_bands")
-    done = os.path.join(base, "_STAGED")
-
-    if not os.path.exists(done):
-        import shutil
-        import uuid as _uuid
-
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
-        mn, mx = docs.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
-        c1 = mn + (mx - mn) // 3
-        c2 = mn + 2 * (mx - mn) // 3
-        feed = os.path.join(base, "_feed")
-        for pred in (
-            F.col("doc_id") <= c1,
-            (F.col("doc_id") > c1) & (F.col("doc_id") <= c2),
-            F.col("doc_id") > c2,
-        ):
-            docs.filter(pred).coalesce(1).write.mode("append").parquet(feed)
-        _ingest = D.foreach_batch_dedup_ingester(
-            corp,
-            reg_docs,
-            reg_bands,
-            t_num=3,
-            t_den=5,
-            pre_filter=token_count(F.col("text")) >= _CURATE_MIN_TOKENS,
-        )
-        q = (
-            spark.readStream.schema("doc_id bigint, source string, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-            .writeStream.foreachBatch(_ingest)
-            .option(
-                "checkpointLocation", os.path.join(base, f"_ckpt_{_uuid.uuid4().hex[:8]}")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        with open(done, "w") as f:
-            f.write("")
+    corp = _ingested_corpus(
+        spark,
+        sf_dir,
+        "snap_streamcurated",
+        pre_filter=token_count(F.col("text")) >= _CURATE_MIN_TOKENS,
+    )
     return snap.read(spark, corp).groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_kept"),
         F.sum("doc_id").cast("bigint").alias("kept_idsum"),

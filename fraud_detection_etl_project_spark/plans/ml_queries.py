@@ -16,6 +16,9 @@ reproduce the same integers / quantized doubles bit-for-bit.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -31,6 +34,7 @@ from fraud_detection_etl_project_spark.plans.advanced_queries import (
 )
 from fraud_detection_etl_project_spark.plans.llm_queries import TOKS_SQL
 from fraud_detection_etl_project_spark.plans.registry import query
+from fraud_detection_etl_project_spark.plans.staging import staged
 from fraud_detection_etl_project_spark.sources.parquet import load_table
 
 
@@ -1734,17 +1738,9 @@ def stream_user_cusum_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay is the S3-backlog drain pattern (bounded batches through
     admission control), and alerts stream out in update mode instead of
     waiting for a terminal batch job."""
-    import os
-    import tempfile
-
-    from fraud_detection_etl_project_spark.plans.mining_queries import _fixture_tag
     from fraud_detection_etl_project_spark.streaming.stateful import user_cusum_stream
 
-    tag = _fixture_tag(sf_dir, "events")
-    d = os.path.join(tempfile.gettempdir(), f"cusum_octiles_{tag}")
-    done = os.path.join(d, "_STAGED")
-    if not os.path.exists(done):
-        os.makedirs(d, exist_ok=True)
+    def build(d: str) -> None:
         base = (
             _t(spark, sf_dir, "events")
             .filter(F.col("event_type") == "purchase")
@@ -1776,11 +1772,9 @@ def stream_user_cusum_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             os.replace(os.path.join(sub, part), os.path.join(d, f"octile_{k}.parquet"))
             os.utime(os.path.join(d, f"octile_{k}.parquet"), (k * 1000, k * 1000))
-            import shutil
-
             shutil.rmtree(sub, ignore_errors=True)
-        with open(done, "w") as f:
-            f.write("ok")
+
+    d = staged(sf_dir, "cusum_octiles", ("events",), build)
     return user_cusum_stream(spark, d)
 
 

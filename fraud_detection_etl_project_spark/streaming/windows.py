@@ -11,9 +11,7 @@ chooses only the output mode.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,21 +28,24 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``readStream`` needs an explicit schema, and Spark's file stream source
     wants a *directory* (one micro-batch per discovered file — the S3
     landing-bucket model). The fixture is a bare file, so it is exposed
-    through a per-source cached directory of symlinks (deterministic path,
-    reused across calls); a real deployment points this at the landing
-    directory itself. ``ts`` arrives as session-TZ TimestampType directly
-    (µs parquet under the pinned reader confs, like the batch source).
+    through a staged directory holding a symlink to it; a real deployment
+    points this at the landing directory itself. ``ts`` arrives as
+    session-TZ TimestampType directly (µs parquet under the pinned reader
+    confs, like the batch source).
     """
     pin_session_confs(spark)
     src = os.path.join(sf_dir, "events.parquet")
     if os.path.isfile(src):
-        tag = hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:12]
-        d = os.path.join(tempfile.gettempdir(), f"events_stream_{tag}")
-        link = os.path.join(d, "events.parquet")
-        os.makedirs(d, exist_ok=True)
-        if not os.path.islink(link):
-            os.symlink(src, link)
-        src = d
+        # imported here: the plans package imports this module
+        from fraud_detection_etl_project_spark.plans.staging import staged
+
+        target = os.path.abspath(src)
+        src = staged(
+            sf_dir,
+            "events_stream",
+            ("events",),
+            lambda d: os.symlink(target, os.path.join(d, "events.parquet")),
+        )
     return spark.readStream.schema(EVENTS_SCHEMA).format("parquet").load(src)
 
 
