@@ -177,18 +177,8 @@ def copurchase_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     oriented set; all shuffled hash joins on int keys, no driver-side
     adjacency. The support>=2 edge derivation keeps the graph near-linear
     in orders (see _EDGE_SUPPORT). The oracle counts triangles under id
-    orientation — orientation-invariant, same total.
-
-    The oriented edge frame feeds FOUR plan legs (both wedge sides, the
-    closing probe, and the node/edge stats) — without an explicit persist
-    Spark re-derives the pair self-join + degree join per leg (no
-    cross-branch reuse); the persisted frame is (int, int, int) rows,
-    tiny relative to the fact it came from."""
-    from pyspark import StorageLevel
-
-    oe = orient_by_degree(_copurchase_edges(spark, sf_dir)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    orientation — orientation-invariant, same total."""
+    oe = orient_by_degree(_copurchase_edges(spark, sf_dir))
     tri = count_triangles_oriented(oe)
     nodes = oe.select(F.col("lo").alias("v")).union(oe.select("hi")).distinct()
     stats = nodes.agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes")).crossJoin(
@@ -223,11 +213,7 @@ def part_bfs_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     discovered adjacency, not graph size; min-distance falls out of
     first-discovery order with no per-node aggregation. Fixed k=2 keeps
     the plan shallow (no checkpoint needed; the unrolled-CTE oracle
-    mirrors hop by hop). The edge frame is persisted for the same reason
-    as in copurchase_triangle_count: every hop (and both directions of
-    the symmetrization) re-reads it."""
-    from pyspark import StorageLevel
-
+    mirrors hop by hop)."""
     from fraud_detection_etl_project_spark.operators.graph import bfs_khop
 
     seeds = (
@@ -235,8 +221,7 @@ def part_bfs_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("p_brand") == "Brand#1")
         .select(F.col("p_partkey").alias("node"))
     )
-    edges = _copurchase_edges(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-    return bfs_khop(seeds, edges, k=2)
+    return bfs_khop(seeds, _copurchase_edges(spark, sf_dir), k=2)
 
 
 _SESSIONS_SQL = """
@@ -1289,13 +1274,9 @@ def part_clustering_coefficients(spark: SparkSession, sf_dir: str) -> DataFrame:
     The id-oriented oracle enumerates the same triangles (orientation-
     invariant set), and the lcc ratio is fxr-quantized for cross-engine
     value equality. Nodes with degree < 2 (undefined lcc) are excluded."""
-    from pyspark import StorageLevel
-
     from fraud_detection_etl_project_spark.functions.rounding import fxr
 
-    oe = orient_by_degree(_copurchase_edges(spark, sf_dir)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    oe = orient_by_degree(_copurchase_edges(spark, sf_dir))
     e1 = oe.select(F.col("lo").alias("a"), F.col("hi").alias("b"), F.col("deg_hi").alias("deg_b"))
     e2 = oe.select(F.col("lo").alias("a2"), F.col("hi").alias("c"), F.col("deg_hi").alias("deg_c"))
     wedges = e1.join(
@@ -1641,7 +1622,7 @@ def markov_prediction_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("prev"),
         F.lead("event_type").over(w).alias("nxt"),
         F.lead("ts").over(w).alias("nxt_ts"),
-    ).filter(F.col("nxt").isNotNull()).persist()
+    ).filter(F.col("nxt").isNotNull())
     split = F.lit(_MK_SPLIT).cast("timestamp")
     train = (
         seq.filter(F.col("nxt_ts") < split)
@@ -1720,8 +1701,7 @@ def _ktruss_oracle() -> str:
 def _edge_support(e: DataFrame) -> DataFrame:
     """Triangle support per canonical edge: enumerate a<b<c triangles
     with the wedge-close join, then count each triangle into its three
-    edges. ``e`` must be persisted by the caller (it is referenced three
-    times in the join chain)."""
+    edges. ``e`` is referenced three times in the join chain."""
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     tri = (
         e1.join(e2, (F.col("e1.src") == F.col("e2.src")) & (F.col("e1.dst") < F.col("e2.dst")))
@@ -1747,16 +1727,16 @@ def copurchase_ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     their final-round support.
 
     Scale: each round is one wedge-close triangle enumeration over the
-    CURRENT (already-peeled, persisted) edge frame — monotonically
+    CURRENT (already-peeled) edge frame — monotonically
     shrinking work — followed by a 3-way unionAll projection and one
     combine-aggregated count; everything joins on 2-int edge keys. The
     wedge fan-out takes the same degree-orientation bound as the
     triangle counter when graphs are power-law (orient_by_degree)."""
-    e = _copurchase_edges(spark, sf_dir).persist()
+    e = _copurchase_edges(spark, sf_dir)
     sup = None
     for _ in range(_KT_ROUNDS):
-        sup = _edge_support(e).filter(F.col("support") >= _KT_K - 2).persist()
-        e = sup.select("src", "dst").persist()
+        sup = _edge_support(e).filter(F.col("support") >= _KT_K - 2)
+        e = sup.select("src", "dst")
     return sup
 
 
@@ -1816,6 +1796,7 @@ def copurchase_luby_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighborhoods). The md5 priorities make every round reproducible
     across engines and partitionings.
     """
+    # persist kept: cold A/B, sf0.1, 4 cores, one query per process, 5 pairs: 11.69 s with vs 13.83 s without this site (medians), won 5/5, parent IQR 1.12 s
     e = _copurchase_edges(spark, sf_dir).persist()
     nodes = e.select(F.col("src").alias("v")).union(e.select(F.col("dst").alias("v"))).distinct()
 
@@ -1846,6 +1827,7 @@ def copurchase_luby_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
                 | ((pri(F.col("v")) * _MIS_PRI_MOD + F.col("v")) < F.col("mnp"))
             )
             .select("v")
+            # persist kept: cold A/B as above: 11.69 s with vs 22.97 s without this site, won 5/5
             .persist()
         )
         rnd = sel.select(
@@ -1859,9 +1841,8 @@ def copurchase_luby_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
             e.join(removed.withColumnRenamed("v", "src"), "src", "left_anti")
             .join(removed.withColumnRenamed("v", "dst"), "dst", "left_anti")
             .select("src", "dst")
-            .persist()
         )
-        nodes = nodes.join(removed, "v", "left_anti").persist()
+        nodes = nodes.join(removed, "v", "left_anti")
     return out
 
 
@@ -1947,7 +1928,6 @@ def copurchase_hyperball_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         e.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .unionAll(e.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .persist()
     )
     nodes = d.select(F.col("u").alias("node")).distinct()
     hexd = F.md5(F.col("node").cast("string").cast("binary"))
@@ -2046,6 +2026,7 @@ def copurchase_brand_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(brand.withColumnRenamed("p_brand", "brand_dst")),
               F.col("p_partkey") == F.col("dst"))
         .select("brand_src", "brand_dst")
+        # persist kept: cold A/B, sf0.1, 4 cores, 5 pairs: 3.37 s with vs 4.21 s without (medians), won 5/5, parent IQR 0.05 s
         .persist()
     )
     m = eb.agg(F.count(F.lit(1)).cast("bigint").alias("m"))
@@ -2177,6 +2158,11 @@ def copurchase_personalized_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
         damping=_PPR_D,
         quant=12,
     )
+    # The operator's local path returns driver-built rows, a plan with no
+    # children that never reads sym: release it. The distributed path's
+    # lazy result reads sym in every iteration, so its blocks stay.
+    if ranks._jdf.queryExecution().logical().children().isEmpty():
+        sym.unpersist()
     return ranks.filter(F.col("r") > 0).select(F.col("node").alias("part"), F.col("r").alias("ppr"))
 
 
@@ -2236,7 +2222,7 @@ def part_neighborhood_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nbrs = ew.select(F.col("src").alias("node"), F.col("dst").alias("nbr")).unionAll(
         ew.select(F.col("dst").alias("node"), F.col("src").alias("nbr"))
-    ).persist()
+    )
     deg = nbrs.groupBy("node").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     a, b = nbrs.alias("a"), nbrs.alias("b")
     common = (
@@ -2331,7 +2317,7 @@ def part_harmonic_centrality_3hop(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     nbrs = ew.select(F.col("src").alias("node"), F.col("dst").alias("nbr")).unionAll(
         ew.select(F.col("dst").alias("node"), F.col("src").alias("nbr"))
-    ).persist()
+    )
     seeds = nbrs.select("node").distinct().orderBy("node").limit(_HC_SEEDS)
     r1 = (
         seeds.withColumnRenamed("node", "seed")
@@ -2490,6 +2476,8 @@ def copurchase_linkpred_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_hits = pred.join(
         test.select(F.col("src").alias("u"), F.col("dst").alias("v")), ["u", "v"], "left_semi"
     ).count()
+    split.unpersist()
+    pred.unpersist()
     import math
 
     recall_q = math.floor(n_hits / n_test * 1e6 + 0.5) / 1e6 if n_test else 0.0
@@ -2663,6 +2651,7 @@ def part_betweenness_3hop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("w") >= _EDGE_SUPPORT)
         .select("src", "dst")
     )
+    # persist kept: cold A/B, sf0.1, 4 cores, one query per process, 5 pairs: 8.21 s with vs 15.33 s without this site (medians), won 5/5, parent IQR 1.48 s
     nbrs = ew.select(F.col("src").alias("node"), F.col("dst").alias("nbr")).unionAll(
         ew.select(F.col("dst").alias("node"), F.col("src").alias("nbr"))
     ).persist()
@@ -2679,7 +2668,10 @@ def part_betweenness_3hop(spark: SparkSession, sf_dir: str) -> DataFrame:
             x = x.join(s.select("seed", "node"), ["seed", "node"], "left_anti")
         return x.groupBy("seed", "node").agg(F.sum("sigma").cast("long").alias("sigma"))
 
+    # persist kept: cold A/B as above: 8.21 s with vs 10.94 s without this site, won 5/5
     l1 = expand(l0).persist()
+    # l2, l3 and d2 persists kept together: singly none met the keep rule,
+    # but removing all three ran 9.70 vs 8.43 s (1.15x, persist won 5/5)
     l2 = expand(l1, l1).persist()
     l3 = expand(l2, l1, l2).persist()
 
@@ -2816,7 +2808,7 @@ def brand_simrank_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sym = e.select(F.col("src").alias("node"), F.col("dst").alias("nbr")).unionAll(
         e.select(F.col("dst").alias("node"), F.col("src").alias("nbr"))
-    ).persist()
+    )
     nodes = sym.select("node").distinct()
     deg = sym.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("deg"))
     scale_l = F.lit(int(_SR_SCALE)).cast("long")
@@ -2848,7 +2840,7 @@ def brand_simrank_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    s1 = step(diag).persist()
+    s1 = step(diag)
     s2 = step(s1.unionAll(diag))
     out = (
         s2.filter(F.col("a") < F.col("b"))

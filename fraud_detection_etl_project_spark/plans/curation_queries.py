@@ -1069,6 +1069,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = (
         bg.groupBy("doc_id", "lang", "b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+        # persist kept: cold A/B, sf0.1, 4 cores, 5 pairs: 2.15 s with vs 2.76 s without (medians), won 5/5, parent IQR 0.11 s
         .persist()
     )
     bucket = per_doc.groupBy("b").agg(

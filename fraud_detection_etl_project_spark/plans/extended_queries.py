@@ -1714,24 +1714,17 @@ def multires_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     so re-aggregation of partials is exact and associative (the property
     that makes cascaded rollups correct at all).
 
-    Scale: raw data is scanned and shuffled once (to hours) — the hourly
-    partial is persisted (MEMORY_AND_DISK; it is one row per hour, ~9k/
-    year, regardless of raw volume), and the day/month re-aggs plus the
-    hour output leg all read the cache. Without the explicit persist,
-    Spark plans each union branch independently and re-scans the fact
-    table three times (verified: no ReusedExchange fires across the
-    branches) — at 100 TB that is the difference between one fact-table
-    pass and three. In a production continuous-aggregate setup the hourly
-    grain would be written to storage and coarser grains derived from it
-    incrementally; the persist is the single-query form of the same
-    materialization."""
+    Scale: raw data is scanned and shuffled once (to hours): the three
+    union branches share the hourly partial's exchange, which AQE's
+    exchange reuse runs once per execution (one row per hour, ~9k/year,
+    regardless of raw volume). In a production continuous-aggregate
+    setup the hourly grain would be written to storage and coarser
+    grains derived from it incrementally."""
     e = _t(spark, sf_dir, "events").select(
         F.date_trunc("hour", F.col("ts")).alias("b"),
         F.floor(F.col("value") * 100.0 + F.lit(0.5)).cast("long").alias("cents"),
     )
-    hourly = e.groupBy("b").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("cents").alias("c")
-    ).persist()
+    hourly = e.groupBy("b").agg(F.count(F.lit(1)).alias("n"), F.sum("cents").alias("c"))
     hour_leg = hourly.select(
         F.lit("hour").alias("grain"),
         F.col("b").alias("bucket_start"),
@@ -3037,13 +3030,16 @@ def surrogate_key_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     disjoint and contiguous; only counts (not rows) cross the cluster a
     second time.
 
-    The range boundaries come from Spark's reservoir sampling, which is
-    seeded per input partition — deterministic across the two uses of the
-    repartitioned frame (and the frame is persisted for the two passes
-    anyway).
+    The range boundaries come from Spark's reservoir sampling, whose seed
+    mixes in the sampled RDD's id, so two evaluations of the range
+    exchange may cut at different keys once the input outgrows the
+    sample. The counts and the local ranks must see ONE partitioning, so
+    both read the persisted repartitioned frame.
     """
     c = _t(spark, sf_dir, "customer").select("c_custkey")
     p = c.repartitionByRange(16, F.col("c_custkey")).withColumn("pid", F.spark_partition_id())
+    # persist kept for correctness, not speed: two evaluations of the
+    # range exchange may cut differently (bounds sampled with an RDD-id seed)
     p.persist()
     counts = p.groupBy("pid").agg(F.count(F.lit(1)).alias("n"))
     w = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)

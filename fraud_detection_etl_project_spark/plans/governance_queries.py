@@ -458,28 +458,28 @@ def sprt_ab_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "variant",
         F.sum(F.col("s") * _SPRT_QA + F.col("f") * _SPRT_QB).over(w).cast("bigint").alias("qllr"),
         F.row_number().over(wn).alias("dn"),
-    ).persist()
-    crossing = (
-        cum.filter((F.col("qllr") >= _SPRT_QU) | (F.col("qllr") <= _SPRT_QL))
-        .groupBy("variant")
-        .agg(F.min("dn").alias("dec_dn"))
     )
-    finals = cum.groupBy("variant").agg(F.max("dn").alias("last_dn"))
-    d = cum.select(F.col("variant").alias("dv"), F.col("dn").alias("ddn"), F.col("qllr").alias("dq"))
-    ee = cum.select(F.col("variant").alias("ev"), F.col("dn").alias("edn"), F.col("qllr").alias("eq"))
-    out = (
-        finals.join(crossing, "variant", "left")
-        .join(d, (F.col("dv") == F.col("variant")) & (F.col("ddn") == F.col("dec_dn")), "left")
-        .join(ee, (F.col("ev") == F.col("variant")) & (F.col("edn") == F.col("last_dn")), "left")
+    # One grouped pass over the day-level frame replaces the oracle's
+    # crossing/finals self-joins: min/max of (dn, qllr) structs carry the
+    # LLR of the first crossing day and of the last day. A null variant
+    # matches no row in the oracle's equi-joins, so it reads 'continue'
+    # with a null LLR here too.
+    crossed = (F.col("qllr") >= _SPRT_QU) | (F.col("qllr") <= _SPRT_QL)
+    dn_q = F.struct("dn", "qllr")
+    out = cum.groupBy("variant").agg(
+        F.min(F.when(crossed & F.col("variant").isNotNull(), dn_q)).alias("dec"),
+        F.max(dn_q).alias("last"),
     )
     return out.select(
         "variant",
-        F.when(F.col("dec_dn").isNull(), F.lit("continue"))
-        .when(F.col("dq") >= _SPRT_QU, F.lit("accept_h1"))
+        F.when(F.col("dec").isNull(), F.lit("continue"))
+        .when(F.col("dec.qllr") >= _SPRT_QU, F.lit("accept_h1"))
         .otherwise(F.lit("accept_h0"))
         .alias("decision"),
-        F.coalesce(F.col("dec_dn"), F.col("last_dn")).cast("bigint").alias("n_days_observed"),
-        F.coalesce(F.col("dq"), F.col("eq")).cast("bigint").alias("q_llr"),
+        F.coalesce(F.col("dec.dn"), F.col("last.dn")).cast("bigint").alias("n_days_observed"),
+        F.when(F.col("variant").isNotNull(), F.coalesce(F.col("dec.qllr"), F.col("last.qllr")))
+        .cast("bigint")
+        .alias("q_llr"),
     )
 
 
@@ -682,7 +682,7 @@ def value_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = v.groupBy("cents").agg(
         F.sum("in_a").cast("bigint").alias("ca"),
         F.sum(F.lit(1) - F.col("in_a")).cast("bigint").alias("cb"),
-    ).persist()
+    )
     tot = g.agg(F.sum("ca").cast("bigint").alias("n1"), F.sum("cb").cast("bigint").alias("n2"))
     w = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, 0)
     c = g.select(

@@ -2178,7 +2178,7 @@ def skipgram_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " s -> s IS NOT NULL)))"
             )
         ).alias("p")
-    ).select("p.w", "p.c").persist()
+    ).select("p.w", "p.c")
     cxy = pairs.groupBy("w", "c").agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
     tot = pairs.agg(F.count(F.lit(1)).cast("bigint").alias("tp"))
     uni = (
@@ -2186,7 +2186,6 @@ def skipgram_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("tok") != "")
         .groupBy(F.col("tok").alias("uw"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .persist()
     )
     utot = uni.agg(F.sum("n").cast("bigint").alias("u"))
     joined = (
@@ -2266,7 +2265,6 @@ def doc_trigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tg"),
         )
         .distinct()
-        .persist()
     )
     dfq = tri.groupBy("tg").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     novel = F.sum(F.when(F.col("df") == 1, 1).otherwise(0)).cast("bigint")
@@ -2344,14 +2342,7 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("tok")).filter(
         F.col("tok") != ""
     )
-    # tf persisted (r11): it feeds BOTH the df aggregation and the posting
-    # join input — unpersisted, the explode + (doc, tok) aggregation ran
-    # twice inside the one materialization of w. Not unpersisted here: the
-    # returned frame is lazy, so the blocks must outlive this function
-    # (repo-wide convention for persisted query legs; bench.py and the
-    # oracle harness clearCache() between queries — a long-lived library
-    # session should unpersist after consuming the result, ADVICE r11)
-    tf = t.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).cast("bigint").alias("c")).persist()
+    tf = t.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     dfq = tf.groupBy("tok").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     nn = d.agg(F.count(F.lit(1)).cast("bigint").alias("nd"))
     w = (
@@ -2370,7 +2361,6 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("qidf"),
         )
-        .persist()
     )
     norms = w.groupBy("doc_id").agg(
         F.sum(F.col("c") * F.col("c") * F.col("qidf") * F.col("qidf")).cast("bigint").alias("nrm")
@@ -2780,6 +2770,7 @@ def duplicate_span_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("kg"),
         )
         .select("doc_id", F.col("kg.pos").alias("pos"), F.col("kg.gram").alias("gram"))
+        # persist kept: cold A/B, sf0.1, 4 cores, 5 pairs: 2.57 s with vs 3.63 s without (medians), won 5/5, parent IQR 0.14 s
         .persist()
     )
     dup = (

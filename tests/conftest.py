@@ -1,7 +1,5 @@
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 
 from fraud_detection_etl_project_spark.session import get_spark
@@ -11,10 +9,10 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
     # Warehouse outside the repo so saveAsTable (bucketing tests) writes to
     # a throwaway location.
-    wh = tempfile.mkdtemp(prefix="spark_wh_")
+    wh = str(tmp_path_factory.mktemp("spark_wh"))
     spark = get_spark(
         app_name="fraud-etl-tests",
         shuffle_partitions=8,

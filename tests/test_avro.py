@@ -196,7 +196,7 @@ def test_our_reader_reads_jvm_files(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_spark_datasource_sink_roundtrip_and_overwrite(spark):
+def test_spark_datasource_sink_roundtrip_and_overwrite(spark, tmp_path):
     """df.write.format("pyavro"): one OCF part file per task, staged as
     temps and atomically published with _SUCCESS on commit; overwrite
     drops prior parts. Round-trip through the reader must be exact,
@@ -204,7 +204,7 @@ def test_spark_datasource_sink_roundtrip_and_overwrite(spark):
     import pyspark.sql.functions as F
 
     A.register(spark)
-    d = os.path.join(tempfile.mkdtemp(), "out")
+    d = str(tmp_path / "out")
     df = spark.range(0, 3000, 1, 5).select(
         "id",
         (F.col("id") * 1.5).alias("x"),

@@ -136,7 +136,7 @@ def test_every_registered_query_has_docstring():
 def test_full_registry_witness_is_current():
     """Judge r7 ask #8 + r9 ask #3: the committed full-registry witness
     (CORRECTNESS_FULL_LOCAL.json, written by tools/check_queries.py on a
-    filterless run) must cover EXACTLY the registry at HEAD — and must
+    filterless run at sf0.01) must cover EXACTLY the registry at HEAD — and must
     carry a CONTENT hash of the source tree + oracle strings matching
     HEAD's, so a post-witness semantic edit (r9 shipped two such commits
     over a count-only guard) forces a re-stamp, not a stale ride."""
@@ -149,6 +149,9 @@ def test_full_registry_witness_is_current():
     repo = os.path.join(os.path.dirname(__file__), "..")
     path = os.path.join(repo, "CORRECTNESS_FULL_LOCAL.json")
     w = json.load(open(path))
+    assert os.path.basename(w["sf_dir"].rstrip("/")) == "sf0.01", (
+        "witness was stamped at another scale — re-run tools/check_queries.py at sf0.01"
+    )
     assert w["total_registered"] == len(REGISTRY)
     assert set(w.get("queries", [])) == set(REGISTRY), (
         "witness/registry drift — re-run tools/check_queries.py with no filter"

@@ -322,12 +322,10 @@ def test_count_triangles_oriented_known_graphs(spark):
     assert tri([(0, i) for i in range(1, 21)]) == 0  # star: wedges never close
 
 
-def test_neardup_components_reliable_checkpoint(spark):
+def test_neardup_components_reliable_checkpoint(spark, tmp_path):
     """The registered near-dup CC query, re-run with reliable checkpoint()
     lineage truncation and the distributed path forced: identical labels
     to the default (localCheckpoint / adaptive) path."""
-    import tempfile
-
     from fraud_detection_etl_project_spark.operators import dedup as D
     from fraud_detection_etl_project_spark.operators import graph as G
     from fraud_detection_etl_project_spark.plans.llm_queries import neardup_components
@@ -339,7 +337,7 @@ def test_neardup_components_reliable_checkpoint(spark):
     }
     d = load_table(spark, sf, "documents")
     pairs = D.neardup_pairs_minhash(d)
-    ckpt = tempfile.mkdtemp(prefix="neardup_cc_ckpt_")
+    ckpt = str(tmp_path)
     reliable = G.connected_components(
         d.select("doc_id"),
         pairs,

@@ -15,6 +15,29 @@ def plan_of(spark, name: str) -> str:
     return REGISTRY[name].fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
 
 
+def executed_scans(spark, name: str, table: str, reuse: bool = True) -> int:
+    """Run the query and count the parquet scans of ``table`` in its final
+    adaptive plan. A reused exchange prints as one ``ReusedExchange`` line
+    without its child, so a subtree that several legs share is counted
+    once exactly when it runs once per execution. ``reuse=False`` turns
+    exchange reuse off: the control that shows the count sees the
+    sharing."""
+    key = "spark.sql.exchange.reuse"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(reuse).lower())
+    try:
+        df = REGISTRY[name].fn(spark, SF)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final, plan
+    return sum(
+        "FileScan parquet" in line and f"/{table}.parquet" in line for line in final.splitlines()
+    )
+
+
 def test_dim_join_broadcasts(spark):
     plan = plan_of(spark, "region_customer_rollup")
     assert "BroadcastHashJoin" in plan
@@ -80,13 +103,10 @@ def test_q18_no_static_broadcast_hint(spark):
 
 
 def test_multires_rollup_reads_fact_once(spark):
-    # the day/month grains must re-aggregate the persisted hourly partial,
+    # the day/month grains must re-aggregate the shared hourly partial,
     # not re-scan the fact table per union branch
-    df = REGISTRY["multires_event_rollup"].fn(spark, SF)
-    df.write.format("noop").mode("overwrite").save()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    cache_reads = plan.count("InMemoryTableScan") + plan.count("TableCacheQueryStage")
-    assert cache_reads >= 3, plan
+    assert executed_scans(spark, "multires_event_rollup", "events") == 1
+    assert executed_scans(spark, "multires_event_rollup", "events", reuse=False) == 3
 
 
 def test_q10_filters_push_to_scans_and_nation_broadcasts(spark):
@@ -378,16 +398,12 @@ def test_markov_transitions_scans_events_once(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_clustering_coefficients_reuse_cached_oriented_edges(spark):
-    """All legs (wedge sides, closing probe, degrees) must read the
-    persisted oriented-edge frame, not re-derive the lineitem pair
-    self-join per leg."""
-    plan = plan_of(spark, "part_clustering_coefficients")
-    # four legs (two wedge sides, closing probe, degrees) must all read
-    # the cache. (Scan-count assertions don't work here: every
-    # InMemoryTableScan reprints its cached child plan, parquet scan
-    # included, so the string contains one scan per cache REFERENCE.)
-    assert plan.count("InMemoryTableScan") >= 4, plan
+def test_clustering_coefficients_reuse_oriented_edges(spark):
+    """All legs (wedge sides, closing probe, degrees) must share one
+    oriented-edge derivation, not re-derive the lineitem pair self-join
+    per leg."""
+    assert executed_scans(spark, "part_clustering_coefficients", "lineitem") == 1
+    assert executed_scans(spark, "part_clustering_coefficients", "lineitem", reuse=False) > 1
 
 
 def test_interval_join_is_bucketed_equi_join(spark):
@@ -727,12 +743,11 @@ def test_sprt_walks_day_frame_not_events(spark):
     day aggregation map-side combines."""
     plan = plan_of(spark, "sprt_ab_daily")
     assert "partial_sum" in plan
-    # the day-level cum frame persists and all four consumers (crossing,
-    # finals, decision row, final row) read the cache — the plan string
-    # repeats the cached lineage under each InMemoryTableScan, so the
-    # cache-reuse property is the table-scan count, not the file scans
-    assert plan.count("InMemoryTableScan") >= 4
-    spark.catalog.clearCache()
+    # the crossing day, last day and their LLRs all come from one grouped
+    # pass over the day-level frame: one events scan per execution, with
+    # no exchange reuse needed to get there
+    assert executed_scans(spark, "sprt_ab_daily", "events", reuse=False) == 1
+    assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
 
 
 def test_kanonymity_group_to_group_join(spark):

@@ -21,12 +21,12 @@ import sys
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _SCRIPT = r"""
-import os, sys, tempfile
+import os, sys
 sys.path.insert(0, %(repo)r)
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-marker_dir = tempfile.mkdtemp(prefix="retry_markers_")
+marker_dir = %(markers)r
 spark = (
     SparkSession.builder.master("local[4, 2]")
     .appName("retry-determinism")
@@ -60,9 +60,9 @@ spark.stop()
 """
 
 
-def test_results_identical_under_task_retries():
+def test_results_identical_under_task_retries(tmp_path):
     r = subprocess.run(
-        [sys.executable, "-c", _SCRIPT % {"repo": _REPO}],
+        [sys.executable, "-c", _SCRIPT % {"repo": _REPO, "markers": str(tmp_path)}],
         capture_output=True,
         text=True,
         timeout=300,

@@ -140,8 +140,9 @@ def main() -> int:
     # CORRECTNESS_r{N}.json snapshots only a 50-query prefix, so the
     # "every registered query value-checked" claim needs an artifact a
     # reader can inspect without re-running (ADVICE r03). Only written
-    # when no query filter is given (a partial run proves nothing).
-    if not only:
+    # for an unfiltered run at the oracle scale, sf0.01 (a partial run or
+    # another scale proves nothing about the committed claim).
+    if not only and os.path.basename(sf_dir.rstrip("/")) == "sf0.01":
         import datetime
         import json
 

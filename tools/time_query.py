@@ -1,5 +1,6 @@
 """Time registered queries in isolation: 1 untimed warmup + min of 3
-noop-sink passes each (bench.py methodology), on a fresh session.
+noop-sink passes each, every pass from an empty block cache (bench.py
+methodology), on a fresh session.
 
 Usage: python tools/time_query.py [sf_dir] <query> [query ...]
 """
@@ -24,22 +25,21 @@ def main() -> int:
         app_name="time-query",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
+    def isolate():
+        spark.catalog.clearCache()
+        spark.sparkContext._jvm.System.gc()
+
     spark.range(1000).count()
     for name in args:
         fn = REGISTRY[name].fn
         spark.sparkContext.setJobDescription(name)
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warmup
-        spark.catalog.clearCache()
         samples = []
         for _ in range(3):
+            isolate()
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples.append(round(time.perf_counter() - t0, 3))
-        spark.catalog.clearCache()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
         print(f"{name}: min={min(samples)} samples={samples}")
     spark.stop()
     return 0
