@@ -2186,9 +2186,10 @@ def synthetic_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     connector path — registration, options, partition split, per-
     partition iterators, Arrow hand-off — is value-checked against a
     pure-SQL mirror."""
-    from fraud_detection_etl_project_spark.sources.pydatasource import register
+    from fraud_detection_etl_project_spark.sources.partfiles import register
+    from fraud_detection_etl_project_spark.sources.pydatasource import SyntheticRowsDataSource
 
-    register(spark)
+    register(spark, SyntheticRowsDataSource)
     df = spark.read.format("syntheticrows").option("n", 5000).option("parts", 8).load()
     return (
         df.groupBy("bucket")
@@ -2221,9 +2222,12 @@ def synthetic_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic => the connector path (offsets, batch serving, replay
     contract, checkpointed drain) is value-checked against the same
     pure-SQL mirror as the batch source."""
-    from fraud_detection_etl_project_spark.sources.pydatasource import register
+    from fraud_detection_etl_project_spark.sources.partfiles import register
+    from fraud_detection_etl_project_spark.sources.pydatasource import (
+        SyntheticRowsDataSourceStreaming,
+    )
 
-    register(spark)
+    register(spark, SyntheticRowsDataSourceStreaming)
     stream = (
         spark.readStream.format("syntheticrowsstream")
         .option("n", 2000)

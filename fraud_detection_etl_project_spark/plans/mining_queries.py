@@ -544,6 +544,7 @@ def avro_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     first touch should land it in parquet (this rollup's read is exactly
     that shape)."""
     from fraud_detection_etl_project_spark.sources import avro as avro_ocf
+    from fraud_detection_etl_project_spark.sources.partfiles import register
 
     def build(d: str) -> None:
         rows = (
@@ -580,7 +581,7 @@ def avro_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     path = os.path.join(staged(sf_dir, "avro_stage", ("orders",), build), "orders.avro")
-    avro_ocf.register(spark)
+    register(spark, avro_ocf.AvroOCFDataSource)
     df = spark.read.format("pyavro").option("path", path).option("parts", 8).load()
     return df.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
@@ -604,10 +605,9 @@ def avro_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Avro SINK (completing the source added in `avro_source_rollup`):
     ``df.write.format("pyavro")`` — the Spark 4 Python DataSource WRITER
     surface. Each task streams its partition through the pure-Python OCF
-    encoder into a staged temp file; the driver-side commit atomically
-    publishes part files + _SUCCESS (stage-then-swap, the same atomic-
-    sink discipline as sinks.jdbc_atomic_append), so failed/retried
-    tasks never leave half-visible data. Customers (with a CASE-nulled
+    encoder into a task file; the driver-side commit renames the task
+    files into part files and writes _SUCCESS (sources/partfiles.py), so
+    a failed or retried task never publishes a file. Customers (with a CASE-nulled
     phone exercising the ["null",string] union on the WRITE path) go
     Spark → Avro → Spark → rollup; the oracle recomputes from parquet,
     catching writer drift, union mis-encoding, or commit-protocol row
@@ -617,9 +617,10 @@ def avro_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     within it), commit is O(#tasks) renames on the driver — the same
     cost model as Hadoop commit protocols; reads split at block
     boundaries across all part files."""
-    from fraud_detection_etl_project_spark.sources import avro as avro_ocf
+    from fraud_detection_etl_project_spark.sources.avro import AvroOCFDataSource
+    from fraud_detection_etl_project_spark.sources.partfiles import register
 
-    avro_ocf.register(spark)
+    register(spark, AvroOCFDataSource)
     d = os.path.join(root(), f"avro_sink_{_fixture_tag(sf_dir)}")
     c = _t(spark, sf_dir, "customer").select(
         "c_custkey",
@@ -672,7 +673,8 @@ def arrow_ipc_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.ipc as pa_ipc
     import pyarrow.parquet as pq
 
-    from fraud_detection_etl_project_spark.sources import arrowipc
+    from fraud_detection_etl_project_spark.sources.arrowipc import ArrowIPCDataSource
+    from fraud_detection_etl_project_spark.sources.partfiles import register
 
     def build(d: str) -> None:
         t = pq.read_table(
@@ -686,7 +688,7 @@ def arrow_ipc_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(
         staged(sf_dir, "arrow_ipc_stage", ("lineitem",), build), "lineitem.arrow"
     )
-    arrowipc.register(spark)
+    register(spark, ArrowIPCDataSource)
     df = spark.read.format("pyarrowipc").option("path", path).option("parts", 8).load()
     return df.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
@@ -713,9 +715,9 @@ def arrow_ipc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow IPC SINK (completing `arrow_ipc_source_rollup`):
     ``df.write.format("pyarrowipc")`` — each task streams its partition
     into a staged temp ``.arrow`` file in bounded-memory record batches;
-    the driver-side commit atomically publishes part files + _SUCCESS
-    (stage-then-swap, the same discipline as the Avro and JDBC sinks), so
-    failed or speculatively-retried tasks never leave half-visible data.
+    the driver-side commit renames the task files into part files and
+    writes _SUCCESS (sources/partfiles.py, as for the Avro sink), so a
+    failed or speculatively-retried task never publishes a file.
     Orders (with a CASE-nulled note column exercising null encoding on
     the write path) go Spark → Arrow IPC → Spark → rollup; the oracle
     recomputes from parquet, catching writer drift, null mis-encoding,
@@ -727,9 +729,10 @@ def arrow_ipc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     within it flushed every ``batch_records`` rows so task memory is one
     batch); commit is O(#tasks) driver renames, the Hadoop-commit cost
     model."""
-    from fraud_detection_etl_project_spark.sources import arrowipc
+    from fraud_detection_etl_project_spark.sources.arrowipc import ArrowIPCDataSource
+    from fraud_detection_etl_project_spark.sources.partfiles import register
 
-    arrowipc.register(spark)
+    register(spark, ArrowIPCDataSource)
     d = os.path.join(root(), f"arrow_ipc_sink_{_fixture_tag(sf_dir)}")
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -3881,11 +3884,12 @@ def snapshot_stream_tail_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     table→stream→table loop (paired with foreach_batch_writer) is
     driven in tests/test_snapshot_stream.py."""
     from fraud_detection_etl_project_spark import snapshot as snap
-    from fraud_detection_etl_project_spark.sources.snapshot_stream import register
+    from fraud_detection_etl_project_spark.sources.partfiles import register
+    from fraud_detection_etl_project_spark.sources.snapshot_stream import SnapshotTableDataSource
     from fraud_detection_etl_project_spark.streaming import drain
 
     t = _orders_in_thirds(spark, sf_dir, 3)
-    register(spark)
+    register(spark, SnapshotTableDataSource)
     stream = spark.readStream.format("pysnapshot").option("path", t).load()
     agg = stream.groupBy(
         F.col("_commit_version").alias("commit_version")
@@ -4221,9 +4225,10 @@ def npy_source_embedding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: planning is O(#files) header reads; each task faults in only
     its own row range; rows reach the JVM as Arrow batches (zero
     per-row Python)."""
-    from fraud_detection_etl_project_spark.sources import npy as npy_src
+    from fraud_detection_etl_project_spark.sources.npy import NpyDataSource
+    from fraud_detection_etl_project_spark.sources.partfiles import register
 
-    npy_src.register(spark)
+    register(spark, NpyDataSource)
 
     def build(d: str) -> None:
         # staged through the DISTRIBUTED pynpy sink (judge r7 wrong #2:
@@ -4282,9 +4287,10 @@ def tfrecord_source_doc_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     of parallelism (why real corpora ship as -NNNNN-of-MMMMM shards);
     one task streams one shard, one record in memory at a time, CRCs
     verified per record (corruption is a hard error, never silent)."""
-    from fraud_detection_etl_project_spark.sources import tfrecord as tfr
+    from fraud_detection_etl_project_spark.sources.partfiles import register
+    from fraud_detection_etl_project_spark.sources.tfrecord import TFRecordDataSource
 
-    tfr.register(spark)
+    register(spark, TFRecordDataSource)
 
     def build(d: str) -> None:
         docs = _t(spark, sf_dir, "documents").repartition(4)

@@ -24,8 +24,7 @@ _built: set[str] = set()
 def _fixture_tag(sf_dir: str, *tables: str) -> str:
     """Tag a staging dir by the sf_dir path AND the file identity
     (mtime_ns, size) of the fixture tables it derives from, so a fixture
-    regenerated in place gets a fresh staging dir (same scheme as
-    sources.parquet._package_zip)."""
+    regenerated in place gets a fresh staging dir."""
     parts = [os.path.abspath(sf_dir)]
     for t in tables:
         p = os.path.join(sf_dir, f"{t}.parquet")

@@ -16,9 +16,9 @@ Planning reads ONLY footers (O(#files) metadata fetches, no data bytes);
 batches are grouped into ~equal-BYTE splits so a skewed file (one giant
 batch + many small ones) still balances. Reads memory-map the file, so a
 task touches only the pages of its own batches. The sink writes one IPC
-file per task and commits via the same stage-then-swap discipline as the
-Avro sink (task temp files -> atomic rename + _SUCCESS), so failed or
-speculatively-retried tasks never publish partial output.
+file per task and publishes them through the package's part-file
+protocol (sources/partfiles.py), so failed or speculatively-retried
+tasks never publish a file.
 
 Reference parity: the reference fetches remote CSV and materializes rows
 (SURVEY.md §2.1 S2); this is the same ingest seam for the columnar
@@ -34,13 +34,7 @@ import os
 
 import pyarrow as pa
 import pyarrow.ipc as pa_ipc
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceWriter,
-    InputPartition,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -54,6 +48,12 @@ from pyspark.sql.types import (
     StructField,
     StructType,
     TimestampNTZType,
+)
+
+from fraud_detection_etl_project_spark.sources.partfiles import (
+    PartCommit,
+    PartFileWriter,
+    data_files,
 )
 
 # ---------------------------------------------------------------------------
@@ -126,18 +126,6 @@ def spark_to_arrow_schema(schema: StructType) -> pa.Schema:
     return pa.schema(fields)
 
 
-def _data_files(path: str) -> list[str]:
-    """A bare .arrow file, or every part file of a directory written by
-    the sink (sorted for determinism)."""
-    if os.path.isdir(path):
-        return sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".arrow") and not f.startswith("_")
-        )
-    return [path]
-
-
 # ---------------------------------------------------------------------------
 # Source: footer-planned batch splits, Arrow-native reads
 # ---------------------------------------------------------------------------
@@ -160,7 +148,7 @@ class ArrowIPCReader(DataSourceReader):
         # touched at plan time); group into ~equal-BYTE partitions, the
         # same balancing rule as the Avro block planner.
         splits: list[tuple[str, int, int]] = []  # (file, batch_idx, bytes)
-        for f in _data_files(self.path):
+        for f in data_files(self.path, "arrow"):
             with pa_ipc.open_file(pa.memory_map(f)) as r:
                 sizes = _batch_byte_sizes(f, r)
                 splits.extend((f, i, sz) for i, sz in enumerate(sizes))
@@ -239,101 +227,35 @@ def _normalize_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
 
 
 # ---------------------------------------------------------------------------
-# Sink: one IPC file per task, stage-then-swap commit
+# Sink: one IPC file per task
 # ---------------------------------------------------------------------------
 
 
-class ArrowIPCCommit(WriterCommitMessage):
-    def __init__(self, tmp_path: str, n_records: int):
-        self.tmp_path = tmp_path
-        self.n_records = n_records
+class ArrowIPCWriter(PartFileWriter):
+    """Each task writes one .arrow task file, record batches flushed
+    every ``batch_records`` rows so task memory stays one batch; the
+    commit publishes them as part files (sources/partfiles.py)."""
 
-
-class ArrowIPCWriter(DataSourceWriter):
-    """Each task writes a temp .arrow file (record batches flushed every
-    ``batch_records`` rows, so task memory stays one batch); driver-side
-    commit publishes temps as part-N files and drops _SUCCESS — a reader
-    sees either the old listing or the complete new one, the same atomic
-    discipline as sinks.py and the Avro sink."""
+    ext = "arrow"
 
     def __init__(self, options: dict, schema: StructType, overwrite: bool):
-        self.path = options["path"]
+        super().__init__(options, overwrite)
         self.batch_records = int(options.get("batch_records", 4096))
         self.schema = schema
-        self.overwrite = overwrite
 
     def write(self, iterator):
-        import uuid as _uuid
-
         arrow_schema = spark_to_arrow_schema(self.schema)
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(self.path, f"_tmp_{_uuid.uuid4().hex}.arrow")
-        n = 0
+        tmp = self.task_file()
         with pa_ipc.new_file(tmp, arrow_schema) as w:
             buf: list[tuple] = []
             for row in iterator:
                 buf.append(tuple(row))
                 if len(buf) >= self.batch_records:
                     w.write_batch(_rows_to_batch(buf, arrow_schema))
-                    n += len(buf)
                     buf = []
             if buf:
                 w.write_batch(_rows_to_batch(buf, arrow_schema))
-                n += len(buf)
-        return ArrowIPCCommit(tmp, n)
-
-    def commit(self, messages):
-        if self.overwrite:
-            for f in _data_files(self.path):
-                os.remove(f)
-            succ = os.path.join(self.path, "_SUCCESS")
-            if os.path.exists(succ):
-                os.remove(succ)
-            start = 0
-        else:
-            # Append must be additive: number new parts AFTER the existing
-            # max part index, or same-numbered old parts would be silently
-            # clobbered while higher-numbered ones survive (mixed output).
-            start = 1 + max(
-                (
-                    int(os.path.basename(f)[5:10])
-                    for f in _data_files(self.path)
-                    if _PART_RE.match(os.path.basename(f))
-                ),
-                default=-1,
-            )
-        for i, m in enumerate(messages):
-            if m is not None:
-                os.replace(
-                    m.tmp_path, os.path.join(self.path, f"part-{start + i:05d}.arrow")
-                )
-        _sweep_stale_tmps(self.path)
-        with open(os.path.join(self.path, "_SUCCESS"), "w") as f:
-            f.write("")
-
-    def abort(self, messages):
-        for m in messages:
-            if m is not None and os.path.exists(m.tmp_path):
-                os.remove(m.tmp_path)
-        _sweep_stale_tmps(self.path)
-
-
-_PART_RE = __import__("re").compile(r"^part-(\d{5})\.arrow$")
-
-
-def _sweep_stale_tmps(path: str) -> None:
-    """Remove orphaned _tmp_*.arrow left by failed/zombie task attempts
-    that never returned a commit message (abort() only sees messaged
-    tasks). By commit/abort time every live temp has been renamed or
-    removed, so anything still matching _tmp_*.arrow is garbage."""
-    if not os.path.isdir(path):
-        return
-    for f in os.listdir(path):
-        if f.startswith("_tmp_") and f.endswith(".arrow"):
-            try:
-                os.remove(os.path.join(path, f))
-            except OSError:
-                pass
+        return PartCommit(tmp)
 
 
 def _rows_to_batch(rows: list[tuple], schema: pa.Schema) -> pa.RecordBatch:
@@ -353,7 +275,7 @@ class ArrowIPCDataSource(DataSource):
         return "pyarrowipc"
 
     def schema(self):
-        first = _data_files(self.options["path"])[0]
+        first = data_files(self.options["path"], "arrow")[0]
         with pa_ipc.open_file(pa.memory_map(first)) as r:
             return arrow_to_spark_schema(
                 _normalize_schema(r.schema_arrow if hasattr(r, "schema_arrow") else r.schema)
@@ -371,15 +293,3 @@ def _normalize_schema(schema: pa.Schema) -> pa.Schema:
         pa.field(f.name, _normalize_type(f.type), f.nullable) for f in schema
     )
 
-
-def register(spark) -> None:
-    try:
-        spark.dataSource.register(ArrowIPCDataSource)
-    except Exception as e:
-        # Swallow ONLY duplicate registration; anything else (missing
-        # datasource API, import error) must surface here rather than as
-        # a later "unknown format: pyarrowipc".
-        msg = str(e).lower()
-        if "already" in msg or "exist" in msg or "duplicate" in msg:
-            return
-        raise

@@ -41,13 +41,7 @@ import os
 import struct
 import zlib
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceWriter,
-    InputPartition,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
@@ -58,6 +52,12 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+)
+
+from fraud_detection_etl_project_spark.sources.partfiles import (
+    PartCommit,
+    PartFileWriter,
+    data_files,
 )
 
 MAGIC = b"Obj\x01"
@@ -381,18 +381,6 @@ def read_ocf(path: str) -> tuple[dict, list[tuple]]:
 # ---------------------------------------------------------------------------
 
 
-def _data_files(path: str) -> list[str]:
-    """A bare .avro file, or every part file of a directory written by the
-    sink (sorted for determinism)."""
-    if os.path.isdir(path):
-        return sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".avro") and not f.startswith("_")
-        )
-    return [path]
-
-
 class BlockRangePartition(InputPartition):
     def __init__(self, path: str, offsets: list[int]):
         self.path = path
@@ -410,7 +398,7 @@ class AvroOCFReader(DataSourceReader):
         # ~equal-BYTE partitions (record counts can be uneven across
         # blocks; bytes are the cost driver)
         splits: list[tuple[str, int, int]] = []  # (file, offset, size)
-        for f in _data_files(self.path):
+        for f in data_files(self.path, "avro"):
             _schema, _codec, blocks = scan_blocks(f)
             splits.extend((f, off, sz) for off, _n, sz in blocks)
         if not splits:
@@ -444,7 +432,7 @@ class AvroOCFReader(DataSourceReader):
 
 
 # ---------------------------------------------------------------------------
-# Sink: Spark -> OCF part files with task-staged atomic commit
+# Sink: Spark -> OCF part files
 # ---------------------------------------------------------------------------
 
 _AVRO_NAMES = {
@@ -475,65 +463,28 @@ def spark_to_avro_schema(schema: StructType, name: str = "row") -> dict:
     return {"type": "record", "name": name, "fields": fields}
 
 
-class AvroCommit(WriterCommitMessage):
-    def __init__(self, tmp_path: str, n_records: int):
-        self.tmp_path = tmp_path
-        self.n_records = n_records
+class AvroOCFWriter(PartFileWriter):
+    """Each task writes one OCF task file; the commit publishes them as
+    part files (sources/partfiles.py)."""
 
-
-class AvroOCFWriter(DataSourceWriter):
-    """Each task writes a temp OCF; the driver-side commit atomically
-    publishes temps as part-N files and drops a _SUCCESS marker — the
-    stage-then-swap discipline of the repo's atomic sinks (sinks.py), so
-    a failed/retried task never leaves a half-visible file and a reader
-    sees either the old listing or the complete new one."""
+    ext = "avro"
 
     def __init__(self, options: dict, schema: StructType, overwrite: bool):
-        self.path = options["path"]
+        super().__init__(options, overwrite)
         self.codec = options.get("codec", "deflate")
         self.block_records = int(options.get("block_records", 1000))
         self.avro_schema = spark_to_avro_schema(schema)
-        self.overwrite = overwrite
 
     def write(self, iterator):
-        import uuid as _uuid
-
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(self.path, f"_tmp_{_uuid.uuid4().hex}.avro")
-        n = 0
-
-        def rows():
-            nonlocal n
-            for r in iterator:
-                n += 1
-                yield tuple(r)
-
+        tmp = self.task_file()
         write_ocf(
             tmp,
             self.avro_schema,
-            rows(),
+            (tuple(r) for r in iterator),
             codec=self.codec,
             block_records=self.block_records,
         )
-        return AvroCommit(tmp, n)
-
-    def commit(self, messages):
-        if self.overwrite:
-            for f in _data_files(self.path):
-                os.remove(f)
-            succ = os.path.join(self.path, "_SUCCESS")
-            if os.path.exists(succ):
-                os.remove(succ)
-        for i, m in enumerate(messages):
-            if m is not None:
-                os.replace(m.tmp_path, os.path.join(self.path, f"part-{i:05d}.avro"))
-        with open(os.path.join(self.path, "_SUCCESS"), "w") as f:
-            f.write("")
-
-    def abort(self, messages):
-        for m in messages:
-            if m is not None and os.path.exists(m.tmp_path):
-                os.remove(m.tmp_path)
+        return PartCommit(tmp)
 
 
 class AvroOCFDataSource(DataSource):
@@ -546,7 +497,7 @@ class AvroOCFDataSource(DataSource):
         return "pyavro"
 
     def schema(self):
-        first = _data_files(self.options["path"])[0]
+        first = data_files(self.options["path"], "avro")[0]
         avro_schema, _codec, _sync, _pos = read_header(first)
         return schema_to_spark(avro_schema)
 
@@ -556,6 +507,3 @@ class AvroOCFDataSource(DataSource):
     def writer(self, schema: StructType, overwrite: bool):
         return AvroOCFWriter(self.options, schema, overwrite)
 
-
-def register(spark) -> None:
-    spark.dataSource.register(AvroOCFDataSource)

@@ -21,8 +21,8 @@ oracle-checkable.
 The sink writes one ``.npy`` per task with a reserved fixed-width header
 that is back-patched with the final shape on close (the standard
 streaming-writer trick), so task memory stays one batch; commit is the
-same stage-then-swap + additive part numbering + stale-temp sweep as the
-Arrow IPC sink. Conformance is pinned both directions against numpy
+package's part-file protocol (sources/partfiles.py), as for the Arrow
+IPC sink. Conformance is pinned both directions against numpy
 itself (tests/test_npy.py: ``np.save`` files read here; files written
 here read back by ``np.load``).
 
@@ -35,19 +35,11 @@ seam extended to the dense-array ecosystem the north-star operators
 from __future__ import annotations
 
 import ast
-import os
 import struct
-import uuid as _uuid
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceWriter,
-    InputPartition,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -56,6 +48,12 @@ from pyspark.sql.types import (
     LongType,
     StructField,
     StructType,
+)
+
+from fraud_detection_etl_project_spark.sources.partfiles import (
+    PartCommit,
+    PartFileWriter,
+    data_files,
 )
 
 _MAGIC = b"\x93NUMPY"
@@ -97,16 +95,6 @@ def read_header(path: str) -> tuple[str, tuple[int, ...]]:
     return descr, shape
 
 
-def _data_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        return sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".npy") and not f.startswith("_")
-        )
-    return [path]
-
-
 class NpyRangePartition(InputPartition):
     def __init__(self, path: str, lo: int, hi: int, base_idx: int):
         self.path = path
@@ -122,7 +110,7 @@ class NpyReader(DataSourceReader):
         self.batch_rows = int(options.get("batch_rows", 65536))
 
     def partitions(self):
-        files = _data_files(self.path)
+        files = data_files(self.path, "npy")
         metas = []  # (file, rows, row_bytes, base_idx)
         base = 0
         for f in files:
@@ -169,12 +157,6 @@ class NpyReader(DataSourceReader):
                 yield pa.record_batch([idx, vec], names=["idx", "vec"])
 
 
-class NpyCommit(WriterCommitMessage):
-    def __init__(self, tmp_path: str, n_rows: int):
-        self.tmp_path = tmp_path
-        self.n_rows = n_rows
-
-
 _HEADER_ROOM = 128  # reserved v1 header bytes, back-patched on close
 
 
@@ -190,17 +172,18 @@ def _write_header(f, descr: str, shape: tuple[int, ...]) -> None:
     f.write((body + " " * pad + "\n").encode("latin1"))
 
 
-class NpyWriter(DataSourceWriter):
+class NpyWriter(PartFileWriter):
     """One .npy per task, streamed: header room is reserved up front,
     row batches append as raw little-endian bytes, and the true shape is
     back-patched on close — task memory stays one batch regardless of
     row count. Supports (vec array<numeric>) -> 2-D with a fixed width
     asserted across rows, or a single numeric column -> 1-D."""
 
+    ext = "npy"
+
     def __init__(self, options: dict, schema: StructType, overwrite: bool):
-        self.path = options["path"]
+        super().__init__(options, overwrite)
         self.batch_rows = int(options.get("batch_rows", 65536))
-        self.overwrite = overwrite
         data_fields = [f for f in schema.fields if f.name != "idx"]
         if len(data_fields) != 1:
             raise ValueError(
@@ -221,8 +204,7 @@ class NpyWriter(DataSourceWriter):
         self.np_dtype = np.dtype(descr)
 
     def write(self, iterator):
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(self.path, f"_tmp_{_uuid.uuid4().hex}.npy")
+        tmp = self.task_file()
         n, width = 0, None
         with open(tmp, "wb") as f:
             f.write(b"\x00" * _HEADER_ROOM)  # room for the real header
@@ -239,7 +221,7 @@ class NpyWriter(DataSourceWriter):
         with open(tmp, "r+b") as f:
             shape = (n, width or 0) if self.two_d else (n,)
             _write_header(f, self.descr, shape)
-        return NpyCommit(tmp, n)
+        return PartCommit(tmp)
 
     def _flush(self, f, buf: list, width: int | None) -> int | None:
         if self.two_d:
@@ -256,53 +238,6 @@ class NpyWriter(DataSourceWriter):
         f.write(np.ascontiguousarray(arr).tobytes())
         return width
 
-    def commit(self, messages):
-        import re
-
-        part_re = re.compile(r"^part-(\d{5})\.npy$")
-        if self.overwrite:
-            for f in _data_files(self.path):
-                os.remove(f)
-            succ = os.path.join(self.path, "_SUCCESS")
-            if os.path.exists(succ):
-                os.remove(succ)
-            start = 0
-        else:
-            start = 1 + max(
-                (
-                    int(m.group(1))
-                    for f in _data_files(self.path)
-                    if (m := part_re.match(os.path.basename(f)))
-                ),
-                default=-1,
-            )
-        for i, m in enumerate(messages):
-            if m is not None:
-                os.replace(m.tmp_path, os.path.join(self.path, f"part-{start + i:05d}.npy"))
-        _sweep_stale_tmps(self.path)
-        with open(os.path.join(self.path, "_SUCCESS"), "w") as f:
-            f.write("")
-
-    def abort(self, messages):
-        for m in messages:
-            if m is not None and os.path.exists(m.tmp_path):
-                os.remove(m.tmp_path)
-        _sweep_stale_tmps(self.path)
-
-
-def _sweep_stale_tmps(path: str) -> None:
-    """Failed/zombie task attempts leave _tmp_*.npy with no commit
-    message; by commit/abort time every live temp is renamed or removed,
-    so survivors are garbage (same contract as the Arrow IPC sink)."""
-    if not os.path.isdir(path):
-        return
-    for f in os.listdir(path):
-        if f.startswith("_tmp_") and f.endswith(".npy"):
-            try:
-                os.remove(os.path.join(path, f))
-            except OSError:
-                pass
-
 
 class NpyDataSource(DataSource):
     """``spark.read.format("pynpy").option("path", p).load()`` — schema
@@ -314,7 +249,7 @@ class NpyDataSource(DataSource):
         return "pynpy"
 
     def schema(self):
-        files = _data_files(self.options["path"])
+        files = data_files(self.options["path"], "npy")
         if not files:
             raise FileNotFoundError(
                 f"no .npy files under {self.options['path']!r}"
@@ -336,14 +271,4 @@ class NpyDataSource(DataSource):
 
     def writer(self, schema: StructType, overwrite: bool):
         return NpyWriter(self.options, schema, overwrite)
-
-
-def register(spark) -> None:
-    try:
-        spark.dataSource.register(NpyDataSource)
-    except Exception as e:
-        msg = str(e).lower()
-        if "already" in msg or "exist" in msg or "duplicate" in msg:
-            return
-        raise
 

@@ -115,33 +115,3 @@ class SyntheticRowsDataSourceStreaming(SyntheticRowsDataSource):
     def simpleStreamReader(self, schema) -> SyntheticRowsStreamReader:
         return SyntheticRowsStreamReader(self.options)
 
-
-def register(spark) -> None:
-    """Idempotently register both sources under their format names.
-
-    The DataSource classes are pickled and re-imported in separate Python
-    processes: executor workers (batch reads — covered by ``addPyFile``)
-    and the driver-side streaming-source runner, which does NOT see
-    addPyFile paths. Registering this module for by-value pickling makes
-    the classes self-contained in the pickle stream, so registration works
-    from any launcher regardless of cwd/PYTHONPATH — the same recipe that
-    ships a custom connector to a cluster without installing the package
-    on every node.
-    """
-    import sys
-
-    try:
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass  # older cloudpickle without by-value API: fall back to by-ref
-    for ds in (SyntheticRowsDataSource, SyntheticRowsDataSourceStreaming):
-        try:
-            spark.dataSource.register(ds)
-        except Exception as e:
-            # only duplicate registration is benign; anything else (missing
-            # datasource API, runtime failure) must surface here, not later
-            # as a confusing "unknown format" error (ADVICE r4 pattern)
-            if "already" not in str(e).lower() and "exists" not in str(e).lower():
-                raise

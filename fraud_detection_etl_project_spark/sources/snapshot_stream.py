@@ -296,21 +296,3 @@ class SnapshotTableDataSource(DataSource):
     def streamReader(self, schema) -> SnapshotStreamReader:
         return SnapshotStreamReader(self.options)
 
-
-def register(spark) -> None:
-    """Idempotently register the source. Pickle-by-value keeps the class
-    self-contained for the driver-side streaming runner (which does not
-    see addPyFile paths) — same recipe as sources/pydatasource.py."""
-    import sys
-
-    try:
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass  # older cloudpickle without by-value API: fall back to by-ref
-    try:
-        spark.dataSource.register(SnapshotTableDataSource)
-    except Exception as e:
-        if "already" not in str(e).lower() and "exists" not in str(e).lower():
-            raise

@@ -28,9 +28,10 @@ is a hard error with the byte offset, never silently skipped). Decode
 is Python by necessity (it IS the datasource), but stays streaming:
 one record in memory at a time.
 
-The sink writes one shard per task (stage-then-swap + _SUCCESS, additive
-append numbering, stale-temp sweep — the Arrow IPC/NPY discipline) with
-spec CRCs, so TensorFlow's own reader accepts the output. CRC32C is
+The sink writes one shard per task through the package's part-file
+protocol (sources/partfiles.py: task files renamed into place by the
+driver, additive append numbering, stale-temp sweep, _SUCCESS) with spec
+CRCs, so TensorFlow's own reader accepts the output. CRC32C is
 pinned to the published Castagnoli test vectors
 (tests/test_tfrecord.py) since TF itself is not installed here.
 
@@ -40,17 +41,9 @@ training-data container the north-star curation operators feed.
 
 from __future__ import annotations
 
-import os
 import struct
-import uuid as _uuid
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceWriter,
-    InputPartition,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -65,6 +58,11 @@ from pyspark.sql.types import (
 from fraud_detection_etl_project_spark.functions.protowire import (
     decode_varint,
     encode_varint,
+)
+from fraud_detection_etl_project_spark.sources.partfiles import (
+    PartCommit,
+    PartFileWriter,
+    data_files,
 )
 
 # ---------------------------------------------------------------------------
@@ -272,16 +270,6 @@ _SCHEMA = StructType(
 )
 
 
-def _data_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        return sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if (f.endswith(".tfrecord") or ".tfrecord-" in f) and not f.startswith("_")
-        )
-    return [path]
-
-
 class TFRecordFilePartition(InputPartition):
     def __init__(self, path: str, base_idx: int):
         self.path = path
@@ -327,7 +315,7 @@ class TFRecordReader(DataSourceReader):
         self.idx_bases = str(options.get("idx_bases", "true")).lower() != "false"
 
     def partitions(self):
-        files = _data_files(self.path)
+        files = data_files(self.path, "tfrecord", shards=True)
         if not files:
             return [TFRecordFilePartition("", 0)]  # empty dir -> empty frame
         base = 0
@@ -346,16 +334,12 @@ class TFRecordReader(DataSourceReader):
             yield (partition.base_idx + i, bf, ff, i64f)
 
 
-class TFRecordCommit(WriterCommitMessage):
-    def __init__(self, tmp_path: str, n_records: int):
-        self.tmp_path = tmp_path
-        self.n_records = n_records
+class TFRecordWriter(PartFileWriter):
+    ext = "tfrecord"
+    shards = True
 
-
-class TFRecordWriter(DataSourceWriter):
     def __init__(self, options: dict, schema: StructType, overwrite: bool):
-        self.path = options["path"]
-        self.overwrite = overwrite
+        super().__init__(options, overwrite)
         names = [f.name for f in schema.fields]
         expected = {"bytes_features", "float_features", "int64_features"}
         if not expected.issubset(set(names)):
@@ -364,9 +348,7 @@ class TFRecordWriter(DataSourceWriter):
             )
 
     def write(self, iterator):
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(self.path, f"_tmp_{_uuid.uuid4().hex}.tfrecord")
-        n = 0
+        tmp = self.task_file()
         with open(tmp, "wb") as f:
             for row in iterator:
                 payload = encode_example(
@@ -375,54 +357,7 @@ class TFRecordWriter(DataSourceWriter):
                     {k: list(v) for k, v in (row["int64_features"] or {}).items()},
                 )
                 write_record(f, payload)
-                n += 1
-        return TFRecordCommit(tmp, n)
-
-    def commit(self, messages):
-        import re
-
-        part_re = re.compile(r"^part-(\d{5})\.tfrecord$")
-        if self.overwrite:
-            for f in _data_files(self.path):
-                os.remove(f)
-            succ = os.path.join(self.path, "_SUCCESS")
-            if os.path.exists(succ):
-                os.remove(succ)
-            start = 0
-        else:
-            start = 1 + max(
-                (
-                    int(m.group(1))
-                    for f in _data_files(self.path)
-                    if (m := part_re.match(os.path.basename(f)))
-                ),
-                default=-1,
-            )
-        for i, m in enumerate(messages):
-            if m is not None:
-                os.replace(
-                    m.tmp_path, os.path.join(self.path, f"part-{start + i:05d}.tfrecord")
-                )
-        _sweep_stale_tmps(self.path)
-        with open(os.path.join(self.path, "_SUCCESS"), "w") as f:
-            f.write("")
-
-    def abort(self, messages):
-        for m in messages:
-            if m is not None and os.path.exists(m.tmp_path):
-                os.remove(m.tmp_path)
-        _sweep_stale_tmps(self.path)
-
-
-def _sweep_stale_tmps(path: str) -> None:
-    if not os.path.isdir(path):
-        return
-    for f in os.listdir(path):
-        if f.startswith("_tmp_") and f.endswith(".tfrecord"):
-            try:
-                os.remove(os.path.join(path, f))
-            except OSError:
-                pass
+        return PartCommit(tmp)
 
 
 class TFRecordDataSource(DataSource):
@@ -441,12 +376,3 @@ class TFRecordDataSource(DataSource):
     def writer(self, schema: StructType, overwrite: bool):
         return TFRecordWriter(self.options, schema, overwrite)
 
-
-def register(spark) -> None:
-    try:
-        spark.dataSource.register(TFRecordDataSource)
-    except Exception as e:
-        msg = str(e).lower()
-        if "already" in msg or "exist" in msg or "duplicate" in msg:
-            return
-        raise

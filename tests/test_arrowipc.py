@@ -22,6 +22,7 @@ import pyarrow.ipc as pa_ipc
 import pytest
 
 from fraud_detection_etl_project_spark.sources import arrowipc as AI
+from fraud_detection_etl_project_spark.sources.partfiles import register
 
 
 def _tmpdir():
@@ -63,7 +64,7 @@ def test_source_reads_pyarrow_file_multibatch(spark):
         t = _sample_table(100)
         with pa_ipc.new_file(path, t.schema) as w:
             w.write_table(t, max_chunksize=7)  # 15 batches
-        AI.register(spark)
+        register(spark, AI.ArrowIPCDataSource)
         df = spark.read.format("pyarrowipc").option("path", path).option("parts", 4).load()
         rows = {r["id"]: r for r in df.collect()}
         assert len(rows) == 100
@@ -108,7 +109,7 @@ def test_source_normalizes_large_string(spark):
         )
         with pa_ipc.new_file(path, t.schema) as w:
             w.write_table(t)
-        AI.register(spark)
+        register(spark, AI.ArrowIPCDataSource)
         df = spark.read.format("pyarrowipc").option("path", path).load()
         assert df.schema["s"].dataType.typeName() == "string"
         got = {r["id"]: r["s"] for r in df.collect()}
@@ -126,7 +127,7 @@ def test_sink_roundtrip_and_pyarrow_readable(spark):
     d = _tmpdir()
     try:
         out = os.path.join(d, "out")
-        AI.register(spark)
+        register(spark, AI.ArrowIPCDataSource)
         src = spark.createDataFrame(
             [(i, float(i) / 4, None if i % 5 == 0 else f"n{i}") for i in range(50)],
             "id bigint, v double, name string",
@@ -161,7 +162,7 @@ def test_sink_overwrite_replaces_listing(spark):
     d = _tmpdir()
     try:
         out = os.path.join(d, "out")
-        AI.register(spark)
+        register(spark, AI.ArrowIPCDataSource)
         big = spark.createDataFrame([(i,) for i in range(40)], "id bigint").repartition(4)
         big.write.format("pyarrowipc").option("path", out).mode("overwrite").save()
         small = spark.createDataFrame([(1,), (2,)], "id bigint").repartition(1)
@@ -182,53 +183,6 @@ def test_schema_mapping_rejects_unsupported():
         AI.spark_to_arrow_schema(StructType([StructField("d", DecimalType(10, 2))]))
 
 
-def test_sink_append_is_additive(spark):
-    """ADVICE r4: append mode must number new parts after the existing max
-    part index — never clobber same-numbered old parts."""
-    d = _tmpdir()
-    try:
-        out = os.path.join(d, "out")
-        AI.register(spark)
-        first = spark.createDataFrame([(i,) for i in range(10)], "id bigint").repartition(2)
-        first.write.format("pyarrowipc").option("path", out).mode("overwrite").save()
-        second = spark.createDataFrame([(i,) for i in range(100, 110)], "id bigint").repartition(2)
-        second.write.format("pyarrowipc").option("path", out).mode("append").save()
-        parts = sorted(f for f in os.listdir(out) if f.endswith(".arrow"))
-        assert parts == [
-            "part-00000.arrow",
-            "part-00001.arrow",
-            "part-00002.arrow",
-            "part-00003.arrow",
-        ]
-        back = spark.read.format("pyarrowipc").option("path", out).load()
-        assert sorted(r["id"] for r in back.collect()) == list(range(10)) + list(
-            range(100, 110)
-        )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def test_commit_sweeps_stale_tmp_files(spark):
-    """ADVICE r4: orphaned _tmp_*.arrow from zombie task attempts must be
-    removed at commit time, not accumulate forever."""
-    d = _tmpdir()
-    try:
-        out = os.path.join(d, "out")
-        os.makedirs(out)
-        stale = os.path.join(out, "_tmp_deadbeef.arrow")
-        with open(stale, "wb") as f:
-            f.write(b"orphan")
-        AI.register(spark)
-        df = spark.createDataFrame([(1,), (2,)], "id bigint").repartition(1)
-        df.write.format("pyarrowipc").option("path", out).mode("append").save()
-        files = os.listdir(out)
-        assert not any(f.startswith("_tmp_") for f in files)
-        back = spark.read.format("pyarrowipc").option("path", out).load()
-        assert sorted(r["id"] for r in back.collect()) == [1, 2]
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def test_source_normalizes_nested_large_types(spark):
     """ADVICE r4: list<large_string> / large_list<large_string> (polars
     defaults) must normalize RECURSIVELY to list<string>."""
@@ -246,7 +200,7 @@ def test_source_normalizes_nested_large_types(spark):
         )
         with pa_ipc.new_file(path, t.schema) as w:
             w.write_table(t)
-        AI.register(spark)
+        register(spark, AI.ArrowIPCDataSource)
         df = spark.read.format("pyarrowipc").option("path", path).load()
         assert df.schema["tags"].dataType.simpleString() == "array<string>"
         assert df.schema["mixed"].dataType.simpleString() == "array<string>"

@@ -15,6 +15,7 @@ import tempfile
 import pytest
 
 from fraud_detection_etl_project_spark.sources import avro as A
+from fraud_detection_etl_project_spark.sources.partfiles import register
 
 SCHEMA = {
     "type": "record",
@@ -197,13 +198,13 @@ def test_our_reader_reads_jvm_files(spark):
 
 
 def test_spark_datasource_sink_roundtrip_and_overwrite(spark, tmp_path):
-    """df.write.format("pyavro"): one OCF part file per task, staged as
-    temps and atomically published with _SUCCESS on commit; overwrite
+    """df.write.format("pyavro"): one OCF part file per task, written as
+    a task file and renamed into place with _SUCCESS on commit; overwrite
     drops prior parts. Round-trip through the reader must be exact,
     including nullable-union columns."""
     import pyspark.sql.functions as F
 
-    A.register(spark)
+    register(spark, A.AvroOCFDataSource)
     d = str(tmp_path / "out")
     df = spark.range(0, 3000, 1, 5).select(
         "id",
@@ -219,7 +220,7 @@ def test_spark_datasource_sink_roundtrip_and_overwrite(spark, tmp_path):
     assert not any(n.startswith("_tmp_") for n in names)
     back = spark.read.format("pyavro").option("path", d).load()
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
-    # overwrite publishes a complete new listing, old parts gone
+    # overwrite removes the old parts
     df.limit(70).write.format("pyavro").option("path", d).mode("overwrite").save()
     assert spark.read.format("pyavro").option("path", d).load().count() == 70
 
@@ -236,7 +237,7 @@ def test_spark_datasource_reads_blocks_in_parallel(spark):
     p = _tmp()
     try:
         A.write_ocf(p, SCHEMA, rows, codec="deflate", block_records=250)
-        A.register(spark)
+        register(spark, A.AvroOCFDataSource)
         df = spark.read.format("pyavro").option("path", p).option("parts", 4).load()
         assert [f.name for f in df.schema.fields] == [
             "id", "price", "status", "clerk", "flag",

@@ -53,9 +53,10 @@ def test_inferred_schema_clean_input(spark, tmp_path):
 def test_python_datasource_partition_planning(spark):
     """The custom Python DataSource plans real partitions: 'parts' range
     splits, all rows exactly once, deterministic across reads."""
-    from fraud_detection_etl_project_spark.sources.pydatasource import register
+    from fraud_detection_etl_project_spark.sources.partfiles import register
+    from fraud_detection_etl_project_spark.sources.pydatasource import SyntheticRowsDataSource
 
-    register(spark)
+    register(spark, SyntheticRowsDataSource)
     df = spark.read.format("syntheticrows").option("n", 100).option("parts", 5).load()
     assert df.rdd.getNumPartitions() == 5
     rows = df.collect()

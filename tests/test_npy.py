@@ -11,11 +11,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from fraud_detection_etl_project_spark.sources import npy as N
+from fraud_detection_etl_project_spark.sources.partfiles import register
 
 
 @pytest.fixture()
 def reg(spark):
-    N.register(spark)
+    register(spark, N.NpyDataSource)
     return spark
 
 
@@ -79,16 +80,6 @@ def test_sink_roundtrip_via_np_load(reg, tmp_path):
     # and our own source reads the sink's output
     df2 = _read(reg, out)
     assert df2.count() == 1000
-
-
-def test_sink_append_is_additive(reg, tmp_path):
-    out = str(tmp_path / "out")
-    one = reg.range(0, 5).select(F.col("id").cast("double").alias("value")).coalesce(1)
-    one.write.format("pynpy").option("path", out).mode("overwrite").save()
-    one.write.format("pynpy").option("path", out).mode("append").save()
-    parts = sorted(f for f in os.listdir(out) if f.endswith(".npy"))
-    assert len(parts) == 2 and parts[0] != parts[1]
-    assert _read(reg, out).count() == 10
 
 
 def test_sink_rejects_ragged_vectors(reg, tmp_path):

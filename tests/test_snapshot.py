@@ -619,13 +619,14 @@ def test_mor_stream_skips_metadata_only_commits(spark, tmp_path):
     """The snapshot streaming source tolerates a mor-delete commit in the
     history (adds no files -> empty batch), preserving insert-only
     semantics."""
-    from fraud_detection_etl_project_spark.sources.snapshot_stream import register as reg_stream
+    from fraud_detection_etl_project_spark.sources.partfiles import register
+    from fraud_detection_etl_project_spark.sources.snapshot_stream import SnapshotTableDataSource
 
     t = str(tmp_path / "tbl")
     S.overwrite(_nums(spark, 0, 3), t)                                  # v1
     S.delete_keys_mor(spark, t, spark.createDataFrame([(0,)], "n: long"))  # v2
     S.append(_nums(spark, 5, 7), t)                                     # v3
-    reg_stream(spark)
+    register(spark, SnapshotTableDataSource)
     out = str(tmp_path / "out")
     ck = str(tmp_path / "ck")
     (
@@ -742,7 +743,8 @@ def test_branch_concurrency_check_is_per_ref(spark, tmp_path):
 
 def test_stream_ignores_branch_commits(spark, tmp_path):
     """A capped stream over main never ingests interleaved branch files."""
-    from fraud_detection_etl_project_spark.sources.snapshot_stream import register as reg_stream
+    from fraud_detection_etl_project_spark.sources.partfiles import register
+    from fraud_detection_etl_project_spark.sources.snapshot_stream import SnapshotTableDataSource
 
     t = str(tmp_path / "tbl")
     S.overwrite(_nums(spark, 0, 2), t)                       # v1
@@ -750,7 +752,7 @@ def test_stream_ignores_branch_commits(spark, tmp_path):
     S.append(_nums(spark, 100, 103), t, branch="side")       # v2 (branch)
     S.append(_nums(spark, 5, 7), t)                          # v3 (main)
     S.append(_nums(spark, 8, 9), t)                          # v4 (main)
-    reg_stream(spark)
+    register(spark, SnapshotTableDataSource)
     out = str(tmp_path / "out")
     ck = str(tmp_path / "ck")
     (

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from fraud_detection_etl_project_spark import snapshot as S
 from fraud_detection_etl_project_spark.sources import snapshot_stream as SS
+from fraud_detection_etl_project_spark.sources.partfiles import register
 
 
 def _kv(spark, lo, hi):
@@ -18,7 +19,7 @@ def _kv(spark, lo, hi):
 
 
 def _drain(spark, src_tbl, ckpt, sink_name, starting_version=None):
-    SS.register(spark)
+    register(spark, SS.SnapshotTableDataSource)
     reader = spark.readStream.format("pysnapshot").option("path", src_tbl)
     if starting_version is not None:
         reader = reader.option("startingVersion", str(starting_version))
@@ -51,7 +52,7 @@ def test_stream_resumes_from_checkpoint_only_new_versions(spark, tmp_path):
     t = str(tmp_path / "tbl")
     ckpt = str(tmp_path / "c2")
     S.overwrite(_kv(spark, 0, 4), t)
-    SS.register(spark)
+    register(spark, SS.SnapshotTableDataSource)
     seen: list[tuple] = []
 
     def run():
@@ -105,7 +106,7 @@ def test_max_versions_per_trigger_paces_batches(spark, tmp_path):
     S.overwrite(_kv(spark, 0, 3), t)           # v1
     S.append(_kv(spark, 3, 5), t)              # v2
     S.append(_kv(spark, 5, 6), t)              # v3
-    SS.register(spark)
+    register(spark, SS.SnapshotTableDataSource)
     batches: list[set] = []
 
     def sink(df, _bid):
@@ -151,7 +152,7 @@ def test_streaming_upsert_merge_exactly_once(spark, tmp_path):
         spark.createDataFrame([(2, -2), (3, -3), (100, 1), (101, 2)], "k long, v long"),
         src,
     )
-    SS.register(spark)
+    register(spark, SS.SnapshotTableDataSource)
     writer = S.foreach_batch_merger(dst, ["k"])
     q = (
         spark.readStream.format("pysnapshot")
@@ -187,7 +188,7 @@ def test_rate_limited_stream_restart_neither_stalls_nor_duplicates(spark, tmp_pa
     ckpt = str(tmp_path / "c7")
     S.overwrite(_kv(spark, 0, 3), t)
     S.append(_kv(spark, 3, 5), t)
-    SS.register(spark)
+    register(spark, SS.SnapshotTableDataSource)
     seen: list[int] = []
 
     def run(nsec):
@@ -226,7 +227,7 @@ def test_table_to_table_pipeline_exactly_once(spark, tmp_path):
     dst = str(tmp_path / "dst")
     ckpt = str(tmp_path / "c5")
     S.overwrite(_kv(spark, 0, 10), src)
-    SS.register(spark)
+    register(spark, SS.SnapshotTableDataSource)
 
     def run():
         q = (
@@ -325,7 +326,7 @@ def test_streaming_cdc_merge_with_deletes_exactly_once(spark, tmp_path):
         ),
         src,
     )
-    SS.register(spark)
+    register(spark, SS.SnapshotTableDataSource)
     writer = S.foreach_batch_cdc_merger(dst, ["k"])
     q = (
         spark.readStream.format("pysnapshot")

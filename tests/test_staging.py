@@ -79,6 +79,24 @@ def test_staged_dirs_live_as_long_as_their_process(tmp_path):
     assert Path(second).parent != Path(first).parent
 
 
+def test_package_zip_lives_as_long_as_its_process(tmp_path):
+    """The package zip shipped to Python workers is built under a temp
+    dir its process removes at exit, so no zip outlives the run."""
+    code = "from fraud_detection_etl_project_spark.sources import parquet; print(parquet._package_zip())"
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=REPO,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    z = Path(out.stdout.strip().splitlines()[-1])
+    assert z.suffix == ".zip" and tmp_path in z.parents
+    assert not z.exists()
+    assert list(tmp_path.iterdir()) == []
+
+
 def _docstrings(tree: ast.AST) -> set[int]:
     owners = (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
     return {
@@ -92,8 +110,8 @@ def _docstrings(tree: ast.AST) -> set[int]:
 
 
 def test_staging_only_through_the_helper():
-    """The package makes temp dirs only in ``plans/staging.py`` (and the
-    source-keyed package zip), and no plan trusts a sentinel file."""
+    """The package makes temp dirs only in ``plans/staging.py`` (and for
+    the package zip), and no plan trusts a sentinel file."""
     temp_call = re.compile(r"\b(?:gettempdir|mkdtemp)\(")
     users = sorted(
         p.relative_to(PKG).as_posix() for p in PKG.rglob("*.py") if temp_call.search(p.read_text())

@@ -210,9 +210,12 @@ def test_python_stream_source_offset_walk(spark, tmp_path):
     each availableNow drain with a shared checkpoint advances the cursor
     by one batch (600 rows), never re-delivering, until the bounded
     stream is exhausted — the queue-cursor replay contract."""
-    from fraud_detection_etl_project_spark.sources.pydatasource import register
+    from fraud_detection_etl_project_spark.sources.partfiles import register
+    from fraud_detection_etl_project_spark.sources.pydatasource import (
+        SyntheticRowsDataSourceStreaming,
+    )
 
-    register(spark)
+    register(spark, SyntheticRowsDataSourceStreaming)
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
 

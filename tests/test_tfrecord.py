@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fraud_detection_etl_project_spark.sources import tfrecord as T
+from fraud_detection_etl_project_spark.sources.partfiles import register
 
 
 def test_crc32c_published_vectors():
@@ -76,7 +77,7 @@ def test_example_codec_accepts_unpacked_scalars():
 
 @pytest.fixture()
 def reg(spark):
-    T.register(spark)
+    register(spark, T.TFRecordDataSource)
     return spark
 
 
@@ -116,20 +117,6 @@ def test_multi_shard_idx_is_cumulative(reg, tmp_path):
     back = reg.read.format("pytfrecord").option("path", out).load()
     idxs = sorted(r["idx"] for r in back.collect())
     assert idxs == list(range(50))
-
-
-def test_sink_append_additive(reg, tmp_path):
-    out = str(tmp_path / "out")
-    df = reg.range(0, 5).coalesce(1).select(
-        F.create_map(F.lit("t"), F.array(F.encode(F.col("id").cast("string"), "utf-8")))
-        .alias("bytes_features"),
-        F.create_map().cast("map<string,array<float>>").alias("float_features"),
-        F.create_map().cast("map<string,array<bigint>>").alias("int64_features"),
-    )
-    df.write.format("pytfrecord").option("path", out).mode("overwrite").save()
-    df.write.format("pytfrecord").option("path", out).mode("append").save()
-    assert len([f for f in os.listdir(out) if f.endswith(".tfrecord")]) == 2
-    assert reg.read.format("pytfrecord").option("path", out).load().count() == 10
 
 
 def test_count_records_seeks_headers_only(tmp_path):
