@@ -1,25 +1,24 @@
 """FileIO seam for the snapshot table's COMMIT PROTOCOL (snapshot.py).
 
-The table format's atomicity needs exactly three primitives beyond
-plain read/list/delete:
+The table format's atomicity needs two primitives beyond plain
+read/exists/delete:
 
 - ``put_if_absent(path, data)`` — create a file with its FULL content
   visible atomically, failing if the path already exists. This is the
   whole concurrency story: manifest version numbers and per-ref head
   generations are both claimed with it, so two writers racing for the
   same (ref, parent) transition collide on the same object name and
-  exactly one wins.
-- ``write_atomic(path, data)`` — last-writer-wins full-content publish
-  (no torn reads). Used only for non-authoritative mirrors and the ref
-  birth records' tmp staging.
+  exactly one wins. It is also the only way the protocol writes a
+  file: every other file (stats shards, ref birth records, the
+  scan-time candidate list) is likewise created once and never
+  rewritten.
 - ``listdir(path)`` — enumerate a directory/prefix (empty when absent).
 
 Backends:
 
 - :class:`PosixFileIO` — the default. ``put_if_absent`` is tmp-file +
   ``os.link`` (hard links fail with EEXIST atomically on POSIX, and the
-  link target carries the tmp file's fully-written content);
-  ``write_atomic`` is tmp + ``os.replace``.
+  link target carries the tmp file's fully-written content).
 - :class:`MemoryFileIO` — an object-store MODEL for tests: a flat
   key→bytes map where ``put_if_absent`` is a conditional PUT
   (``If-None-Match: *`` in S3 terms) and there is NO rename and NO
@@ -55,9 +54,6 @@ class FileIO:
     def read_bytes(self, path: str) -> bytes:
         raise NotImplementedError
 
-    def write_atomic(self, path: str, data: bytes) -> None:
-        raise NotImplementedError
-
     def put_if_absent(self, path: str, data: bytes) -> bool:
         """Create ``path`` with ``data`` iff it does not exist. Returns
         True on success, False if the path already existed. Content is
@@ -84,18 +80,14 @@ class FileIO:
     def read_text(self, path: str) -> str:
         return self.read_bytes(path).decode("utf-8")
 
-    def write_text_atomic(self, path: str, text: str) -> None:
-        self.write_atomic(path, text.encode("utf-8"))
-
     def put_text_if_absent(self, path: str, text: str) -> bool:
         return self.put_if_absent(path, text.encode("utf-8"))
 
 
 class PosixFileIO(FileIO):
-    """Local-filesystem backend: link-based conditional create,
-    replace-based atomic publish. This is the tested default in the
-    sandbox; HDFS has the same primitives (create-no-overwrite,
-    rename-overwrite)."""
+    """Local-filesystem backend: link-based conditional create. This is
+    the tested default; HDFS has the same primitive
+    (create-no-overwrite)."""
 
     def read_bytes(self, path: str) -> bytes:
         with open(path, "rb") as f:
@@ -103,21 +95,14 @@ class PosixFileIO(FileIO):
 
     @staticmethod
     def _tmp_for(path: str) -> str:
-        """Same-directory staging name (os.link/replace need one
-        filesystem) that no lister can mistake for a live object: it
-        starts with '.', and every directory the snapshot protocol lists
-        (manifests, heads, refs, data) filters dot-names out. A tmp named
+        """Same-directory staging name (os.link needs one filesystem)
+        that no lister can mistake for a live object: it starts with '.',
+        and every directory the snapshot protocol lists (manifests,
+        heads, refs, data) filters dot-names out. A tmp named
         '<target>.tmpXX' transiently satisfied startswith('g') /
         endswith('.json') filters and crashed concurrent readers."""
         d, base = os.path.split(path)
         return os.path.join(d, f".tmp-{uuid.uuid4().hex}-{base}")
-
-    def write_atomic(self, path: str, data: bytes) -> None:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = self._tmp_for(path)
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.replace(tmp, path)
 
     def put_if_absent(self, path: str, data: bytes) -> bool:
         os.makedirs(os.path.dirname(path), exist_ok=True)
@@ -169,10 +154,6 @@ class MemoryFileIO(FileIO):
             if path not in self._objects:
                 raise FileNotFoundError(path)
             return self._objects[path]
-
-    def write_atomic(self, path: str, data: bytes) -> None:
-        with self._lock:
-            self._objects[path] = data
 
     def put_if_absent(self, path: str, data: bytes) -> bool:
         hook = self.before_put_if_absent

@@ -4,9 +4,11 @@ files with atomic version commits — the minimal table-format layer
 100 TB parquet store needs for safe operations:
 
 - **Atomic commits.** A writer stages data files under unique names,
-  then publishes ONE manifest file and flips the ``CURRENT`` pointer
-  with ``os.replace`` (atomic on POSIX). A reader resolves
-  ``CURRENT`` -> manifest -> file list once at plan time; it either
+  claims ONE new manifest ``v<N>.json``, then moves the ref (``CURRENT``
+  or a branch) with a compare-and-swap on its generation log: one
+  conditional create of the next generation entry, whose content names
+  the manifest (see ``_publish``). A reader resolves the ref's newest
+  generation -> manifest -> file list once at plan time; it either
   sees the old complete version or the new complete version, never a
   half-written directory listing. This is what plain
   ``mode("overwrite").parquet(path)`` cannot give: Spark's overwrite
@@ -18,10 +20,10 @@ files with atomic version commits — the minimal table-format layer
 - **Compaction without downtime.** ``compact`` rewrites the current
   file set into fewer files as a NEW version; readers at older
   versions are untouched (files are immutable, commits only add).
-- **Optimistic concurrency.** Commit re-checks that ``CURRENT`` still
-  names the parent it planned against and refuses otherwise — the
-  single-table writer-wins discipline; retries re-plan on the new
-  current version.
+- **Optimistic concurrency.** A commit claims the generation after the
+  one it read with its parent; a writer that lost that claim, or whose
+  ref had already moved past its parent, refuses — the single-table
+  writer-wins discipline; retries re-plan on the new current version.
 - **Data skipping.** Every staged file carries footer-derived per-column
   min/max/null-count stats in the manifest; ``scan`` prunes files whose
   stat range cannot satisfy a predicate BEFORE Spark ever plans them,
@@ -43,7 +45,7 @@ files with atomic version commits — the minimal table-format layer
   write-cheap complement to copy-on-write ``delete``.
 - **Branches, tags, write-audit-publish.** Named refs fork writable
   branches (``create_branch`` + ``append(..., branch=)``) whose commits
-  are invisible to main until ``fast_forward`` flips CURRENT to the
+  are invisible to main until ``fast_forward`` moves CURRENT to the
   branch head (true-ancestor-checked, O(1) metadata); ``create_tag``
   pins immutable versions. Version numbers are table-global; lineage is
   the manifest PARENT CHAIN, which the change feed, the streaming
@@ -132,15 +134,14 @@ def _heads_dir(table_path: str, ref: str, incarnation: str | None = None) -> str
 
 def _ref_incarnation(table_path: str, ref: str) -> str | None:
     """The incarnation id recorded in a ref's birth record (None for
-    CURRENT, legacy records without one, or absent refs)."""
+    CURRENT or absent refs)."""
     if ref == _CURRENT:
         return None
     io = resolve_io(table_path)
     p = _ref_path(table_path, ref)
     if not io.exists(p):
         return None
-    parts = io.read_text(p).strip().split()
-    return parts[2] if len(parts) > 2 else None
+    return io.read_text(p).split()[2]
 
 
 def _gen_name(gen: int) -> str:
@@ -157,10 +158,10 @@ def _parse_gen(name: str) -> int:
 
 def _gen_head(table_path: str, ref: str) -> tuple[int, int | None]:
     """(generation, version) of a ref's CAS log head; (0, None) if the
-    ref has no generation entries (unborn, or a pre-upgrade table). The
-    list-then-read is retried because vacuum may prune a generation entry
-    between the listing and the content read (it always keeps the
-    current max, so a retry converges)."""
+    ref has no generation entries (an empty table, or a branch with no
+    commits yet). The list-then-read is retried because vacuum may
+    prune a generation entry between the listing and the content read
+    (it always keeps the current max, so a retry converges)."""
     io = resolve_io(table_path)
     d = _heads_dir(table_path, ref, _ref_incarnation(table_path, ref))
     for _attempt in range(64):
@@ -176,22 +177,16 @@ def _gen_head(table_path: str, ref: str) -> tuple[int, int | None]:
 
 
 def _head(table_path: str, ref: str) -> tuple[int, int | None]:
-    """A ref's head as (generation, version), falling back to the
-    legacy single-file pointers (CURRENT / refs/<name>) for tables
-    written before the CAS log existed — their first new-format commit
-    starts the generation log at g1."""
+    """A ref's head as (generation, version). A branch with no commits
+    yet has no generation log: it is at the version its birth record
+    names, generation 0, and its first commit claims g1."""
     gen, v = _gen_head(table_path, ref)
-    if v is not None:
+    if v is not None or ref == _CURRENT:
         return gen, v
     io = resolve_io(table_path)
-    if ref == _CURRENT:
-        cur = os.path.join(table_path, _MANIFEST_DIR, _CURRENT)
-        if io.exists(cur):
-            return 0, _parse_version(io.read_text(cur).strip())
-        return 0, None
     p = _ref_path(table_path, ref)
     if io.exists(p):
-        return 0, _parse_version(io.read_text(p).strip().split()[0])
+        return 0, _parse_version(io.read_text(p).split()[0])
     return 0, None
 
 
@@ -254,11 +249,9 @@ def _read_ref(table_path: str, name: str) -> tuple[int, str] | None:
     p = _ref_path(table_path, name)
     if not io.exists(p):
         return None
-    parts = io.read_text(p).strip().split()
-    birth = _parse_version(parts[0])
-    kind = parts[1] if len(parts) > 1 else "branch"
+    birth, kind = io.read_text(p).split()[:2]
     _gen, v = _gen_head(table_path, name)
-    return (birth if v is None else v), kind
+    return (_parse_version(birth) if v is None else v), kind
 
 
 def branch_version(table_path: str, name: str) -> int | None:
@@ -374,18 +367,7 @@ def fast_forward(table_path: str, branch: str) -> int:
             f"CURRENT moved past v{cur} during fast-forward of {branch!r} "
             "— replan and retry"
         )
-    _mirror_current(table_path, head)
     return head
-
-
-def _mirror_current(table_path: str, version: int) -> None:
-    """Best-effort legacy CURRENT file for humans and pre-upgrade
-    readers. NON-AUTHORITATIVE: the CAS generation log is the head; this
-    mirror may lag or regress under concurrency and nothing reads it
-    once a generation entry exists."""
-    io = resolve_io(table_path)
-    mdir, _ = _paths(table_path)
-    io.write_text_atomic(os.path.join(mdir, _CURRENT), _manifest_name(version))
 
 
 _STAT_KINDS = (int, float, str, bool)
@@ -538,45 +520,6 @@ def _stats_for_file(path: str, bloom_columns: list[str] | None) -> dict:
     if bloom_columns:
         s["bloom"] = _file_bloom(path, bloom_columns)
     return s
-
-
-def _stage_data_files(
-    df: DataFrame, table_path: str, bloom_columns: list[str] | None = None
-) -> tuple[list[str], dict]:
-    """Write df's partitions as parquet under data/ with globally unique
-    names (stage dir -> rename). Files are immutable once named; a
-    failed job leaves only unreferenced staging garbage for vacuum.
-    Returns (names, {name: footer stats [+ per-column blooms]}).
-
-    Footer stats for large commits are computed by a Spark job over the
-    file list (one task per file batch), never a driver loop — the
-    collected result is the manifest's own metadata (O(#files) small
-    dicts), which the driver must hold anyway to write the manifest."""
-    _, ddir = _paths(table_path)
-    os.makedirs(ddir, exist_ok=True)
-    stage = os.path.join(table_path, f"_staging_{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(stage)
-    names, paths = [], []
-    for f in sorted(os.listdir(stage)):
-        if f.endswith(".parquet") and not f.startswith("_") and not f.startswith("."):
-            unique = f"{uuid.uuid4().hex}-{f}"
-            final = os.path.join(ddir, unique)
-            os.replace(os.path.join(stage, f), final)
-            names.append(unique)
-            paths.append(final)
-    shutil.rmtree(stage, ignore_errors=True)
-    if len(names) >= _DISTRIBUTED_STATS_MIN:
-        sc = df.sparkSession.sparkContext
-        bc = bloom_columns
-        # bounded: one (name, stats) pair per written data file — the
-        # collect is manifest-scale (commit file count), not row-scale
-        pairs = sc.parallelize(
-            list(zip(names, paths)), min(len(names), 4 * sc.defaultParallelism)
-        ).map(lambda np: (np[0], _stats_for_file(np[1], bc))).collect()
-        stats = dict(pairs)
-    else:
-        stats = {n: _stats_for_file(p, bloom_columns) for n, p in zip(names, paths)}
-    return names, stats
 
 
 # ---------------------------------------------------------------------------
@@ -854,44 +797,59 @@ def _partition_matches(spec: list[dict], pt: dict, predicates) -> bool:
     return True
 
 
-def _stage_partitioned(
+def _stage(
     df: DataFrame,
     table_path: str,
-    spec: list[dict],
+    spec: list[dict] | None,
     bloom_columns: list[str] | None = None,
     pre_cluster: bool = True,
-) -> tuple[list[str], dict, dict]:
-    """Partition-clustered twin of _stage_data_files: the frame is
-    written with write.partitionBy over the derived transform columns
-    (each data file holds exactly one partition tuple; the derived
-    columns live only in the directory structure, the file keeps the
-    source columns), then files flatten into data/ under unique names
-    and the (tuple -> names) index is rebuilt from the directory walk.
+) -> tuple[list[str], dict, dict | None]:
+    """Write df as parquet files under data/ with globally unique names
+    (stage dir -> rename). Files are immutable once named; a failed job
+    leaves only unreferenced staging garbage for vacuum. Returns
+    (names, {name: footer stats [+ per-column blooms]}, partition index),
+    the index None for an unpartitioned (empty or None) ``spec``.
 
-    ``pre_cluster`` (default) hash-repartitions on the partition tuple
-    first — Iceberg's write.distribution-mode=hash — so each tuple is
-    written by exactly ONE task and file count is O(#partitions). The
-    naive write is one file per (task x partition): at 1000 input tasks
-    over 10^4 partitions that is 10^7 small files, the classic
-    partitioned-write explosion. Callers that already clustered rows
-    deliberately (sort-layout compaction's range partitioning) pass
-    False to keep their task layout. A single hot partition still lands
-    in one task — skew-sensitive specs add a bucket transform dimension
-    to split it. Returns (names, stats, partition_index)."""
+    Under a partition spec the frame is written with write.partitionBy
+    over the derived transform columns (each data file holds exactly one
+    partition tuple; the derived columns live only in the directory
+    structure, the file keeps the source columns), and the (tuple ->
+    names) index is rebuilt from the directory walk. ``pre_cluster``
+    (default) hash-repartitions on the partition tuple first —
+    Iceberg's write.distribution-mode=hash — so each tuple is written by
+    exactly ONE task and file count is O(#partitions). The naive write
+    is one file per (task x partition): at 1000 input tasks over 10^4
+    partitions that is 10^7 small files, the classic partitioned-write
+    explosion. Callers that already clustered rows deliberately
+    (sort-layout compaction's range partitioning) pass False to keep
+    their task layout. A single hot partition still lands in one task —
+    skew-sensitive specs add a bucket transform dimension to split it.
+    CoW rewrite output (delete/merge) is staged under the table's spec
+    too, so partition pruning stays complete across every write instead
+    of accumulating unindexed (never-pruned) files.
+
+    Footer stats for large commits are computed by a Spark job over the
+    file list (one task per file batch), never a driver loop — the
+    collected result is the manifest's own metadata (O(#files) small
+    dicts), which the driver must hold anyway to write the manifest."""
+    spec = spec or []
     _, ddir = _paths(table_path)
     os.makedirs(ddir, exist_ok=True)
     stage = os.path.join(table_path, f"_staging_{uuid.uuid4().hex}")
-    pnames = [f"__p_{s['name']}" for s in spec]
-    clustered = df.select("*", *_partition_exprs(spec))
-    if pre_cluster:
-        clustered = clustered.repartition(*[F.col(p) for p in pnames])
-    clustered.write.mode("overwrite").partitionBy(*pnames).parquet(stage)
+    if spec:
+        pnames = [f"__p_{s['name']}" for s in spec]
+        df = df.select("*", *_partition_exprs(spec))
+        if pre_cluster:
+            df = df.repartition(*[F.col(p) for p in pnames])
+        df.write.mode("overwrite").partitionBy(*pnames).parquet(stage)
+    else:
+        df.write.mode("overwrite").parquet(stage)
     names, paths, index = [], [], {}
     for root, _dirs, fs in sorted(os.walk(stage)):
         rel = os.path.relpath(root, stage)
-        parts = [p for p in rel.split(os.sep) if "=" in p]
-        if len(parts) != len(spec):
-            continue
+        parts = [] if rel == "." else rel.split(os.sep)
+        if len(parts) != len(spec) or not all("=" in p for p in parts):
+            continue  # not a leaf partition dir (or, unpartitioned, not the root)
         pt = {
             s["name"]: _parse_pvalue(p.split("=", 1)[1], s)
             for p, s in zip(parts, spec)
@@ -916,33 +874,52 @@ def _stage_partitioned(
         stats = dict(pairs)
     else:
         stats = {n: _stats_for_file(p, bloom_columns) for n, p in zip(names, paths)}
-    return names, stats, index
+    return names, stats, (index if spec else None)
+
+
+# Keys that describe one commit rather than the table: every other
+# manifest key is table state, which a commit carries from its base
+# manifest unless the operation sets it.
+_COMMIT_KEYS = ("version", "parent", "operation", "ts", "batch_id", "file_seq")
+
+# A full rewrite (overwrite, compact) lands every row in fresh files under
+# one spec with the frame's physical column names, so the state that
+# described the old file set resets with it: live deletes and DVs were
+# materialized (or replaced), the stats log restarts, spec-evolution
+# history collapses to the flat single-spec shape, and field-ID
+# projection metadata is no longer needed.
+_REWRITE_RESETS = {
+    "delete_files": [],
+    "stats_shards": None,
+    "dv_files": None,
+    "partition_specs": None,
+    "partition_indexes": None,
+    "default_spec_id": None,
+    "fields": None,
+    "renames": None,
+    "next_field_id": None,
+}
 
 
 def _publish(
     table_path: str,
-    files: list[str],
     operation: str,
     parent: int | None,
-    stats: dict | None = None,
-    batch_id: str | None = None,
-    schema_json: str | None = None,
-    delete_files: list[dict] | str = "inherit",
+    changes: dict,
+    base: dict | None = None,
     branch: str | None = None,
-    file_seq: dict | None = None,
-    stats_shards: list[str] | str = "inherit",
-    dv_files: list[dict] | str = "inherit",
-    partition_spec: list[dict] | None | str = "inherit",
-    partition_index: dict | str = "inherit",
-    partition_specs: dict | None | str = "inherit",
-    partition_indexes: dict | None | str = "inherit",
-    default_spec_id: str | None = "inherit",
-    fields: list[dict] | None | str = "inherit",
-    renames: list[dict] | None | str = "inherit",
-    next_field_id: int | None | str = "inherit",
 ) -> int:
     """Write a new manifest and move the target ref to it with a
     compare-and-swap on the ref's generation log.
+
+    The new manifest is ``base`` — the parent's manifest, or for
+    ``rollback`` its target's — with ``changes`` applied: every key the
+    operation does not set carries unchanged, and a key set to None is
+    removed. Only the ``_COMMIT_KEYS`` are the commit's own; ``file_seq``
+    is derived (below), and the None-``seq`` delete entries and
+    None-``added_v``/``v`` field entries a caller adds are stamped with
+    the committed version, which the caller cannot know under
+    concurrency.
 
     Commit protocol (every step maps to a conditional object-store PUT —
     see fileio.py):
@@ -952,11 +929,12 @@ def _publish(
     2. Claim a table-global manifest number with ``put_if_absent`` of
        ``v<N>.json`` — cross-ref writers that picked the same number
        collide here (one wins, the other replans).
-    3. CAS the ref: ``put_if_absent`` of ``heads/<ref>/g<gen+1>-v<N>``.
-       Because the claim name encodes the generation being superseded,
-       two writers that both planned against the SAME parent race for
-       the SAME object and exactly one succeeds — the loser removes its
-       manifest and raises SnapshotConflictError. This is what a bare
+    3. CAS the ref: ``put_if_absent`` of ``heads/<ref>/g<gen+1>``, whose
+       content is the manifest name ``v<N>.json``. Because the claim
+       name is the generation being superseded plus one, two writers
+       that both planned against the SAME parent race for the SAME
+       object and exactly one succeeds — the loser removes its manifest
+       and raises SnapshotConflictError. This is what a bare
        version-number claim cannot give once numbers are table-global:
        same-parent writers would claim different numbers and both "win",
        silently orphaning one commit off the parent chain.
@@ -967,16 +945,10 @@ def _publish(
 
     Sequence-number bookkeeping (merge-on-read support): every data file
     gets a ``file_seq`` entry — the version that first committed it
-    (carried files keep their parent-recorded seq; new files get THIS
-    version). An equality-delete file at seq s applies only to data files
-    with seq < s, so a row appended AFTER a delete of its key survives.
-
-    ``delete_files``: the version's live equality-delete list. The default
-    ``"inherit"`` carries the parent's list unchanged (append & friends);
-    operations that replace or materialize rows (overwrite/compact) pass
-    ``[]``; ``delete_keys_mor`` passes parent's + its new entry (with
-    ``seq=None``, stamped to the actually-committed version here — the
-    caller cannot know it under concurrency)."""
+    (files the base lists keep their recorded seq; new files get THIS
+    version). An equality-delete file at seq s applies only to data
+    files with seq < s, so a row appended AFTER a delete of its key
+    survives."""
     io = resolve_io(table_path)
     mdir, _ = _paths(table_path)
     io.makedirs(mdir)
@@ -991,12 +963,14 @@ def _publish(
             f"{ref} moved past v{parent} during commit — replan and retry"
         )
     version = _next_version(table_path)
-    parent_m = read_manifest(table_path, parent) if parent is not None else {}
-    parent_seq = parent_m.get("file_seq", {})
-    if delete_files == "inherit":
-        delete_files = parent_m.get("delete_files", [])
-    delete_files = [
-        {**d, "seq": version} if d.get("seq") is None else d for d in delete_files
+    if base is None:
+        base = read_manifest(table_path, parent) if parent is not None else {}
+    state = {**{k: v for k, v in base.items() if k not in _COMMIT_KEYS}, **changes}
+    state = {k: v for k, v in state.items() if v is not None}
+    files = state.setdefault("files", [])
+    state["delete_files"] = [
+        {**d, "seq": version} if d.get("seq") is None else d
+        for d in state.get("delete_files", [])
     ]
     # stats sharding: a commit recording more than _INLINE_STATS_MAX NEW
     # per-file stat entries writes them as an immutable NDJSON sidecar
@@ -1005,59 +979,10 @@ def _publish(
     # Spark job, never a 10^6-iteration driver loop. Shards are carried
     # by name like data files (append-only log; entries for files that
     # later leave the table are harmless — planning intersects with the
-    # live file list). Operations that replace the file set pass
-    # stats_shards=[] to reset the log.
-    if stats_shards == "inherit":
-        stats_shards = list(parent_m.get("stats_shards", []))
-    # deletion vectors (position deletes): DV entries name immutable
-    # (data file, row position) parquet files — they stay valid as long
-    # as their target file is listed, and entries for retired files are
-    # inert (the read-time anti-join simply never matches them)
-    if dv_files == "inherit":
-        dv_files = list(parent_m.get("dv_files", []))
-    # partition spec/index: the spec is fixed at table creation
-    # (overwrite passes it; everything else inherits); the index maps a
-    # JSON-encoded partition tuple to the file names written under it.
-    # Index entries for files that later leave the table are inert
-    # (planning intersects with the live list), and files OUTSIDE the
-    # index (CoW rewrite output) are never partition-pruned. Size class:
-    # O(#file names) — the same class as the manifest's own `files`
-    # list (the r5 sharding decision deliberately keeps NAMES inline and
-    # moves only the per-file STATS to NDJSON sidecars), so the index is
-    # a small constant factor on the established posture, not a new
-    # asymptotic term.
-    if partition_spec == "inherit":
-        partition_spec = parent_m.get("partition_spec")
-    if partition_index == "inherit":
-        partition_index = parent_m.get("partition_index") or {}
-    # spec EVOLUTION bookkeeping (round 8, Iceberg model): an evolved
-    # table carries every spec its live files were written under
-    # (partition_specs: {spec_id: spec}) plus a per-spec index
-    # (partition_indexes: {spec_id: {tuple: files}}); plan_files prunes
-    # each file under the spec it was written with. Non-evolved tables
-    # keep the legacy flat partition_index — zero migration cost, and an
-    # overwrite/compact (full rewrite under ONE spec) collapses an
-    # evolved table back to the flat shape by passing explicit None.
-    if partition_specs == "inherit":
-        partition_specs = parent_m.get("partition_specs")
-    if partition_indexes == "inherit":
-        partition_indexes = parent_m.get("partition_indexes")
-    if default_spec_id == "inherit":
-        default_spec_id = parent_m.get("default_spec_id")
-    # field-ID schema-evolution metadata (round 8): present once a
-    # rename/drop has run (or an append added a column to such a table);
-    # entries carrying v/added_v = None are stamped with THIS commit's
-    # version (the caller cannot know it under concurrency — same
-    # pattern as equality-delete seq stamping)
-    if fields == "inherit":
-        fields = parent_m.get("fields")
-    if renames == "inherit":
-        renames = parent_m.get("renames")
-    if next_field_id == "inherit":
-        next_field_id = parent_m.get("next_field_id")
-    parent_inline = parent_m.get("stats", {})
-    stats = dict(stats or {})
-    new_entries = {f: s for f, s in stats.items() if f not in parent_inline}
+    # live file list); a full rewrite resets the log.
+    stats = dict(state.get("stats", {}))
+    base_inline = base.get("stats", {})
+    new_entries = {f: s for f, s in stats.items() if f not in base_inline}
     # shard when the NEW entries are big, or when the accumulated inline
     # dict would cross the cap — incremental small appends (streaming
     # ingest: a few files per micro-batch) must not grow the inline dict
@@ -1076,8 +1001,21 @@ def _publish(
             for f, s in to_shard.items()
         ]
         io.put_text_if_absent(os.path.join(mdir, shard), "\n".join(lines) + "\n")
-        stats_shards = stats_shards + [shard]
+        state["stats_shards"] = state.get("stats_shards", []) + [shard]
         stats = {f: s for f, s in stats.items() if f not in to_shard}
+    state["stats"] = stats
+    # field-ID schema evolution (round 8): fields, renames and
+    # next_field_id travel together, present once a rename/drop has run
+    if state.get("fields"):
+        state["fields"] = [
+            {**fd, "added_v": version} if fd.get("added_v") is None else fd
+            for fd in state["fields"]
+        ]
+        state["renames"] = [
+            {**r, "v": version} if r.get("v") is None else r
+            for r in state.get("renames", [])
+        ]
+    base_seq = base.get("file_seq", {})
     manifest = {
         "version": version,
         "parent": parent,
@@ -1087,41 +1025,9 @@ def _publish(
         # on clocks (the parent chain is the lineage); a clock-skewed
         # commit just resolves to a slightly different as-of boundary.
         "ts": _time.time(),
-        "files": files,
-        "stats": stats,
-        "file_seq": (
-            file_seq
-            if file_seq is not None
-            else {f: parent_seq.get(f, version) for f in files}
-        ),
-        "delete_files": delete_files,
+        **state,
+        "file_seq": {f: base_seq.get(f, version) for f in files},
     }
-    if stats_shards:
-        manifest["stats_shards"] = stats_shards
-    if dv_files:
-        manifest["dv_files"] = dv_files
-    if partition_spec:
-        manifest["partition_spec"] = partition_spec
-        if partition_specs:
-            # evolved table: per-spec indexes replace the flat one
-            manifest["partition_specs"] = partition_specs
-            manifest["partition_indexes"] = partition_indexes or {}
-            manifest["default_spec_id"] = default_spec_id
-        else:
-            manifest["partition_index"] = partition_index or {}
-    if batch_id is not None:
-        manifest["batch_id"] = batch_id
-    if schema_json is not None:
-        manifest["schema"] = schema_json
-    if fields:
-        manifest["fields"] = [
-            {**fd, "added_v": version} if fd.get("added_v") is None else fd
-            for fd in fields
-        ]
-        manifest["renames"] = [
-            {**r, "v": version} if r.get("v") is None else r for r in (renames or [])
-        ]
-        manifest["next_field_id"] = next_field_id
     mpath = os.path.join(mdir, _manifest_name(version))
     # EXCLUSIVE claim of the version number: another writer (possibly on
     # a DIFFERENT ref — both compute the same _next_version) may already
@@ -1132,65 +1038,42 @@ def _publish(
             f"manifest v{version} already exists — another writer committed; "
             "replan and retry"
         )
-    # atomic ref move: claim generation gen+1 — the claim NAME encodes the
-    # parent generation, so two same-parent writers collide here even
-    # though they hold different manifest numbers (each ref is its own
+    # atomic ref move: claim generation gen+1 — the claim NAME is the
+    # generation, so two same-parent writers collide here even though
+    # they hold different manifest numbers (each ref is its own
     # writer-wins line; main and branch commits never conflict)
     if not _cas_head(table_path, ref, gen, version):
         io.remove(mpath)
         raise SnapshotConflictError(
             f"{ref} moved past v{parent} during commit — replan and retry"
         )
-    if branch is None:
-        _mirror_current(table_path, version)
     return version
 
 
-def _stage_rewrite(
-    df: DataFrame, table_path: str, m: dict
-) -> tuple[list[str], dict, dict]:
-    """Stage rewrite output (CoW delete/merge) honoring the table's
-    partition spec: on a partitioned table new files land
-    partition-clustered with fresh index entries, so partition pruning
-    stays COMPLETE across the whole write matrix instead of accumulating
-    unindexed (never-pruned) rewrite output. Returns
-    (names, stats, new_index_entries)."""
-    spec = m.get("partition_spec")
-    if spec:
-        return _stage_partitioned(df, table_path, spec)
-    names, stats = _stage_data_files(df, table_path)
-    return names, stats, {}
+def _index_changes(m: dict, new_index: dict | None) -> dict:
+    """The manifest change that extends ``m``'s partition index with the
+    (tuple -> names) entries of files just staged under its write spec:
+    the flat ``partition_index``, or on a spec-EVOLVED table the default
+    spec's sub-index in ``partition_indexes`` (every other spec's
+    sub-index carries unchanged). Entries for files the new manifest no
+    longer lists are inert (planning intersects with the live file
+    list). Nothing for an unpartitioned table. Size class: O(#file
+    names), like the manifest's own ``files`` list — names stay inline,
+    only per-file STATS move to shards."""
+    if not m.get("partition_spec"):
+        return {}
 
+    def extended(index: dict | None) -> dict:
+        out = {k: list(v) for k, v in (index or {}).items()}
+        for k, fl in (new_index or {}).items():
+            out[k] = out.get(k, []) + list(fl)
+        return out
 
-def _merged_index(m: dict, new_index: dict) -> dict | str:
-    """Parent partition index extended with a rewrite's new entries.
-    Entries for files the new manifest no longer lists are inert
-    (planning intersects with the live file list). Unpartitioned tables
-    and spec-EVOLVED tables return 'inherit' (the flat index is not
-    written without a spec / with per-spec indexes — see
-    _merged_indexes for the evolved twin)."""
-    if not m.get("partition_spec") or m.get("partition_specs"):
-        return "inherit"
-    index = {k: list(v) for k, v in (m.get("partition_index") or {}).items()}
-    for k, fl in new_index.items():
-        index[k] = index.get(k, []) + list(fl)
-    return index
-
-
-def _merged_indexes(m: dict, new_index: dict) -> dict | str:
-    """Evolved-table twin of _merged_index: rewrite output is always
-    staged under the CURRENT (default) spec, so its entries extend the
-    default spec's sub-index; every other spec's sub-index carries
-    unchanged (its dead entries are inert)."""
     if not m.get("partition_specs"):
-        return "inherit"
-    did = m["default_spec_id"]
-    indexes = {k: dict(v) for k, v in (m.get("partition_indexes") or {}).items()}
-    sub = {k: list(v) for k, v in (indexes.get(did) or {}).items()}
-    for k, fl in new_index.items():
-        sub[k] = sub.get(k, []) + list(fl)
-    indexes[did] = sub
-    return indexes
+        return {"partition_index": extended(m.get("partition_index"))}
+    indexes = dict(m["partition_indexes"])
+    indexes[m["default_spec_id"]] = extended(indexes.get(m["default_spec_id"]))
+    return {"partition_indexes": indexes}
 
 
 def overwrite(
@@ -1217,36 +1100,22 @@ def overwrite(
         # the spec survives a data overwrite, like any table metadata
         inherited = read_manifest(table_path, parent).get("partition_spec")
         partition_spec = inherited if inherited else None
-    if partition_spec:
-        # _norm_spec is idempotent: inherited specs keep their recorded
-        # names and re-derive vtype from the new frame's schema
-        spec = _norm_spec(partition_spec, df)
-        files, stats, index = _stage_partitioned(df, table_path, spec, bloom_columns)
-    else:
-        spec, index = None, {}
-        files, stats = _stage_data_files(df, table_path, bloom_columns)
+    # _norm_spec is idempotent: inherited specs keep their recorded
+    # names and re-derive vtype from the new frame's schema
+    spec = _norm_spec(partition_spec, df) if partition_spec else None
+    files, stats, index = _stage(df, table_path, spec, bloom_columns)
     return _publish(
         table_path,
-        files,
         "overwrite",
         parent,
-        stats,
-        schema_json=df.schema.json(),
-        delete_files=[],  # all rows replaced; prior-era deletes retired
-        stats_shards=[],  # ...and prior-era stats shards retired with them
-        dv_files=[],
-        partition_spec=spec,
-        partition_index=index,
-        # a full rewrite lands every file under ONE spec: spec-evolution
-        # history collapses back to the flat single-spec shape
-        partition_specs=None,
-        partition_indexes=None,
-        default_spec_id=None,
-        # every file now carries df's schema physically: field-ID
-        # projection metadata resets with the file set
-        fields=None,
-        renames=None,
-        next_field_id=None,
+        {
+            **_REWRITE_RESETS,
+            "files": files,
+            "stats": stats,
+            "schema": df.schema.json(),
+            "partition_spec": spec,
+            "partition_index": index,
+        },
     )
 
 
@@ -1299,16 +1168,15 @@ def evolve_partition_spec(table_path: str, new_spec: list[dict]) -> int:
     indexes[new_id] = {}
     return _publish(
         table_path,
-        m["files"],
         "evolve-spec",
         parent,
-        m.get("stats", {}),
-        schema_json=schema_json,
-        partition_spec=spec,
-        partition_index={},
-        partition_specs=specs,
-        partition_indexes=indexes,
-        default_spec_id=new_id,
+        {
+            "partition_spec": spec,
+            "partition_index": None,
+            "partition_specs": specs,
+            "partition_indexes": indexes,
+            "default_spec_id": new_id,
+        },
     )
 
 
@@ -1401,12 +1269,11 @@ def append(
         # line (main's version would be wrong for a branch append)
         return parent
     parent_m = read_manifest(table_path, parent) if parent else {}
-    prev = (parent_m.get("files", []), parent_m.get("stats", {}))
     schema_json = _evolved_schema_json(table_path, parent, df)
+    changes = {"schema": schema_json, "batch_id": batch_id}
     # a table under field-ID evolution assigns fresh ids to columns this
     # append introduces (added_v stamped in _publish), so a column added
     # after a same-named DROP can never read the dropped field's data
-    fields_kw: dict = {}
     if parent_m.get("fields"):
         from pyspark.sql.types import StructType
 
@@ -1417,38 +1284,20 @@ def append(
             for sf in new_fields[n_old:]:
                 flds.append({"id": nid, "orig": sf.name, "added_v": None})
                 nid += 1
-            fields_kw = {"fields": flds, "renames": rens, "next_field_id": nid}
-    # a partitioned table clusters EVERY commit the same way and extends
-    # the partition index — appends stay first-level-prunable forever
-    spec = parent_m.get("partition_spec")
-    index: dict | str = "inherit"
-    indexes: dict | str = "inherit"
-    if spec:
-        # always cluster under the DEFAULT (newest) spec; on an evolved
-        # table the new entries extend that spec's sub-index while older
-        # files keep their old-spec tuples untouched
-        files, stats, new_index = _stage_partitioned(df, table_path, spec, bloom_columns)
-        if parent_m.get("partition_specs"):
-            indexes = _merged_indexes(parent_m, new_index)
-        else:
-            index = dict(parent_m.get("partition_index") or {})
-            for k, fl in new_index.items():
-                index[k] = list(index.get(k, [])) + fl
-    else:
-        files, stats = _stage_data_files(df, table_path, bloom_columns)
-    return _publish(
-        table_path,
-        prev[0] + files,
-        "append",
-        parent,
-        {**prev[1], **stats},
-        batch_id,
-        schema_json,
-        branch=branch,
-        partition_index=index,
-        partition_indexes=indexes,
-        **fields_kw,
+            changes.update(fields=flds, renames=rens, next_field_id=nid)
+    # a partitioned table clusters EVERY commit under its write (default)
+    # spec and extends that spec's index — appends stay first-level-
+    # prunable forever, and on an evolved table older files keep their
+    # old-spec tuples untouched
+    files, stats, new_index = _stage(
+        df, table_path, parent_m.get("partition_spec"), bloom_columns
     )
+    changes.update(
+        files=parent_m.get("files", []) + files,
+        stats={**parent_m.get("stats", {}), **stats},
+        **_index_changes(parent_m, new_index),
+    )
+    return _publish(table_path, "append", parent, changes, branch=branch)
 
 
 def foreach_batch_writer(table_path: str):
@@ -1703,7 +1552,7 @@ def _pruned_by_shards(
         else:
             io = resolve_io(table_path)
             tmp_cand = os.path.join(mdir, f"_tmp_cand_{uuid.uuid4().hex}.txt")
-            io.write_text_atomic(tmp_cand, "\n".join(sorted(candidates)))
+            io.put_text_if_absent(tmp_cand, "\n".join(sorted(candidates)))
             cand_df = spark.read.text(tmp_cand).select(F.col("value").alias("f"))
         df = df.join(F.broadcast(cand_df), "f", "semi")
     fields = {f.name: f.dataType for f in df.schema.fields}
@@ -2028,22 +1877,15 @@ def delete_where_dv(
             live.filter(_pred_expr(predicates))
             .select(F.col("__f").alias("f"), F.col("__p").alias("pos"))
         )
-        names, dv_stats = _stage_data_files(pos, table_path)
+        names, dv_stats, _ = _stage(pos, table_path, None)
         # drop zero-row DV parts (empty staging partitions): an entry
         # should mean "this file deletes something"
         names = [n for n in names if dv_stats.get(n, {}).get("rows", 0) > 0]
     else:
         names = []
-    entries = [{"name": n} for n in names]
-    return _publish(
-        table_path,
-        m["files"],
-        "dv-delete",
-        parent,
-        m.get("stats", {}),
-        schema_json=m.get("schema"),
-        dv_files=list(m.get("dv_files", [])) + entries,
-    )
+    dv_files = m.get("dv_files", []) + [{"name": n} for n in names]
+    # a table without DVs has no dv_files key, not an empty list
+    return _publish(table_path, "dv-delete", parent, {"dv_files": dv_files or None})
 
 
 def delete_keys_mor(spark: SparkSession, table_path: str, keys: DataFrame) -> int:
@@ -2076,21 +1918,13 @@ def delete_keys_mor(spark: SparkSession, table_path: str, keys: DataFrame) -> in
             f"delete key columns {on} differ from the table's existing "
             f"delete-file keys {sorted(prior[0]['on'])}"
         )
-    names, _stats = _stage_data_files(keys.select(*on).distinct(), table_path)
+    names, _stats, _ = _stage(keys.select(*on).distinct(), table_path, None)
     # seq=None: _publish stamps the ACTUAL committed version — guessing
     # parent+1 here would desynchronize seq from the manifest number as
     # soon as branch commits interleave the global numbering, silently
     # dropping these keys from read_changes' delete feed
     entries = [{"name": n, "on": on, "seq": None} for n in names]
-    return _publish(
-        table_path,
-        m["files"],
-        "mor-delete",
-        parent,
-        m.get("stats", {}),
-        schema_json=m.get("schema"),
-        delete_files=prior + entries,
-    )
+    return _publish(table_path, "mor-delete", parent, {"delete_files": prior + entries})
 
 
 def _live_delete_files(m: dict, untouched: list[str]) -> list[dict]:
@@ -2145,19 +1979,21 @@ def delete(
         _read_files(spark, table_path, candidates, m.get("schema"), m), m,
     ).filter(~_pred_expr(predicates)) if candidates else None
     new_files, new_stats, new_index = (
-        ([], {}, {}) if survivors is None else _stage_rewrite(survivors, table_path, m)
+        ([], {}, None)
+        if survivors is None
+        else _stage(survivors, table_path, m.get("partition_spec"))
     )
     kept_stats = {f: stats[f] for f in untouched if f in stats}
     return _publish(
         table_path,
-        untouched + new_files,
         "delete",
         parent,
-        {**kept_stats, **new_stats},
-        schema_json=m.get("schema"),
-        delete_files=_live_delete_files(m, untouched),
-        partition_index=_merged_index(m, new_index),
-        partition_indexes=_merged_indexes(m, new_index),
+        {
+            "files": untouched + new_files,
+            "stats": {**kept_stats, **new_stats},
+            "delete_files": _live_delete_files(m, untouched),
+            **_index_changes(m, new_index),
+        },
     )
 
 
@@ -2265,7 +2101,7 @@ def merge(
     # MERGE-time schema evolution: source-only columns extend the table
     # schema (additive union, type changes rejected) before the read, so
     # the rewrite base and untouched files alike project NULL for them
-    fields_kw: dict = {}
+    field_changes: dict = {}
     m_read = m  # manifest the in-merge reads resolve fields against
     if schema_json is not None and update_set is None:
         from pyspark.sql.types import StructType
@@ -2288,7 +2124,7 @@ def merge(
                         {"id": nid, "orig": sf.name, "added_v": parent + 1}
                     )
                     nid += 1
-                fields_kw = {"fields": flds, "renames": rens, "next_field_id": nid}
+                field_changes = {"fields": flds, "renames": rens, "next_field_id": nid}
                 m_read = {**m, "fields": flds_read}
             schema_json = evolved_json
     cur = _read_files(spark, table_path, files, schema_json, m_read)
@@ -2458,7 +2294,7 @@ def merge(
             live_touched.select(*on).distinct(), on, "left_anti"
         ).select(*cur.columns)
         new_rows = rewrite_base.unionByName(matched).unionByName(inserts)
-    new_files, new_stats, new_index = _stage_rewrite(new_rows, table_path, m)
+    new_files, new_stats, new_index = _stage(new_rows, table_path, m.get("partition_spec"))
     # success-path release; on an exception the ContextCleaner reclaims
     # the block when the frame is GC'd (no manifest was published, so a
     # failed merge leaves no state either way)
@@ -2466,16 +2302,17 @@ def merge(
     kept_stats = {f: stats[f] for f in untouched if f in stats}
     return _publish(
         table_path,
-        untouched + new_files,
         "merge",
         parent,
-        {**kept_stats, **new_stats},
-        batch_id,
-        schema_json,
-        delete_files=_live_delete_files(m, untouched),
-        partition_index=_merged_index(m, new_index),
-        partition_indexes=_merged_indexes(m, new_index),
-        **fields_kw,
+        {
+            "files": untouched + new_files,
+            "stats": {**kept_stats, **new_stats},
+            "batch_id": batch_id,
+            "schema": schema_json,
+            "delete_files": _live_delete_files(m, untouched),
+            **_index_changes(m, new_index),
+            **field_changes,
+        },
     )
 
 
@@ -2758,23 +2595,19 @@ def rename_column(table_path: str, old: str, new: str) -> int:
             {**s, "column": new} if s.get("column") == old else s for s in spec
         ]
 
-    spec = m.get("partition_spec")
-    specs = m.get("partition_specs")
-    return _publish(
-        table_path,
-        m["files"],
-        "rename-column",
-        parent,
-        m.get("stats", {}),
-        schema_json=schema_json,
-        partition_spec=_respec(spec) if spec else "inherit",
-        partition_specs=(
-            {k: _respec(v) for k, v in specs.items()} if specs else "inherit"
-        ),
-        fields=fields,
-        renames=renames,
-        next_field_id=next_id,
-    )
+    changes = {
+        "schema": schema_json,
+        "fields": fields,
+        "renames": renames,
+        "next_field_id": next_id,
+    }
+    if m.get("partition_spec"):
+        changes["partition_spec"] = _respec(m["partition_spec"])
+    if m.get("partition_specs"):
+        changes["partition_specs"] = {
+            k: _respec(v) for k, v in m["partition_specs"].items()
+        }
+    return _publish(table_path, "rename-column", parent, changes)
 
 
 def drop_column(table_path: str, name: str) -> int:
@@ -2819,14 +2652,14 @@ def drop_column(table_path: str, name: str) -> int:
     fields = [fd for i, fd in enumerate(fields) if i != idx]
     return _publish(
         table_path,
-        m["files"],
         "drop-column",
         parent,
-        m.get("stats", {}),
-        schema_json=schema_json,
-        fields=fields,
-        renames=renames,
-        next_field_id=next_id,
+        {
+            "schema": schema_json,
+            "fields": fields,
+            "renames": renames,
+            "next_field_id": next_id,
+        },
     )
 
 
@@ -2835,24 +2668,9 @@ def version_at_timestamp(table_path: str, as_of: float | str) -> int:
     ancestor chain committed at or before ``as_of`` (epoch seconds, or
     an ISO 'YYYY-MM-DD[ HH:MM:SS]' string interpreted as UTC) — the
     Iceberg/Delta `TIMESTAMP AS OF` contract. Walks newest-first, so the
-    cost is O(versions newer than the target), not O(history), when the
-    answer is a stamped version.
-
-    Mixed histories (judge r7 advice): a manifest from before timestamps
-    were recorded has UNKNOWN commit time, not epoch 0 — treating it as
-    0 would let an as_of in the past resolve to a version actually
-    committed AFTER as_of, shadowing older correctly-stamped ancestors.
-    The walk therefore SKIPS ts-less manifests and returns the nearest
-    STAMPED ancestor with ts <= as_of; only when no stamped version on
-    the reachable chain qualifies does it fall back to the newest
-    ts-less version NOT provably newer than as_of (a ts-less version
-    whose ANCESTOR is stamped newer than as_of is itself newer — commit
-    times are monotone along the chain — and is disqualified). The
-    all-legacy
-    chain keeps its historical behavior: CURRENT resolves, at the price
-    of a full-chain walk.
-    Raises if the whole reachable chain is stamped-newer (the table did
-    not exist yet, or that history has been vacuumed)."""
+    cost is O(versions newer than the target), not O(history). Raises if
+    the whole reachable chain is newer (the table did not exist yet, or
+    that history has been vacuumed)."""
     if isinstance(as_of, str):
         import datetime as _dt
 
@@ -2863,26 +2681,14 @@ def version_at_timestamp(table_path: str, as_of: float | str) -> int:
     if cur is None:
         raise FileNotFoundError(f"snapshot table has no committed version: {table_path}")
     v: int | None = cur
-    legacy: int | None = None  # newest ts-LESS version seen (fallback only)
-    while v is not None:  # inline newest-first walk: stops at the FIRST
-        try:              # stamped hit, so cost is O(versions newer than
-            m = read_manifest(table_path, v)  # as_of) on stamped chains
+    while v is not None:
+        try:
+            m = read_manifest(table_path, v)
         except FileNotFoundError:
             break  # vacuum horizon: older history is unreachable
-        ts = m.get("ts")
-        if ts is None:
-            if legacy is None:
-                legacy = v  # unknown commit time: candidate, keep walking
-        elif float(ts) <= as_of:
+        if float(m["ts"]) <= as_of:
             return v
-        else:
-            # this stamped version is newer than as_of; every ts-less
-            # DESCENDANT (seen earlier on the newest-first walk) is newer
-            # still — provably > as_of, so it cannot be the fallback
-            legacy = None
         v = m.get("parent")
-    if legacy is not None:
-        return legacy
     raise ValueError(
         f"no version at or before timestamp {as_of} on CURRENT's chain "
         "(table newer than as_of, or history vacuumed)"
@@ -3202,28 +3008,7 @@ def compact(
                 .sortWithinPartitions(*rcols, *sort_by)
                 .drop(*rcols)
             )
-            files, stats, index = _stage_partitioned(
-                df, table_path, spec, pre_cluster=False
-            )
-        else:
-            files, stats, index = _stage_partitioned(df, table_path, spec)
-        return _publish(
-            table_path, files, "compact", parent, stats,
-            schema_json=m0.get("schema"),
-            delete_files=[],  # read() applied live MoR deletes -> materialized
-            stats_shards=[],  # fresh file set -> fresh stats log
-            dv_files=[],      # positions materialized by the same read()
-            partition_index=index,  # fresh index replaces dead entries
-            # every file now lives under the current spec: spec-evolution
-            # history collapses back to the flat single-spec shape
-            partition_specs=None,
-            partition_indexes=None,
-            default_spec_id=None,
-            fields=None,  # rewrite materialized current names everywhere
-            renames=None,
-            next_field_id=None,
-        )
-    if sort_by:
+    elif sort_by:
         # sort layout: range-partition on the sort key so files cover
         # DISJOINT ranges, then sort inside each for tight footers
         df = df.repartitionByRange(max(1, n_files), *sort_by).sortWithinPartitions(
@@ -3254,16 +3039,14 @@ def compact(
             .sortWithinPartitions("__z")
             .drop("__za", "__zb", "__z")
         )
-    files, stats = _stage_data_files(df, table_path)
+    # read() applied live deletes and DVs, so the rewrite materializes
+    # them; a partitioned table gets a fresh index under its current spec
+    files, stats, index = _stage(df, table_path, spec, pre_cluster=not sort_by)
     return _publish(
-        table_path, files, "compact", parent, stats,
-        schema_json=read_manifest(table_path, parent).get("schema"),
-        delete_files=[],  # read() applied live MoR deletes -> materialized
-        stats_shards=[],  # fresh file set -> fresh stats log
-        dv_files=[],      # positions materialized by the same read()
-        fields=None,  # rewrite materialized current names everywhere
-        renames=None,
-        next_field_id=None,
+        table_path,
+        "compact",
+        parent,
+        {**_REWRITE_RESETS, "files": files, "stats": stats, "partition_index": index},
     )
 
 
@@ -3414,16 +3197,10 @@ def read_changes(
     return out
 
 
-def _shard_version(name: str) -> int | None:
+def _shard_version(name: str) -> int:
     """Commit version embedded in a stats-shard name
-    (stats-v0000042-<hex>.ndjson -> 42); None for legacy unversioned
-    names."""
-    if name.startswith("stats-v"):
-        try:
-            return int(name[len("stats-v"):].split("-", 1)[0])
-        except ValueError:
-            return None
-    return None
+    (stats-v0000042-<hex>.ndjson -> 42)."""
+    return int(name[len("stats-v"):].split("-", 1)[0])
 
 
 def vacuum(
@@ -3486,8 +3263,7 @@ def vacuum(
         # correctness" now holds for reachability too).
         oldest_kept = None
         for i, v in enumerate(chain):  # chain is newest-first
-            ts = read_manifest(table_path, v).get("ts")
-            if ts is not None and float(ts) > keep_newer_than:
+            if float(read_manifest(table_path, v)["ts"]) > keep_newer_than:
                 oldest_kept = i
         if oldest_kept is not None:
             keep.update(chain[: oldest_kept + 1])
@@ -3537,10 +3313,8 @@ def vacuum(
                 io.remove(os.path.join(mdir, m))
         elif m.startswith("_tmp_cand_") and not _young(os.path.join(mdir, m)):
             io.remove(os.path.join(mdir, m))  # leaked scan-time side file
-        elif m.endswith(".ndjson") and m not in referenced:
-            sv = _shard_version(m)
-            if sv is None or sv <= cur:  # see concurrent-writer note above
-                io.remove(os.path.join(mdir, m))
+        elif m.endswith(".ndjson") and m not in referenced and _shard_version(m) <= cur:
+            io.remove(os.path.join(mdir, m))  # see concurrent-writer note above
     # prune the ref CAS logs. Within a LIVE (ref, incarnation) log only
     # the highest generation carries state, and generations are only
     # ever ADDED — deleting lower ones can never race a reader into an
@@ -3575,11 +3349,11 @@ def vacuum(
 
 
 def rollback(table_path: str, to_version: int) -> int:
-    """Metadata-only undo: commit a NEW version whose file list, stats,
-    schema, and delete files are exactly ``to_version``'s — the
-    Iceberg/Delta RESTORE. History stays append-only (the bad versions
-    remain readable for forensics until vacuumed); no data file is
-    copied or rewritten. ``to_version`` must be on CURRENT's ancestor
+    """Metadata-only undo: commit a NEW version whose table state (file
+    list, stats, schema, deletes, partition and field metadata) is
+    exactly ``to_version``'s — the Iceberg/Delta RESTORE. History stays
+    append-only (the bad versions remain readable for forensics until
+    vacuumed); no data file is copied or rewritten. ``to_version`` must be on CURRENT's ancestor
     chain — restoring another branch's state is a fast_forward/rebase
     decision, not a rollback. Returns the new version."""
     cur = current_version(table_path)
@@ -3591,31 +3365,10 @@ def rollback(table_path: str, to_version: int) -> int:
         raise ValueError(
             f"v{to_version} is not an ancestor of CURRENT v{cur} — not a rollback"
         )
-    m = read_manifest(table_path, to_version)
+    # the target's whole state comes back, file sequence numbers included:
+    # recomputing them from CURRENT would give restored files that
+    # CURRENT no longer lists (rollback past an overwrite/compact) fresh,
+    # higher seqs and silently un-apply the target's MoR delete files
     return _publish(
-        table_path,
-        m["files"],
-        "rollback",
-        cur,
-        m.get("stats", {}),
-        schema_json=m.get("schema"),
-        delete_files=m.get("delete_files", []),
-        # restore the target's sequence numbers VERBATIM: recomputing from
-        # CURRENT would assign fresh (higher) seqs to restored files that
-        # CURRENT no longer lists (rollback past an overwrite/compact),
-        # silently un-applying the restored version's MoR delete files
-        file_seq=m.get("file_seq", {}),
-        stats_shards=m.get("stats_shards", []),
-        dv_files=m.get("dv_files", []),
-        # ...and the partition metadata: inheriting CURRENT's spec/index
-        # across a rollback that crosses a spec change would leave the
-        # restored files unindexed (never partition-pruned) or misdescribed
-        partition_spec=m.get("partition_spec"),
-        partition_index=m.get("partition_index") or {},
-        partition_specs=m.get("partition_specs"),
-        partition_indexes=m.get("partition_indexes"),
-        default_spec_id=m.get("default_spec_id"),
-        fields=m.get("fields"),
-        renames=m.get("renames"),
-        next_field_id=m.get("next_field_id"),
+        table_path, "rollback", cur, {}, base=read_manifest(table_path, to_version)
     )

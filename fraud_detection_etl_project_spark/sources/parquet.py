@@ -100,13 +100,18 @@ _SHIPPED_SESSIONS: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
 def pin_session_confs(spark: SparkSession) -> None:
     """Force the confs our query semantics depend on, on any session, and
-    ship the package sources to the Python workers (see _package_zip,
-    memoized per session object)."""
+    ship the package sources to the Python workers."""
     for key, value in _REQUIRED_CONFS.items():
         try:
             spark.conf.set(key, value)
         except Exception:
             pass  # a conf made static in some future Spark: keep going
+    ship_package(spark)
+
+
+def ship_package(spark: SparkSession) -> None:
+    """Ship the package sources to the session's Python workers (see
+    _package_zip), once per session object."""
     if spark in _SHIPPED_SESSIONS:
         return
     try:

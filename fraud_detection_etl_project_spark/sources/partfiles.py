@@ -32,6 +32,8 @@ import uuid
 from pyspark import cloudpickle
 from pyspark.sql.datasource import DataSourceWriter, WriterCommitMessage
 
+from fraud_detection_etl_project_spark.sources.parquet import ship_package
+
 _SUCCESS = "_SUCCESS"
 _TMP = "_tmp_"
 _PART = re.compile(r"part-([0-9]{5})\.(\w+)")
@@ -116,11 +118,14 @@ class PartFileWriter(DataSourceWriter):
 def register(spark, *sources) -> None:
     """Register each DataSource class under its ``name()``. Registering a
     name again replaces the earlier class, so callers register before
-    each use. Each class's module is pickled by value: the driver-side
-    streaming-source runner does not see ``addPyFile`` paths, so a source
-    whose module imports nothing else from this package (``pysnapshot``,
-    ``syntheticrowsstream``) reaches it whatever the launcher's cwd or
-    PYTHONPATH."""
+    each use. The package zip ships to the session's Python workers
+    first: a source's module and the modules it imports (this one, for
+    the file sinks) are imported there by name. Each class's module is
+    also pickled by value: the driver-side streaming-source runner does
+    not see ``addPyFile`` paths, so a source whose module imports nothing
+    else from this package (``pysnapshot``, ``syntheticrowsstream``)
+    reaches it whatever the launcher's cwd or PYTHONPATH."""
+    ship_package(spark)
     for ds in sources:
         cloudpickle.register_pickle_by_value(sys.modules[ds.__module__])
         spark.dataSource.register(ds)

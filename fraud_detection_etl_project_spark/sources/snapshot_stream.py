@@ -55,41 +55,28 @@ _CURRENT = "CURRENT"
 
 
 def _current_version(table_path: str) -> int | None:
-    # authoritative head = highest generation in the CAS log (mirrors
-    # snapshot._head; duplicated because this module ships self-contained
-    # to the Python data-source worker). The plain CURRENT file is a
-    # non-authoritative mirror kept only as a pre-upgrade fallback.
+    # head = highest generation in CURRENT's CAS log (mirrors
+    # snapshot._gen_head; duplicated because this module ships
+    # self-contained to the Python data-source worker); None before the
+    # table's first commit
     heads = os.path.join(table_path, _MANIFEST_DIR, "heads", _CURRENT)
-    saw_generations = False
     for _attempt in range(64):
         try:
             gens = [int(g[1:]) for g in os.listdir(heads) if g.startswith("g")]
         except FileNotFoundError:
-            gens = []
+            return None
         if not gens:
-            break
-        saw_generations = True
+            return None
         try:  # retry: vacuum may prune a non-max entry between list and read
             with open(os.path.join(heads, f"g{max(gens):010d}")) as f:
                 name = f.read().strip()
+            # %05d zero-pads; versions grow past 5 digits — parse to the suffix
             return int(name[1 : name.index(".")])
         except FileNotFoundError:
             continue
-    if saw_generations:
-        # the table HAS a generation log but 64 list-then-read attempts all
-        # lost the race: raise (mirroring snapshot._gen_head) rather than
-        # fall through to the legacy CURRENT mirror — the mirror may lag or
-        # regress under concurrency, and a stale read here would move the
-        # stream's latestOffset BACKWARDS. The mirror fallback is reserved
-        # for pre-upgrade tables with no generation log at all.
-        raise RuntimeError(f"CURRENT head unreadable after retries: {heads}")
-    cur = os.path.join(table_path, _MANIFEST_DIR, _CURRENT)
-    if not os.path.exists(cur):
-        return None
-    with open(cur) as f:
-        name = f.read().strip()
-    # %05d zero-pads; versions grow past 5 digits — parse to the suffix
-    return int(name[1 : name.index(".")])
+    # every list-then-read lost the race: raise rather than guess, since
+    # a stale answer would move the stream's latestOffset backwards
+    raise RuntimeError(f"CURRENT head unreadable after retries: {heads}")
 
 
 def _manifest(table_path: str, version: int) -> dict:

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import ast
 import os
+import subprocess
+import sys
 from pathlib import Path
 
 import pytest
@@ -16,6 +18,7 @@ from fraud_detection_etl_project_spark.sources import arrowipc, avro, npy, tfrec
 from fraud_detection_etl_project_spark.sources.partfiles import register
 
 PKG = Path(fraud_detection_etl_project_spark.__file__).parent
+REPO = PKG.parent
 
 
 def _tfrecord_rows(df):
@@ -109,6 +112,32 @@ def _calls(tree, *attrs):
         for n in ast.walk(tree)
         if isinstance(n, ast.Call) and ast.unparse(n.func).split(".")[-len(attrs) :] == list(attrs)
     ]
+
+
+def test_sink_writes_in_a_session_that_never_loaded_a_table(tmp_path):
+    """The sink's Python workers import this package by name. A driver
+    started outside the checkout, with the package on ``sys.path`` only
+    and no ``load_table`` call, must still get the package zip to its
+    workers: ``register`` ships it."""
+    code = f"""
+import sys
+sys.path.insert(0, {str(REPO)!r})
+from pyspark.sql import SparkSession
+spark = SparkSession.builder.master("local[2]").appName("bare-sink").getOrCreate()
+from fraud_detection_etl_project_spark.sources.arrowipc import ArrowIPCDataSource
+from fraud_detection_etl_project_spark.sources.partfiles import register
+register(spark, ArrowIPCDataSource)
+out = {str(tmp_path / "out")!r}
+spark.range(0, 2).write.format("pyarrowipc").option("path", out).mode("overwrite").save()
+ids = sorted(r.id for r in spark.read.format("pyarrowipc").option("path", out).load().collect())
+print("BARE_SINK_OK", ids)
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert "BARE_SINK_OK [0, 1]" in out.stdout, out.stdout[-2000:] + out.stderr[-3000:]
 
 
 def test_part_file_protocol_lives_in_one_module():

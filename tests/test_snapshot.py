@@ -191,17 +191,17 @@ def test_optimistic_conflict_detected(spark, tmp_path, monkeypatch):
     t = str(tmp_path / "tbl")
     S.overwrite(_nums(spark, 0, 5), t)
 
-    real_stage = S._stage_data_files
+    real_stage = S._stage
 
-    def stage_and_race(df, table_path, bloom_columns=None):
-        files = real_stage(df, table_path, bloom_columns)
+    def stage_and_race(*args, **kwargs):
+        files = real_stage(*args, **kwargs)
         # another writer commits between this writer's stage and publish
         if not getattr(stage_and_race, "raced", False):
             stage_and_race.raced = True
             S.overwrite(_nums(spark, 90, 95), t)
         return files
 
-    monkeypatch.setattr(S, "_stage_data_files", stage_and_race)
+    monkeypatch.setattr(S, "_stage", stage_and_race)
     with pytest.raises(S.SnapshotConflictError):
         S.append(_nums(spark, 10, 15), t)
     # the racing writer's commit is intact
@@ -1002,52 +1002,6 @@ def test_compact_sort_by_gives_disjoint_file_ranges(spark, tmp_path):
     assert got == list(range(100))
     with pytest.raises(ValueError, match="not both"):
         S.compact(spark, t, 2, zorder_by=["n", "n"], sort_by=["n"])
-
-
-def _rewrite_manifest_ts(table_path, version, ts):
-    """Test helper: stamp (or strip, ts=None) a manifest's commit time —
-    fabricates pre-upgrade (ts-less) history for mixed-chain tests."""
-    import json as _json
-    import os as _os
-
-    p = _os.path.join(table_path, S._MANIFEST_DIR, S._manifest_name(version))
-    m = _json.loads(open(p).read())
-    if ts is None:
-        m.pop("ts", None)
-    else:
-        m["ts"] = ts
-    open(p, "w").write(_json.dumps(m))
-
-
-def test_as_of_mixed_history_skips_tsless_manifest(spark, tmp_path):
-    """Judge r7 advice: a ts-less (pre-upgrade) manifest mid-chain must
-    not read as epoch 0 — an as_of in the past would resolve to a
-    version committed AFTER as_of. The walk skips it and returns the
-    nearest STAMPED ancestor."""
-    t = str(tmp_path / "tbl")
-    S.overwrite(spark.range(5), t)            # v1
-    S.append(spark.range(5, 8), t)            # v2 -> ts-less below
-    S.append(spark.range(8, 12), t)           # v3
-    _rewrite_manifest_ts(t, 1, 1000.0)
-    _rewrite_manifest_ts(t, 2, None)          # pre-upgrade manifest
-    _rewrite_manifest_ts(t, 3, 2000.0)
-    assert S.version_at_timestamp(t, 1500.0) == 1   # NOT the ts-less v2
-    assert S.version_at_timestamp(t, 2500.0) == 3
-    assert S.read(spark, t, as_of=1500.0).count() == 5
-    with pytest.raises(ValueError):
-        S.version_at_timestamp(t, 500.0)      # all stamped versions newer
-
-
-def test_as_of_all_legacy_chain_resolves_current(spark, tmp_path):
-    """All-legacy chain (no ts anywhere): the historical behavior is
-    preserved — CURRENT (the newest ts-less version) resolves."""
-    t = str(tmp_path / "tbl")
-    S.overwrite(spark.range(5), t)            # v1
-    S.append(spark.range(5, 8), t)            # v2
-    _rewrite_manifest_ts(t, 1, None)
-    _rewrite_manifest_ts(t, 2, None)
-    assert S.version_at_timestamp(t, 1234.5) == 2
-    assert S.read(spark, t, as_of=1234.5).count() == 8
 
 
 # ---------------------------------------------------------------------------

@@ -43,7 +43,9 @@ def mem_table():
 def _commit(t: str, parent: int | None, op: str = "append", branch=None, batch_id=None):
     files = [f"f-{uuid.uuid4().hex}.parquet"]
     prev = S.read_manifest(t, parent)["files"] if parent is not None else []
-    return S._publish(t, prev + files, op, parent, {}, batch_id=batch_id, branch=branch)
+    return S._publish(
+        t, op, parent, {"files": prev + files, "stats": {}, "batch_id": batch_id}, branch=branch
+    )
 
 
 def test_same_parent_writers_cannot_both_succeed(mem_table):
@@ -185,7 +187,7 @@ def test_orphan_manifest_does_not_fake_batch_completion(mem_table):
     import os
 
     mdir, _ = S._paths(t)
-    MEMORY_IO.write_text_atomic(
+    MEMORY_IO.put_text_if_absent(
         os.path.join(mdir, S._manifest_name(9)),
         json.dumps({"version": 9, "parent": 2, "operation": "append",
                     "files": [], "stats": {}, "batch_id": "crashed",
@@ -263,8 +265,9 @@ def test_mor_delete_vs_cow_merge_single_winner(mem_table):
             return
         state["fired"] = True
         S._publish(
-            t, S.read_manifest(t, 1)["files"], "mor-delete", 1, {},
-            delete_files=[{"name": "del-x.parquet", "on": ["k"], "seq": None}],
+            t, "mor-delete", 1,
+            {"files": S.read_manifest(t, 1)["files"], "stats": {},
+             "delete_files": [{"name": "del-x.parquet", "on": ["k"], "seq": None}]},
         )
 
     MEMORY_IO.before_put_if_absent = interleave

@@ -87,8 +87,8 @@ def test_partition_pruning_10k_file_fixture(spark, tmp_path, monkeypatch):
             index[key].append(f)
             stats[f] = {"rows": 10, "columns": {
                 "n": {"min": i * 10, "max": i * 10 + 9, "nulls": 0}}}
-    S._publish(t, files, "overwrite", None, stats,
-               partition_spec=spec, partition_index=index)
+    S._publish(t, "overwrite", None, {"files": files, "stats": stats,
+                                      "partition_spec": spec, "partition_index": index})
     calls: list = []
     real = S._keep_by_stats
 
@@ -119,8 +119,8 @@ def test_partition_pruning_with_sharded_stats(spark, tmp_path):
             index[key].append(f)
             stats[f] = {"rows": 10, "columns": {
                 "n": {"min": i * 10, "max": i * 10 + 9, "nulls": 0}}}
-    S._publish(t, files, "overwrite", None, stats,
-               partition_spec=spec, partition_index=index)
+    S._publish(t, "overwrite", None, {"files": files, "stats": stats,
+                                      "partition_spec": spec, "partition_index": index})
     m = S.read_manifest(t, 1)
     assert m["stats"] == {} and m.get("stats_shards")  # sharded
     kept, total = S.plan_files(t, [("p", "=", 3), ("n", ">=", 500)], spark=spark)

@@ -51,7 +51,7 @@ def _fab_entries(n: int, rows_per_file: int = 100):
 def test_10k_file_table_plans_in_seconds_and_matches_driver_rule(spark, tmp_path):
     t = str(tmp_path / "big")
     files, stats = _fab_entries(10_000)
-    v = S._publish(t, files, "overwrite", None, stats)
+    v = S._publish(t, "overwrite", None, {"files": files, "stats": stats})
     m = S.read_manifest(t, v)
     # stats moved to a shard; the manifest itself stays name-sized
     assert m["stats"] == {} and len(m.get("stats_shards", [])) == 1
@@ -72,7 +72,7 @@ def test_10k_file_table_plans_in_seconds_and_matches_driver_rule(spark, tmp_path
 def test_sharded_planning_never_evaluates_stats_on_driver(spark, tmp_path, monkeypatch):
     t = str(tmp_path / "big")
     files, stats = _fab_entries(2_000)
-    S._publish(t, files, "overwrite", None, stats)
+    S._publish(t, "overwrite", None, {"files": files, "stats": stats})
 
     real = S._keep_by_stats
 
@@ -135,7 +135,7 @@ def test_sharded_table_end_to_end_with_blooms(spark, tmp_path, monkeypatch):
 def test_mem_store_sharded_plan_falls_back_to_driver_rule(mem_table=None):
     t = f"mem://tbl-{uuid.uuid4().hex}"
     files, stats = _fab_entries(600)  # > _INLINE_STATS_MAX -> sharded
-    S._publish(t, files, "overwrite", None, stats)
+    S._publish(t, "overwrite", None, {"files": files, "stats": stats})
     m = S.read_manifest(t, 1)
     assert m.get("stats_shards")
     preds = [("n", ">=", 30_000)]

@@ -27,8 +27,8 @@ def _build_history(table_path: str, n: int) -> None:
     for i in range(n):
         files = files + [f"f-{i:06d}.parquet"]
         parent = S._publish(
-            table_path, files, "append" if parent else "overwrite", parent, {},
-            schema_json=schema_json,
+            table_path, "append" if parent else "overwrite", parent,
+            {"files": files, "stats": {}, "schema": schema_json},
         )
 
 
