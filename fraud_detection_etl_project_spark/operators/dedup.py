@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from fraud_detection_etl_project_spark.functions.rounding import fxr
 from fraud_detection_etl_project_spark.functions.text import fingerprint, normalized
+from fraud_detection_etl_project_spark.sources.local import local_frame
 
 # Shared MinHash configuration — plans/llm_queries.py derives the DuckDB
 # oracle from these same constants, so Spark and oracle stay in lock-step.
@@ -1209,7 +1210,8 @@ def foreach_batch_dedup_ingester(
                 # same batch-id idempotency as the data commits, so a
                 # replay doesn't double-log
                 n_arrived = raw.count() if pre_filter is not None else n_in
-                m = spark.createDataFrame(
+                m = local_frame(
+                    spark,
                     [(int(bid), n_arrived, n_arrived - n_in, n_in - n_kept, n_kept)],
                     "batch_id long, n_arrived long, n_rejected long, n_dup long, n_kept long",
                 )

@@ -38,16 +38,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from fraud_detection_etl_project_spark.sources.local import local_frame
 
 _LOCAL_NODE_CAP = 2_000_000  # driver-path NODE ceiling: the edge probe
 # alone does not bound the node frame (a near-empty interaction graph over
 # a corpus-scale mostly-isolated node set has few edges but 10^8+ nodes).
 # The functions that COLLECT the node frame — pagerank,
-# personalized_pagerank, katz_centrality — gate their local path on BOTH
-# counts. connected_components' local path deliberately gates on edges
-# only: _local_components never collects the node side (isolated nodes
-# stay distributed and union in as singletons), so adding a node collect
-# there would need this cap wired in first.
+# personalized_pagerank, katz_centrality — take their local path through
+# _local_graph, which caps both probes. connected_components' local path
+# deliberately gates on edges only: _local_components never collects the
+# node side (isolated nodes stay distributed and union in as singletons),
+# so adding a node collect there would need this cap wired in first.
 
 
 def connected_components(
@@ -182,49 +183,33 @@ def connected_components(
     )
 
 
-def _local_pagerank(
-    nodes: DataFrame,
-    edge_rows_in,
-    iterations: int,
-    damping: float,
-    scale: float,
-    n: int,
-    base: float,
-) -> DataFrame:
-    """Driver-side power iteration over a collected (small, pre-aggregated)
-    edge list — the exact recurrence of the distributed loop: quantized
-    contributions summed in exact ints, rank re-quantized per iteration.
-    Python floats are IEEE doubles, so results are bit-identical."""
-    import math
-    from collections import defaultdict
+def _local_graph(nodes: DataFrame, edges: DataFrame, local_edge_threshold: int):
+    """``(edge_rows, node_ids)`` collected to the driver when the graph is
+    small enough to iterate there, else ``None``.
 
+    One bounded probe per side: up to ``local_edge_threshold + 1`` edges,
+    then, only when the edges fit, up to ``_LOCAL_NODE_CAP + 1`` nodes. A
+    small graph pays for its edge build and its node scan exactly once;
+    the node count N of the local recurrences is the node probe's length.
+    """
+    edge_rows = edges.limit(local_edge_threshold + 1).collect()
+    if len(edge_rows) > local_edge_threshold:
+        return None
+    node_rows = nodes.limit(_LOCAL_NODE_CAP + 1).collect()
+    if len(node_rows) > _LOCAL_NODE_CAP:
+        return None
+    return edge_rows, [r["node"] for r in node_rows]
+
+
+def _score_frame(nodes: DataFrame, scores: dict, col: str) -> DataFrame:
+    """(node, ``col``) from a driver-side score dict, node ids typed as
+    ``nodes.node``."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    edge_rows = [(r["src"], r["dst"], r["weight"]) for r in edge_rows_in]
-    # bounded: callers gate on BOTH the local_edge_threshold edge probe
-    # and n <= _LOCAL_NODE_CAP (isolated nodes are not bounded by edges)
-    node_list = [r["node"] for r in nodes.collect()]
-    out_w: dict = defaultdict(int)
-    for s, _, w in edge_rows:
-        out_w[s] += w
-    p = [(s, d, w / out_w[s]) for s, d, w in edge_rows]
-    r = {x: 1.0 / n for x in node_list}
-    for _ in range(iterations):
-        contrib: dict = defaultdict(int)
-        for s, d, pv in p:
-            if s in r:
-                contrib[d] += int(math.floor(r[s] * pv * scale + 0.5))
-        r = {
-            x: math.floor((base + damping * (contrib[x] / scale)) * scale + 0.5) / scale
-            if x in contrib
-            else math.floor((base + damping * 0.0) * scale + 0.5) / scale
-            for x in node_list
-        }
-    id_type = nodes.schema["node"].dataType
-    return nodes.sparkSession.createDataFrame(
-        sorted(r.items()),
-        StructType([StructField("node", id_type), StructField("r", DoubleType())]),
+    schema = StructType(
+        [StructField("node", nodes.schema["node"].dataType), StructField(col, DoubleType())]
     )
+    return local_frame(nodes.sparkSession, sorted(scores.items()), schema)
 
 
 def _local_components(nodes: DataFrame, sym: DataFrame, node_col: str) -> DataFrame:
@@ -237,8 +222,8 @@ def _local_components(nodes: DataFrame, sym: DataFrame, node_col: str) -> DataFr
     on a 714k-edge graph): only the a < b half of the symmetrized edge
     list ships (union(a,b) == union(b,a); a == b self-loops are no-ops),
     it ships as ONE Arrow batch set instead of 1.4M py4j Row objects
-    (5 s -> sub-second), and the label frame returns through Arrow the
-    same way."""
+    (5 s -> sub-second), and the label frame returns as Arrow columns
+    through ``local_frame``."""
     parent: dict = {}
 
     def find(x):
@@ -250,16 +235,10 @@ def _local_components(nodes: DataFrame, sym: DataFrame, node_col: str) -> DataFr
             parent[c] = x
         return x
 
-    half = sym.filter(F.col("a") < F.col("b"))
-    try:
-        # bounded: caller's local_edge_threshold probe caps this at the
-        # threshold's half-edge volume (Arrow batches, tens of MB max)
-        pdf = half.toPandas()
-        a_col, b_col = pdf["a"].tolist(), pdf["b"].tolist()
-    except Exception:  # non-Arrow-convertible id types: row path
-        rows = half.collect()
-        a_col = [r["a"] for r in rows]
-        b_col = [r["b"] for r in rows]
+    # bounded: caller's local_edge_threshold probe caps this at the
+    # threshold's half-edge volume (Arrow batches, tens of MB max)
+    pdf = sym.filter(F.col("a") < F.col("b")).toPandas()
+    a_col, b_col = pdf["a"].tolist(), pdf["b"].tolist()
     seen = set(a_col)
     seen.update(b_col)
     for a, b in zip(a_col, b_col):
@@ -272,16 +251,8 @@ def _local_components(nodes: DataFrame, sym: DataFrame, node_col: str) -> DataFr
     from pyspark.sql.types import StructField, StructType
 
     id_type = sym.schema["a"].dataType
-    labeled = sorted((x, find(x)) for x in seen)
     schema = StructType([StructField("node", id_type), StructField("comp", id_type)])
-    try:
-        import pandas as pd
-
-        label_df = sym.sparkSession.createDataFrame(
-            pd.DataFrame(labeled, columns=["node", "comp"]), schema
-        )
-    except Exception:
-        label_df = sym.sparkSession.createDataFrame(labeled, schema)
+    label_df = local_frame(sym.sparkSession, sorted((x, find(x)) for x in seen), schema)
     return nodes.select(F.col(node_col).alias("node")).join(label_df, "node", "left").select(
         F.col("node"), F.coalesce(F.col("comp"), F.col("node")).alias("comp")
     )
@@ -321,11 +292,13 @@ def pagerank(
     cadence as connected_components; at a handful of iterations plan
     growth is harmless. Dangling-node mass (nodes with no out-edges) is
     dropped rather than redistributed — documented deviation, fine for
-    relative ranking. ``nodes.count()`` is one scalar action (the N in
-    the teleport term — a parameter, not data)."""
+    relative ranking. The N of the teleport term is a parameter, not
+    data: the node probe's length on the local path, one scalar
+    ``nodes.count()`` on the distributed path."""
+    import math
+    from collections import defaultdict
+
     scale = float(10**quant)
-    n = nodes.count()
-    base = (1.0 - damping) / n
 
     # Adaptive execution, same rationale as connected_components: ranks
     # and transitions are graph-sized, not corpus-sized. When the
@@ -335,12 +308,32 @@ def pagerank(
     # sums — Python and the JVM agree bit-for-bit) skips all
     # per-iteration job scheduling. Above the threshold the distributed
     # loop runs — the only option for web-scale graphs.
-    # one-pass probe: collect up to threshold+1 edges; a small graph pays
-    # for its edge build exactly once (no separate count action)
-    probe = edges.limit(local_edge_threshold + 1).collect()
-    if len(probe) <= local_edge_threshold and n <= _LOCAL_NODE_CAP:
-        return _local_pagerank(nodes, probe, iterations, damping, scale, n, base)
+    local = _local_graph(nodes, edges, local_edge_threshold)
+    if local is not None:
+        rows, node_list = local
+        edge_rows = [(r["src"], r["dst"], r["weight"]) for r in rows]
+        n = len(node_list)
+        base = (1.0 - damping) / n
+        out_w: dict = defaultdict(int)
+        for s, _, w in edge_rows:
+            out_w[s] += w
+        p = [(s, d, w / out_w[s]) for s, d, w in edge_rows]
+        r = {x: 1.0 / n for x in node_list}
+        for _ in range(iterations):
+            contrib: dict = defaultdict(int)
+            for s, d, pv in p:
+                if s in r:
+                    contrib[d] += int(math.floor(r[s] * pv * scale + 0.5))
+            r = {
+                x: math.floor((base + damping * (contrib[x] / scale)) * scale + 0.5) / scale
+                if x in contrib
+                else math.floor((base + damping * 0.0) * scale + 0.5) / scale
+                for x in node_list
+            }
+        return _score_frame(nodes, r, "r")
 
+    n = nodes.count()
+    base = (1.0 - damping) / n
     # persist the transition matrix: every iteration references it, and
     # without the persist the (possibly expensive) edge-build lineage is
     # embedded — and recomputed — once per iteration in the final plan
@@ -404,22 +397,13 @@ def personalized_pagerank(
     import math
     from collections import defaultdict
 
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     scale = float(10**quant)
     sset = set(seeds)
     e_w = 1.0 / len(sset)
-    probe = edges.limit(local_edge_threshold + 1).collect()
-    # bounded: node probe capped at _LOCAL_NODE_CAP + 1 rows; an
-    # over-cap node set falls through to the distributed loop
-    nprobe = (
-        nodes.limit(_LOCAL_NODE_CAP + 1).collect()
-        if len(probe) <= local_edge_threshold
-        else None
-    )
-    if nprobe is not None and len(nprobe) <= _LOCAL_NODE_CAP:
-        edge_rows = [(r["src"], r["dst"], r["weight"]) for r in probe]
-        node_list = [r["node"] for r in nprobe]
+    local = _local_graph(nodes, edges, local_edge_threshold)
+    if local is not None:
+        rows, node_list = local
+        edge_rows = [(r["src"], r["dst"], r["weight"]) for r in rows]
         out_w: dict = defaultdict(int)
         for s, _, w in edge_rows:
             out_w[s] += w
@@ -442,11 +426,7 @@ def personalized_pagerank(
                 / scale
                 for x in node_list
             }
-        id_type = nodes.schema["node"].dataType
-        return nodes.sparkSession.createDataFrame(
-            sorted(r.items()),
-            StructType([StructField("node", id_type), StructField("r", DoubleType())]),
-        )
+        return _score_frame(nodes, r, "r")
 
     outsum = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
     p_df = (
@@ -627,20 +607,11 @@ def katz_centrality(
     import math
     from collections import defaultdict
 
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     scale = float(10**quant)
-    probe = edges.limit(local_edge_threshold + 1).collect()
-    # bounded: node probe capped at _LOCAL_NODE_CAP + 1 rows; over-cap
-    # node sets take the distributed loop
-    nprobe = (
-        nodes.limit(_LOCAL_NODE_CAP + 1).collect()
-        if len(probe) <= local_edge_threshold
-        else None
-    )
-    if nprobe is not None and len(nprobe) <= _LOCAL_NODE_CAP:
-        edge_rows = [(r["src"], r["dst"]) for r in probe]
-        node_list = [r["node"] for r in nprobe]
+    local = _local_graph(nodes, edges, local_edge_threshold)
+    if local is not None:
+        rows, node_list = local
+        edge_rows = [(r["src"], r["dst"]) for r in rows]
         x = {v: 1.0 for v in node_list}
         for _ in range(iterations):
             acc: dict = defaultdict(int)
@@ -651,11 +622,7 @@ def katz_centrality(
                 v: math.floor((1.0 + alpha * (acc.get(v, 0) / scale)) * scale + 0.5) / scale
                 for v in node_list
             }
-        id_type = nodes.schema["node"].dataType
-        return nodes.sparkSession.createDataFrame(
-            sorted(x.items()),
-            StructType([StructField("node", id_type), StructField("katz", DoubleType())]),
-        )
+        return _score_frame(nodes, x, "katz")
 
     e = edges.select("src", "dst").persist()
     x_df = nodes.select("node", F.lit(1.0).alias("katz"))

@@ -18,6 +18,7 @@ from fraud_detection_etl_project_spark.functions.text import tokens
 from fraud_detection_etl_project_spark.plans.llm_queries import TOKS_SQL
 from fraud_detection_etl_project_spark.plans.registry import query
 from fraud_detection_etl_project_spark.plans.staging import _fixture_tag, root
+from fraud_detection_etl_project_spark.sources.local import local_frame
 from fraud_detection_etl_project_spark.sources.parquet import load_table
 
 
@@ -2482,7 +2483,8 @@ def copurchase_linkpred_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     recall_q = math.floor(n_hits / n_test * 1e6 + 0.5) / 1e6 if n_test else 0.0
     precision_q = math.floor(n_hits / n_pred * 1e6 + 0.5) / 1e6 if n_pred else 0.0
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_train, n_test, n_pred, n_hits, recall_q, precision_q)],
         "n_train bigint, n_test bigint, n_predictions bigint, n_hits bigint, "
         "recall_q double, precision_q double",

@@ -25,6 +25,7 @@ from fraud_detection_etl_project_spark.plans.advanced_queries import (
     _copurchase_edges,
 )
 from fraud_detection_etl_project_spark.plans.registry import query
+from fraud_detection_etl_project_spark.sources.local import local_frame
 from fraud_detection_etl_project_spark.sources.parquet import load_table
 
 
@@ -1470,7 +1471,8 @@ def mmr_diversified_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
                 best = (key, v, score)
         chosen.append(best[1])
         selected.append((rank, best[1], best[2]))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r, v, s / 10_000.0) for r, v, s in selected],
         schema="rank int, vec_id bigint, mmr_score double",
     )
@@ -3514,8 +3516,9 @@ def purchase_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("v_q"),
     )
-    cp = spark.createDataFrame(_shap_pairs(), "ch int, m0 int, m1 int, w int")
-    nm = spark.createDataFrame(
+    cp = local_frame(spark, _shap_pairs(), "ch int, m0 int, m1 int, w int")
+    nm = local_frame(
+        spark,
         [(c, i) for i, c in enumerate(_SHAP_CHANNELS)], "channel string, ch int"
     )
     g0 = g.select(F.col("mask").alias("m0"), F.col("v_q").alias("v0"))

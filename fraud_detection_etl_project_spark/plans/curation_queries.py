@@ -13,6 +13,7 @@ from fraud_detection_etl_project_spark.functions import text as T
 from fraud_detection_etl_project_spark.functions.rounding import fxr
 from fraud_detection_etl_project_spark.plans.llm_queries import NORM_SQL, TOKS_SQL
 from fraud_detection_etl_project_spark.plans.registry import query
+from fraud_detection_etl_project_spark.sources.local import local_frame
 from fraud_detection_etl_project_spark.sources.parquet import load_table
 
 WINNOW_W = 4  # window size over the k-gram hash sequence
@@ -783,7 +784,7 @@ def doc_shard_assignment_consistent(spark: SparkSession, sf_dir: str) -> DataFra
     deterministically on both engines.
     """
     spark_ring = [(s, v) for s in range(_CH_SHARDS) for v in range(_CH_VNODES)]
-    ring = spark.createDataFrame(spark_ring, "shard int, vn int").select(
+    ring = local_frame(spark, spark_ring, "shard int, vn int").select(
         "shard",
         (
             F.conv(

@@ -21,6 +21,7 @@ from fraud_detection_etl_project_spark.plans.registry import query
 from fraud_detection_etl_project_spark.plans.relational_queries import REFERENCE_SAMPLE_CSV
 from fraud_detection_etl_project_spark.plans.staging import staged
 from fraud_detection_etl_project_spark.sources.csv import read_transactions
+from fraud_detection_etl_project_spark.sources.local import local_frame
 from fraud_detection_etl_project_spark.sources.parquet import load_table
 from fraud_detection_etl_project_spark.streaming import drain
 from fraud_detection_etl_project_spark.streaming.stateful import user_running_profile
@@ -1574,7 +1575,7 @@ def nullsafe_tier_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("tier"),
         "value",
     )
-    dim = spark.createDataFrame([("high", 3.0), ("mid", 2.0), (None, 1.0)], "tier string, w double")
+    dim = local_frame(spark, [("high", 3.0), ("mid", 2.0), (None, 1.0)], "tier string, w double")
     return (
         e.join(F.broadcast(dim), e["tier"].eqNullSafe(dim["tier"]))
         .groupBy(e["tier"].alias("tier"))
@@ -2157,7 +2158,8 @@ def embedding_kmeans_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         cents = recompute(assigned)
     # report the LAST assignment's cell sizes with the centroids
     # recomputed FROM it (a2 + cent2 in the oracle's unrolled chain)
-    cent_df = spark.createDataFrame(
+    cent_df = local_frame(
+        spark,
         [(c, v[0], v[1]) for c, v in cents], "cell int, d0 double, d1 double"
     )
     return (
@@ -3257,9 +3259,7 @@ def snapshot_incremental_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFra
     cents = S.ivf_centroids(corpus_v1)  # k x d parameter collect (bounded)
     new = snap.read_changes(spark, t, from_version=1).select("vec_id", "embedding")
     assigned = S.ivf_assign(new, cents)
-    cent_df = spark.createDataFrame(
-        [(cid, c) for cid, c in cents], "cell int, _c array<double>"
-    )
+    cent_df = local_frame(spark, [(cid, c) for cid, c in cents], "cell int, _c array<double>")
     return (
         assigned.join(F.broadcast(cent_df), "cell")
         .select(
@@ -3358,7 +3358,7 @@ def snapshot_incremental_centroid_update(spark: SparkSession, sf_dir: str) -> Da
         (cid, [int(_math.floor(_MB_Q * float(x) + 0.5)) for x in c])
         for cid, c in cents
     ]
-    cq = spark.createDataFrame(cq_rows, "cell int, cq array<long>")
+    cq = local_frame(spark, cq_rows, "cell int, cq array<long>")
     upd = (
         bsum.join(F.broadcast(ncnt), "cell", "left")
         .na.fill({"n_corpus": 0})

@@ -29,6 +29,7 @@ from fraud_detection_etl_project_spark.functions.vectors import cosine
 from fraud_detection_etl_project_spark.operators import similarity as S
 from fraud_detection_etl_project_spark.plans.registry import query
 from fraud_detection_etl_project_spark.plans.staging import _fixture_tag, root, staged
+from fraud_detection_etl_project_spark.sources.local import local_frame
 from fraud_detection_etl_project_spark.sources.parquet import load_table
 
 
@@ -992,10 +993,17 @@ def partitioned_dpp_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).parquet(path)
 
+    def build_dim(path: str) -> None:
+        rows = [("O", "open"), ("F", "finished"), ("P", "pending")]
+        local_frame(spark, rows, "st string, label string").write.parquet(path, mode="overwrite")
+
     fact = spark.read.parquet(staged(sf_dir, "orders_part", ("orders",), build))
-    dim = spark.createDataFrame(
-        [("O", "open"), ("F", "finished"), ("P", "pending")], "st string, label string"
-    ).filter(F.col("label") == "finished")
+    # The dim is a stored table, as in a warehouse. Over a driver-built
+    # LocalRelation the optimizer folds the filter into the relation, and
+    # with no Filter left on the dim side Catalyst plants no DPP subquery.
+    dim = spark.read.parquet(staged(sf_dir, "orderstatus_dim", (), build_dim)).filter(
+        F.col("label") == "finished"
+    )
     return (
         fact.join(F.broadcast(dim), fact.o_orderstatus == dim.st)
         .groupBy(F.col("o_orderstatus"))
@@ -4500,7 +4508,8 @@ def fellegi_sunter_em_params(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(r["g1"]), int(r["g2"]), int(r["g3"])): int(r["n_k"]) for r in cnt.collect()
     }
     p, m, u, n_total = _em_py(counts)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_total, p, m[0], m[1], m[2], u[0], u[1], u[2])],
         "n_pairs bigint, em_p double, m1 double, m2 double, m3 double, "
         "u1 double, u2 double, u3 double",

@@ -35,6 +35,7 @@ from fraud_detection_etl_project_spark.plans.advanced_queries import (
 from fraud_detection_etl_project_spark.plans.llm_queries import TOKS_SQL
 from fraud_detection_etl_project_spark.plans.registry import query
 from fraud_detection_etl_project_spark.plans.staging import staged
+from fraud_detection_etl_project_spark.sources.local import local_frame
 from fraud_detection_etl_project_spark.sources.parquet import load_table
 
 
@@ -1592,7 +1593,8 @@ def perceptron_purchase_model(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(final_margin > 0, 1)).cast("bigint").alias("n_correct"),
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
     )
-    row = spark.createDataFrame(
+    row = local_frame(
+        spark,
         [tuple(w2) + (miss1, miss2)],
         "w0 bigint, w1 bigint, w2 bigint, w3 bigint, miss_epoch1 bigint, miss_epoch2 bigint",
     )
@@ -2662,7 +2664,8 @@ def kcenter_greedy_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     known lower bound for exact greedy (approximate variants subsample
     candidates per round with the same plumbing)."""
     q, centers = _kc_select(spark, sf_dir)
-    cent = spark.createDataFrame(
+    cent = local_frame(
+        spark,
         [(cid, rr, cv) for cid, rr, cv in centers],
         "cid bigint, sel_round bigint, cv array<bigint>",
     )
@@ -2930,7 +2933,7 @@ def kmeans_lloyd_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for cid in sorted(codebook)
     ]
-    shifts = spark.createDataFrame(shift_rows, "cluster_id bigint, shift_sq bigint")
+    shifts = local_frame(spark, shift_rows, "cluster_id bigint, shift_sq bigint")
     return (
         stats.withColumnRenamed("cid", "cluster_id")
         .join(F.broadcast(shifts), "cluster_id")
@@ -3305,7 +3308,7 @@ def kmeans_parallel_oversample(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("vec_id", F.col("d2").cast("bigint").alias("sq_dist"))
     )
-    seed_row = spark.createDataFrame([(int(seed["vec_id"]), 0)], "vec_id bigint, sq_dist bigint")
+    seed_row = local_frame(spark, [(int(seed["vec_id"]), 0)], "vec_id bigint, sq_dist bigint")
     return sel.unionAll(seed_row)
 
 
@@ -3383,7 +3386,7 @@ def _kth_smallest_histogram(resid: DataFrame, val_col: str, tie_col: str) -> Dat
     if n == 0:
         # empty calibration: no rank exists — an empty qhat frame (the
         # oracle's qhat CTE is empty too, so downstream joins agree)
-        return spark.createDataFrame([], "q bigint")
+        return local_frame(spark, [], "q bigint")
     k = ((n + 1) * 9 + 9) // 10
     lo, hi = int(head["lo"]), int(head["hi"])
     current = resid
@@ -3391,7 +3394,7 @@ def _kth_smallest_histogram(resid: DataFrame, val_col: str, tie_col: str) -> Dat
     # so the range is never exhausted for long-typed values.
     for _level in range(8):
         if lo == hi:
-            return spark.createDataFrame([(lo,)], "q bigint")
+            return local_frame(spark, [(lo,)], "q bigint")
         width = _derive_width(lo, hi)
         hb = (F.col(val_col) / F.lit(width)).cast("long")
         cells = sorted(
@@ -3412,7 +3415,7 @@ def _kth_smallest_histogram(resid: DataFrame, val_col: str, tie_col: str) -> Dat
             k_in = k - before
             if bmin == bmax:
                 # every row in the cell ties: the k-th smallest IS bmin
-                return spark.createDataFrame([(int(bmin),)], "q bigint")
+                return local_frame(spark, [(int(bmin),)], "q bigint")
             in_bucket = current.filter(hb == F.lit(int(h)))
             if k_in <= _CF_TAKE_BOUND:
                 return (
@@ -3910,8 +3913,8 @@ def pq_adc_ann_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
             qsv = qv[s * _PQ_SUB : (s + 1) * _PQ_SUB]
             cents.append((s, c, cv))
             dq.append((s, c, sum((a - b) * (a - b) for a, b in zip(qsv, cv))))
-    cent_df = spark.createDataFrame(cents, "s int, c int, cv array<bigint>")
-    dq_df = spark.createDataFrame(dq, "s int, c int, d bigint")
+    cent_df = local_frame(spark, cents, "s int, c int, cv array<bigint>")
+    dq_df = local_frame(spark, dq, "s int, c int, d bigint")
 
     sub = q.select(
         "vec_id",
@@ -4121,7 +4124,7 @@ def event_isolation_forest_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not level:
             break
         splits.extend(level)
-        sp_df = spark.createDataFrame(level, "tree int, node bigint, dim int, thresh bigint")
+        sp_df = local_frame(spark, level, "tree int, node bigint, dim int, thresh bigint")
         bit = F.when(
             F.when(F.col("dim") == 0, F.col("f0")).otherwise(F.col("f1")) > F.col("thresh"), 1
         ).otherwise(0)
@@ -4140,7 +4143,7 @@ def event_isolation_forest_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
         cur = nxt
     cur.unpersist()
 
-    allsp = spark.createDataFrame(splits, "tree int, node bigint, dim int, thresh bigint")
+    allsp = local_frame(spark, splits, "tree int, node bigint, dim int, thresh bigint")
     sc = with_tree.withColumn("node", F.lit(1).cast("long")).withColumn(
         "depth", F.lit(0).cast("long")
     )

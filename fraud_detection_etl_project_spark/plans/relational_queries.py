@@ -28,6 +28,7 @@ from fraud_detection_etl_project_spark.pipeline import fraud_predicate, valid_pr
 from fraud_detection_etl_project_spark.functions.rounding import cents_sum, cents_sum_sql, fxr
 from fraud_detection_etl_project_spark.plans.registry import query
 from fraud_detection_etl_project_spark.sources.csv import read_transactions
+from fraud_detection_etl_project_spark.sources.local import local_frame
 from fraud_detection_etl_project_spark.sources.parquet import load_table
 
 # A synthesized stand-in for the reference's 34-row sample upload, not the
@@ -667,7 +668,8 @@ GROUP BY b.band
 def event_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range/band join (§2.3) against a broadcast interval dimension."""
     e = _t(spark, sf_dir, "events").select("value")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("low", 0.0, 50.0), ("mid", 50.0, 150.0), ("high", 150.0, 300.0), ("extreme", 300.0, 1e9)],
         "band string, lo double, hi double",
     )

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from fraud_detection_etl_project_spark.functions.rounding import fxr
 from fraud_detection_etl_project_spark.plans.registry import query
+from fraud_detection_etl_project_spark.sources.local import local_frame
 from fraud_detection_etl_project_spark.sources.parquet import load_table
 
 
@@ -399,7 +400,7 @@ def threshold_sweep_pr_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)).cast("long").alias("score_c"),
         F.when(F.col("event_type") == "error", F.lit(1)).otherwise(F.lit(0)).alias("y"),
     )
-    thr = spark.createDataFrame([(t,) for t in _PR_THRESHOLDS], "t bigint")
+    thr = local_frame(spark, [(t,) for t in _PR_THRESHOLDS], "t bigint")
     agg = (
         scored.crossJoin(F.broadcast(thr))
         .groupBy("t")

@@ -85,6 +85,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .fileio import FileIO, resolve_io
+from .sources.local import local_frame
 
 _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
@@ -511,7 +512,7 @@ _DISTRIBUTED_STATS_MIN = 33
 # files) is sharded from its first commit.
 _INLINE_STATS_MAX = 512
 # surviving-file lists larger than this ship to the shard-prune job as a
-# text side file instead of a driver-serialized createDataFrame
+# text side file instead of a driver-built local_frame
 _CAND_INLINE_MAX = 10_000
 
 
@@ -1546,9 +1547,7 @@ def _pruned_by_shards(
         # whole survivor list through the driver on EVERY planned scan —
         # a driver bottleneck inside the 'metadata-scale Spark job' path).
         if len(candidates) <= _CAND_INLINE_MAX:
-            cand_df = spark.createDataFrame(
-                [(c,) for c in sorted(candidates)], "f string"
-            )
+            cand_df = local_frame(spark, [(c,) for c in sorted(candidates)], "f string")
         else:
             io = resolve_io(table_path)
             tmp_cand = os.path.join(mdir, f"_tmp_cand_{uuid.uuid4().hex}.txt")
@@ -2464,7 +2463,7 @@ def _read_files(
 
     schema = StructType.fromJson(json.loads(schema_json))
     if not paths:  # a legitimately empty version (e.g. DELETE removed all rows)
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     if m is not None and m.get("fields"):
         return _era_read(spark, ddir, files, schema, m)
     return spark.read.schema(schema).parquet(*paths)
@@ -2814,7 +2813,7 @@ def metadata_table(
             r = _read_ref(table_path, name)
             if r is not None:
                 rows.append((name, r[1], r[0]))
-        return spark.createDataFrame(rows, "name string, kind string, version bigint")
+        return local_frame(spark, rows, "name string, kind string, version bigint")
 
     v = current_version(table_path) if version is None else version
     if v is None:
@@ -2845,7 +2844,8 @@ def metadata_table(
                     ver in chain,
                 )
             )
-        df = spark.createDataFrame(
+        df = local_frame(
+            spark,
             rows,
             "version bigint, parent bigint, operation string, n_files bigint, "
             "n_delete_files bigint, n_dv_files bigint, committed_at double, "
@@ -2872,7 +2872,8 @@ def metadata_table(
         )
         for f in m["files"]
     ]
-    files_df = spark.createDataFrame(
+    files_df = local_frame(
+        spark,
         rows, "file string, seq bigint, spec_id string, partition string, record_count bigint"
     )
     shards = m.get("stats_shards", [])

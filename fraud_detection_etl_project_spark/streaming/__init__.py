@@ -18,6 +18,13 @@ def drain(df: DataFrame, output_mode: str) -> DataFrame:
     the caller holds the frame, and no memory table stays registered in
     the session. Spark deletes the query's temporary checkpoint when the
     query stops.
+
+    On a ``get_spark`` local session the checkpoint is written through
+    Spark's ``FileSystemBasedCheckpointFileManager`` (see
+    ``session.get_spark``), whose rename forks nothing. A
+    ``stream_velocity_alerts`` drain at sf0.1 still forks ~40 ``chmod``
+    processes, one per local file create or mkdir (Hadoop without
+    ``libhadoop``); under the ``FileContext`` default it forked 152.
     """
     spark = df.sparkSession
     name = f"drain_{uuid.uuid4().hex}"

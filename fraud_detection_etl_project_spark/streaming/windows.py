@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from fraud_detection_etl_project_spark.functions.rounding import fxr
 from fraud_detection_etl_project_spark.schemas import EVENTS_SCHEMA
+from fraud_detection_etl_project_spark.sources.local import local_frame
 from fraud_detection_etl_project_spark.sources.parquet import pin_session_confs
 from fraud_detection_etl_project_spark.streaming import drain
 
@@ -242,7 +243,8 @@ def stream_static_enriched_rollup(spark: SparkSession, sf_dir: str) -> DataFrame
     adds zero shuffle to the stream — the standard way to attach
     reference data to a 100 TB/day stream. Complete mode.
     """
-    weights = spark.createDataFrame(
+    weights = local_frame(
+        spark,
         [("view", 1.0), ("click", 2.0), ("signup", 5.0), ("purchase", 10.0), ("error", 0.0)],
         "event_type string, weight double",
     )

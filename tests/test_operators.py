@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from fraud_detection_etl_project_spark.operators.dedup import (
@@ -229,6 +230,45 @@ def test_personalized_pagerank_paths_and_semantics(spark):
         for row in personalized_pagerank(nodes, edges, seeds=[4, 5], iterations=4).collect()
     }
     assert r2[4] > 0 and r2[5] > 0 and r2[0] == 0.0
+
+
+def test_local_graph_paths_run_no_count(spark, monkeypatch):
+    """On a small graph pagerank, personalized_pagerank and
+    katz_centrality take one bounded probe per side and no ``count``:
+    with ``DataFrame.count`` raising they still return the ranks the
+    distributed path returns unpatched."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from fraud_detection_etl_project_spark.operators.graph import (
+        katz_centrality,
+        pagerank,
+        personalized_pagerank,
+    )
+
+    # a weighted digraph with a dangling node (3) and an isolated one (6)
+    nodes = spark.createDataFrame([(i,) for i in range(7)], "node long")
+    edges = spark.createDataFrame(
+        [(0, 1, 2), (1, 2, 1), (2, 0, 3), (2, 3, 1), (4, 0, 5), (5, 4, 1), (0, 5, 1)],
+        "src long, dst long, weight long",
+    )
+    ops = {
+        "pagerank": lambda **kw: pagerank(nodes, edges, iterations=4, **kw),
+        "ppr": lambda **kw: personalized_pagerank(nodes, edges, [0, 4], iterations=4, **kw),
+        "katz": lambda **kw: katz_centrality(nodes, edges, iterations=3, **kw),
+    }
+
+    def ranks(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    dist = {k: ranks(op(local_edge_threshold=0)) for k, op in ops.items()}
+
+    def no_count(self):
+        raise AssertionError("count() on the local graph path")
+
+    monkeypatch.setattr(ClassicDataFrame, "count", no_count)
+    with pytest.raises(AssertionError):
+        nodes.count()
+    assert {k: ranks(op()) for k, op in ops.items()} == dist
 
 
 def test_asof_join_forward(spark):

@@ -355,3 +355,18 @@ def test_rocksdb_provider_actively_serves_state_with_metrics(spark):
         assert spark.table(name).count() > 0
     finally:
         use_default_state(spark)
+
+
+def test_local_session_checkpoints_through_filesystem_manager(spark, tmp_path):
+    """A local ``get_spark`` session writes streaming checkpoints through
+    Spark's FileSystem-based manager, whose rename forks no ``readlink``
+    (the FileContext default forks one per link-status lookup)."""
+    jvm = spark.sparkContext._jvm
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(tmp_path.as_uri()),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert mgr.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
